@@ -7,10 +7,12 @@ Mirrors the reference's write path behaviorally (analysis in
 ``index/TieredMergePolicyProvider.java``) but is architected for Spark:
 
 - one declarative DataFrame plan: analyze + per-doc tf (ONE Arrow UDF pass,
-  map-side combine inside the tokenizer) → narrow explode → (term, bucket)
-  repartition + sorted batch block encode (mapInPandas) → partitioned
-  parquet write; the only wide shuffles are the postings repartition and
-  the dictionary agg;
+  map-side combine inside the tokenizer) → per-task packed (term, bucket)
+  posting segments → (term, bucket) shuffle of the packed rows → merge +
+  re-block (mapInPandas) → partitioned parquet write; the only wide
+  shuffles are the packed-segment repartition and the dictionary agg.
+  ``merge_segments`` feeds the same encoder from flat segment rows and
+  writes through the same table and meta writers;
 - **skew by construction**: blocks are built per (term, doc-bucket) group, so
   a hot term ('import', 'def' class — present in >60% of docs) is spread
   across ~n_docs/bucket_span independent groups instead of one giant reducer
@@ -43,6 +45,7 @@ BLOCK_SCHEMA = (
     "n int, max_tf int, max_impact double, docs_vb binary, tfs_vb binary, "
     "dls_vb binary"
 )
+BLOCK_COLS = [c.split()[0] for c in BLOCK_SCHEMA.split(", ")]
 
 
 @dataclass(frozen=True)
@@ -224,161 +227,74 @@ def assign_doc_ids(df: DataFrame, order_cols: list[str], n_parts: int = 32,
     return out
 
 
-def _block_encode_map_fn(k1: float, b: float, avgdl: float):
-    """Batch-path block encoder: ``mapInPandas`` over partitions that are
-    hash-partitioned AND sorted by (term, bucket, doc_id).
-
-    Why not ``groupBy().applyInPandas``: with 10^7-10^9 tiny (term, bucket)
-    groups the per-group pandas overhead (~0.5 ms) dominates wall-clock and
-    AQE coalesces the shuffle below the cluster's parallelism (measured 3×
-    slower at local[32]). Here group boundaries are numpy slices inside each
-    ~10k-row Arrow batch and one output DataFrame is built per batch, not
-    per group; groups spanning batch boundaries are stitched via carry-over
-    (bounded by bucket_span rows)."""
-    import numpy as np
-
-    from opensearch_spark.index.codec import make_blocks_batch
-
-    cols = ["term", "bucket", "block_seq", "first_doc", "last_doc",
-            "n", "max_tf", "max_impact", "docs_vb", "tfs_vb", "dls_vb"]
-
-    def encode_range(pdf: pd.DataFrame, lo: int, hi: int,
-                     starts: np.ndarray) -> pd.DataFrame | None:
-        """Encode rows [lo, hi) of the batch; ``starts`` are group starts
-        within that range (absolute indices, starts[0] == lo)."""
-        if hi <= lo:
-            return None
-        tfs = pdf["tf"].to_numpy()[lo:hi]
-        dls = pdf["dl"].to_numpy()[lo:hi]
-        tf64 = tfs.astype("float64")
-        impact = tf64 / (tf64 + k1 * (1.0 - b + b * dls.astype("float64") / avgdl))
-        rows = make_blocks_batch(
-            pdf["term"].to_numpy()[lo:hi],
-            pdf["bucket"].to_numpy()[lo:hi],
-            pdf["doc_id"].to_numpy()[lo:hi],
-            tfs, impact, dls, starts - lo,
-        )
-        return pd.DataFrame(rows, columns=cols) if rows else None
-
-    def run(batches):
-        pend: pd.DataFrame | None = None
-        for pdf in batches:
-            if pend is not None:
-                pdf = pd.concat([pend, pdf], ignore_index=True)
-                pend = None
-            if not len(pdf):
-                continue
-            t = pdf["term"].to_numpy()
-            bk = pdf["bucket"].to_numpy()
-            change = np.flatnonzero((t[1:] != t[:-1]) | (bk[1:] != bk[:-1])) + 1
-            starts = np.concatenate(([0], change))
-            # hold the last (possibly batch-spanning) group back for stitching
-            last_start = int(starts[-1])
-            out = encode_range(pdf, 0, last_start, starts[:-1])
-            pend = pdf.iloc[last_start:].reset_index(drop=True)
-            if out is not None:
-                yield out
-        if pend is not None and len(pend):
-            out = encode_range(pend, 0, len(pend), np.zeros(1, dtype=np.int64))
-            if out is not None:
-                yield out
-
-    return run
-
-
-def encode_blocks(df: DataFrame, k1: float, b: float, avgdl: float,
-                  n_shuffle: int) -> DataFrame:
-    """(term, doc_id, tf, dl, bucket) rows → encoded block rows.
-
-    Explicit-numPartitions repartition so AQE cannot coalesce below the
-    cluster's parallelism (the python encode cost per row is invisible to
-    AQE's byte-based sizing); local sort, then the batch encoder above.
-
-    NOTE: this is the row-per-posting path, kept as the reference
-    implementation; the build uses the segment-merge path below, whose
-    shuffle moves packed per-partition segments instead of 45M+ Arrow
-    rows (measured: the row shuffle ITSELF — even with a no-op Python
-    stage — cost 9.3 s at 16 cores on 600k docs; the varbyte work was
-    free by comparison)."""
-    return (
-        df.repartition(n_shuffle, "term", "bucket")
-        .sortWithinPartitions("term", "bucket", "doc_id")
-        .mapInPandas(_block_encode_map_fn(k1, b, avgdl), BLOCK_SCHEMA)
-    )
-
-
 # ---------------------------------------------------------------------------
-# segment-merge build path: per-partition packed posting segments → shuffle
-# → merge-sort into global blocks. This is the reference's own shape (Lucene
-# per-segment postings + tiered merge, InternalEngine.java:1107-1186) and
-# the north-star build description; it replaces the row-per-posting shuffle
-# (the measured bottleneck) with a binary-packed one ~10× smaller.
+# segment-merge encode: per-task packed posting segments → (term, bucket)
+# shuffle → merge-sort into global blocks. This is the reference's own shape
+# (Lucene per-segment postings + tiered merge, InternalEngine.java:1107-1186)
+# and the one postings encoder of both build_index and merge_segments. The
+# shuffle moves packed binaries ~10× smaller than one Arrow row per posting
+# (measured: the row shuffle ITSELF — even with a no-op Python stage — cost
+# 9.3 s at 16 cores on 600k docs; the varbyte work was free by comparison).
 # ---------------------------------------------------------------------------
 SEG_SCHEMA = ("term string, bucket long, n int, first_doc long, "
               "docs_vb binary, tfs_vb binary, dls_vb binary")
 
 
-def _partial_segments_map_fn(bucket_span: int):
-    """Map side: one task's docs → one packed segment row per (term,
-    bucket) present in the task. All grouping is numpy (factorize +
-    lexsort); the per-posting explode never reaches Arrow."""
+def _per_doc_arrays(pdf: pd.DataFrame):
+    """(doc_id, dl, terms[], tfs[]) rows → flat (term, doc_id, tf, dl)
+    arrays; the per-posting explode never reaches Arrow."""
     import numpy as np
 
-    from opensearch_spark.index.codec import varbyte_encode_offsets
+    counts = np.fromiter((len(x) for x in pdf["terms"]),
+                         dtype=np.int64, count=len(pdf))
+    if counts.sum() == 0:
+        return None
+    return (
+        np.concatenate(
+            [np.asarray(x, dtype=object) for x in pdf["terms"] if len(x)]),
+        np.repeat(pdf["doc_id"].to_numpy(), counts),
+        np.concatenate(
+            [np.asarray(x, dtype=np.int64) for x in pdf["tfs"] if len(x)]),
+        np.repeat(pdf["dl"].to_numpy(), counts),
+    )
+
+
+def _flat_row_arrays(pdf: pd.DataFrame):
+    """Flat (term, doc_id, tf, dl) rows → the same arrays."""
+    return (pdf["term"].to_numpy(), pdf["doc_id"].to_numpy(),
+            pdf["tf"].to_numpy(), pdf["dl"].to_numpy())
+
+
+def _partial_segments_map_fn(bucket_span: int, arrays):
+    """Map side: one task's postings → one packed segment row per (term,
+    bucket) present in the task. ``arrays`` turns an input batch into
+    flat (term, doc_id, tf, dl) arrays; all grouping is numpy (factorize
+    + lexsort), and a segment is packed as one uncapped block."""
+    import numpy as np
+
+    from opensearch_spark.index.codec import make_blocks_batch
 
     cols = ["term", "bucket", "n", "first_doc", "docs_vb", "tfs_vb", "dls_vb"]
 
     def run(batches):
-        tparts, dparts, fparts, lparts = [], [], [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            counts = np.fromiter((len(x) for x in pdf["terms"]),
-                                 dtype=np.int64, count=len(pdf))
-            if counts.sum() == 0:
-                continue
-            tparts.append(np.concatenate(
-                [np.asarray(x, dtype=object) for x in pdf["terms"] if len(x)]))
-            fparts.append(np.concatenate(
-                [np.asarray(x, dtype=np.int64) for x in pdf["tfs"] if len(x)]))
-            dparts.append(np.repeat(pdf["doc_id"].to_numpy(), counts))
-            lparts.append(np.repeat(pdf["dl"].to_numpy(), counts))
-        if not tparts:
+        parts = [arrays(pdf) for pdf in batches if len(pdf)]
+        parts = [p for p in parts if p is not None]
+        if not parts:
             return
-        import pandas as pd
-
-        terms = np.concatenate(tparts)
-        docs = np.concatenate(dparts)
-        tfs = np.concatenate(fparts)
-        dls = np.concatenate(lparts)
+        terms, docs, tfs, dls = (np.concatenate(c) for c in zip(*parts))
         codes, uniq = pd.factorize(terms)
         buckets = docs // bucket_span
         order = np.lexsort((docs, buckets, codes))
         codes, buckets, docs, tfs, dls = (
             codes[order], buckets[order], docs[order], tfs[order], dls[order])
-        change = np.flatnonzero(
-            (codes[1:] != codes[:-1]) | (buckets[1:] != buckets[:-1])) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [docs.size]))
-        # whole-batch varbyte: doc gaps (first of each segment elided),
-        # tfs, dls — then per-segment buffer slices
-        gaps = np.empty(docs.size, dtype=np.uint64)
-        gaps[0] = 0
-        gaps[1:] = (docs[1:] - docs[:-1]).astype(np.uint64)
-        gaps[starts] = 0
-        gbuf, goff = varbyte_encode_offsets(gaps)
-        tbuf, toff = varbyte_encode_offsets(tfs.astype(np.uint64))
-        lbuf, loff = varbyte_encode_offsets(dls.astype(np.uint64))
-        rows = []
-        for i in range(starts.size):
-            s, e = int(starts[i]), int(ends[i])
-            rows.append((
-                uniq[codes[s]], int(buckets[s]), e - s, int(docs[s]),
-                gbuf[goff[s + 1]:goff[e]].tobytes(),
-                tbuf[toff[s]:toff[e]].tobytes(),
-                lbuf[loff[s]:loff[e]].tobytes(),
-            ))
-        yield pd.DataFrame(rows, columns=cols)
+        starts = np.flatnonzero(np.concatenate(
+            ([True], (codes[1:] != codes[:-1]) | (buckets[1:] != buckets[:-1]))))
+        out = pd.DataFrame(
+            make_blocks_batch(codes, buckets, docs, tfs, np.zeros(docs.size),
+                              dls, starts, block_size=docs.size),
+            columns=BLOCK_COLS)
+        out["term"] = uniq[out["term"].to_numpy()]
+        yield out[cols]
 
     return run
 
@@ -386,75 +302,38 @@ def _partial_segments_map_fn(bucket_span: int):
 def _merge_segments_map_fn(k1: float, b: float, avgdl: float):
     """Reduce side: segment rows hash-partitioned AND sorted by (term,
     bucket, first_doc) → final ≤128-posting block rows. Segments of a
-    group are batch-decoded (one concatenated varbyte stream per column),
-    merged with a vectorized segmented cumsum + lexsort, and re-blocked
-    via ``make_blocks_batch``. Groups spanning Arrow batches are stitched
-    with a carry, like the row-path encoder."""
+    group are batch-decoded with ``decode_blocks``, merged with a lexsort
+    and re-blocked via ``make_blocks_batch``. Groups spanning Arrow
+    batches are stitched with a carry."""
     import numpy as np
 
-    from opensearch_spark.index.codec import make_blocks_batch, varbyte_decode
-
-    cols = ["term", "bucket", "block_seq", "first_doc", "last_doc",
-            "n", "max_tf", "max_impact", "docs_vb", "tfs_vb", "dls_vb"]
+    from opensearch_spark.index.codec import decode_blocks, make_blocks_batch
 
     def encode_frame(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        import numpy as np
-
-        ns = pdf["n"].to_numpy().astype(np.int64)
-        total = int(ns.sum())
-        if total == 0:
+        seg, docs, tfs, dls = decode_blocks(
+            pdf["first_doc"].to_numpy(), pdf["n"].to_numpy(),
+            pdf["docs_vb"], pdf["tfs_vb"], pdf["dls_vb"])
+        if not docs.size:
             return None
-        firsts = pdf["first_doc"].to_numpy().astype(np.int64)
-        # batch-decode: values are self-terminating, so concatenated
-        # buffers decode to concatenated streams
-        gaps = varbyte_decode(b"".join(pdf["docs_vb"])).astype(np.int64)
-        tfs = varbyte_decode(b"".join(pdf["tfs_vb"])).astype(np.int64)
-        dls = varbyte_decode(b"".join(pdf["dls_vb"])).astype(np.int64)
-        # reconstruct docs with ONE cumsum: at each segment start place
-        # first_doc_i - last_doc_{i-1} (last_doc is directly computable
-        # as first + Σgaps, no recursion)
-        seg_starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
-        vals = np.empty(total, dtype=np.int64)
-        mask = np.ones(total, dtype=bool)
-        mask[seg_starts] = False
-        vals[mask] = gaps
-        gap_sums = np.zeros(ns.size, dtype=np.int64)
-        has = ns > 1
-        if gaps.size:
-            # sum of gaps per segment via reduceat over the gaps stream
-            gcounts = ns - 1
-            gstarts = np.concatenate(([0], np.cumsum(gcounts)[:-1]))
-            nz = gcounts > 0
-            if nz.any():
-                sums = np.add.reduceat(gaps, gstarts[nz])
-                gap_sums[nz] = sums
-        last_docs = firsts + gap_sums
-        adj = firsts.copy()
-        adj[1:] -= last_docs[:-1]
-        vals[seg_starts] = adj
-        docs = np.cumsum(vals)
         # group index per posting; merge-sort within groups (segments may
         # interleave doc ranges when the upstream partitioning wasn't
         # doc-ordered)
         row_term = pdf["term"].to_numpy()
         row_bkt = pdf["bucket"].to_numpy()
-        grp_change = np.flatnonzero(
-            (row_term[1:] != row_term[:-1]) | (row_bkt[1:] != row_bkt[:-1])) + 1
-        row_grp = np.zeros(ns.size, dtype=np.int64)
-        row_grp[grp_change] = 1
-        row_grp = np.cumsum(row_grp)
-        grp = np.repeat(row_grp, ns)
+        row_grp = np.zeros(row_term.size, dtype=np.int64)
+        row_grp[1:] = (row_term[1:] != row_term[:-1]) \
+            | (row_bkt[1:] != row_bkt[:-1])
+        grp = np.cumsum(row_grp)[seg]
         order = np.lexsort((docs, grp))
         docs, tfs, dls, grp = docs[order], tfs[order], dls[order], grp[order]
-        terms_flat = np.repeat(row_term, ns)[order]
-        bkts_flat = np.repeat(row_bkt, ns)[order]
+        seg = seg[order]
         g_starts = np.flatnonzero(
             np.concatenate(([True], grp[1:] != grp[:-1])))
         tf64 = tfs.astype(np.float64)
         impact = tf64 / (tf64 + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl))
         rows = make_blocks_batch(
-            terms_flat, bkts_flat, docs, tfs, impact, dls, g_starts)
-        return pd.DataFrame(rows, columns=cols) if rows else None
+            row_term[seg], row_bkt[seg], docs, tfs, impact, dls, g_starts)
+        return pd.DataFrame(rows, columns=BLOCK_COLS) if rows else None
 
     def run(batches):
         pend: pd.DataFrame | None = None
@@ -481,21 +360,83 @@ def _merge_segments_map_fn(k1: float, b: float, avgdl: float):
     return run
 
 
-def encode_blocks_segmented(analyzed: DataFrame, bucket_span: int,
-                            k1: float, b: float, avgdl: float,
-                            n_shuffle: int) -> DataFrame:
-    """Segment-merge postings encode: per-partition packed segments →
-    (term, bucket) shuffle of the packed rows → merge + re-block."""
-    seg_src = analyzed.select(
-        "doc_id", F.col("_tf.dl").alias("dl"),
-        F.col("_tf.terms").alias("terms"), F.col("_tf.tfs").alias("tfs"))
-    segments = seg_src.mapInPandas(
-        _partial_segments_map_fn(bucket_span), SEG_SCHEMA)
+def _encode_packed(src: DataFrame, arrays, bucket_span: int, k1: float,
+                   b: float, avgdl: float, n_shuffle: int) -> DataFrame:
+    """Pack ``src`` per task, shuffle the packed rows by (term, bucket) and
+    merge them into block rows. Explicit-numPartitions repartition so AQE
+    cannot coalesce below the cluster's parallelism (the python encode
+    cost per row is invisible to AQE's byte-based sizing)."""
+    segments = src.mapInPandas(
+        _partial_segments_map_fn(bucket_span, arrays), SEG_SCHEMA)
     return (
         segments.repartition(n_shuffle, "term", "bucket")
         .sortWithinPartitions("term", "bucket", "first_doc")
         .mapInPandas(_merge_segments_map_fn(k1, b, avgdl), BLOCK_SCHEMA)
     )
+
+
+def encode_blocks_segmented(analyzed: DataFrame, bucket_span: int,
+                            k1: float, b: float, avgdl: float,
+                            n_shuffle: int) -> DataFrame:
+    """Analyzed per-doc frame (``doc_id``, ``_tf``) → encoded block rows."""
+    seg_src = analyzed.select(
+        "doc_id", F.col("_tf.dl").alias("dl"),
+        F.col("_tf.terms").alias("terms"), F.col("_tf.tfs").alias("tfs"))
+    return _encode_packed(seg_src, _per_doc_arrays, bucket_span, k1, b,
+                          avgdl, n_shuffle)
+
+
+def encode_blocks_flat(flat: DataFrame, bucket_span: int, k1: float,
+                       b: float, avgdl: float, n_shuffle: int) -> DataFrame:
+    """Flat (term, doc_id, tf, dl) posting rows → encoded block rows."""
+    return _encode_packed(flat.select("term", "doc_id", "tf", "dl"),
+                          _flat_row_arrays, bucket_span, k1, b, avgdl,
+                          n_shuffle)
+
+
+def write_postings(blocks: DataFrame, cfg: IndexConfig, out_dir: str) -> None:
+    """Block rows → the ``postings`` table, term-hash partitioned into
+    ``part=`` directories and sorted by (term, bucket, block_seq)."""
+    blocks = blocks.withColumn(
+        "part", F.pmod(F.xxhash64("term"), F.lit(cfg.n_parts)).cast("int"))
+    (
+        blocks.repartition(cfg.n_parts, "part")
+        .sortWithinPartitions("term", "bucket", "block_seq")
+        .write.mode("overwrite")
+        .partitionBy("part")
+        .parquet(os.path.join(out_dir, "postings"))
+    )
+
+
+def write_dictionary(flat: DataFrame, out_dir: str) -> None:
+    """Flat (term, tf) rows → the ``dictionary`` table (term, df, cf)."""
+    flat.groupBy("term").agg(
+        F.count("*").alias("df"), F.sum("tf").alias("cf")
+    ).write.mode("overwrite").parquet(os.path.join(out_dir, "dictionary"))
+
+
+def write_stats_and_meta(spark: SparkSession, out_dir: str, cfg: IndexConfig,
+                         doc_count: int, sum_dl: int, avgdl: float) -> None:
+    """Write the ``stats`` table and ``meta.json`` of a built tree, after
+    its dictionary."""
+    spark.createDataFrame(
+        [(doc_count, sum_dl, float(avgdl))],
+        "doc_count long, sum_dl long, avgdl double"
+    ).write.mode("overwrite").parquet(os.path.join(out_dir, "stats"))
+    # vocabulary size cached at build time (parquet-footer count — cheap
+    # here, but a per-Searcher-construction Spark job if left to query
+    # time; the Searcher's preload-posture decision reads it from meta)
+    vocab_size = spark.read.parquet(os.path.join(out_dir, "dictionary")).count()
+    meta = dict(asdict(cfg), doc_count=doc_count, sum_dl=sum_dl, avgdl=avgdl,
+                vocab_size=int(vocab_size))
+    meta["layout_version"] = LAYOUT_VERSION
+    meta["order_cols"] = list(cfg.order_cols)
+    meta["keyword_cols"] = list(cfg.keyword_cols)
+    # unique per build: the request cache's generation fingerprint (the
+    # reference's "reader cache key") must change on EVERY rebuild, even
+    # one that reproduces identical doc_count/config over edited data
+    meta["build_id"] = uuid.uuid4().hex
+    _atomic_write_json(os.path.join(out_dir, "meta.json"), meta)
 
 
 def build_index(
@@ -599,25 +540,11 @@ def build_index(
         flat.select("term", "doc_id", "positions").write.mode("overwrite") \
             .parquet(os.path.join(out_dir, "positions"))
 
-    def write_dictionary():
-        dictionary = flat.drop("positions").groupBy("term").agg(
-            F.count("*").alias("df"), F.sum("tf").alias("cf"))
-        dictionary.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "dictionary"))
-
-    def write_postings():
-        n_shuffle = shuffle_partitions(spark)
+    def write_postings_table():
         blocks = encode_blocks_segmented(
-            analyzed, cfg.bucket_span, cfg.k1, cfg.b, avgdl, n_shuffle)
-        blocks = blocks.withColumn(
-            "part", F.pmod(F.xxhash64("term"), F.lit(cfg.n_parts)).cast("int"))
-        (
-            blocks.repartition(cfg.n_parts, "part")
-            .sortWithinPartitions("term", "bucket", "block_seq")
-            .write.mode("overwrite")
-            .partitionBy("part")
-            .parquet(os.path.join(out_dir, "postings"))
-        )
+            analyzed, cfg.bucket_span, cfg.k1, cfg.b, avgdl,
+            shuffle_partitions(spark))
+        write_postings(blocks, cfg, out_dir)
 
     # the four table writes are independent once the analyzed frame is
     # cached — submit them as CONCURRENT Spark jobs (the scheduler
@@ -628,7 +555,8 @@ def build_index(
     # multi-threaded job submission over one shared cached input.
     from concurrent.futures import ThreadPoolExecutor
 
-    jobs = [write_docs, write_dictionary, write_postings]
+    jobs = [write_docs, write_postings_table,
+            lambda: write_dictionary(flat, out_dir)]
     if cfg.with_positions:
         jobs.append(write_positions)
     try:
@@ -636,30 +564,12 @@ def build_index(
             futures = [pool.submit(j) for j in jobs]
             for f in futures:
                 f.result()  # surface the first failure
-
-        spark.createDataFrame(
-            [(doc_count, sum_dl, float(avgdl))],
-            "doc_count long, sum_dl long, avgdl double"
-        ).write.mode("overwrite").parquet(os.path.join(out_dir, "stats"))
     finally:
         # release the full-corpus cache on failure paths too — a driver
         # retrying builds must not accumulate one pinned copy per failed
         # attempt (round-4 review)
         pre.unpersist()
-    # vocabulary size cached at build time (parquet-footer count — cheap
-    # here, but a per-Searcher-construction Spark job if left to query
-    # time; the Searcher's preload-posture decision reads it from meta)
-    vocab_size = spark.read.parquet(os.path.join(out_dir, "dictionary")).count()
-    meta = dict(asdict(cfg), doc_count=doc_count, sum_dl=sum_dl, avgdl=avgdl,
-                vocab_size=int(vocab_size))
-    meta["layout_version"] = LAYOUT_VERSION
-    meta["order_cols"] = list(cfg.order_cols)
-    meta["keyword_cols"] = list(cfg.keyword_cols)
-    # unique per build: the request cache's generation fingerprint (the
-    # reference's "reader cache key") must change on EVERY rebuild, even
-    # one that reproduces identical doc_count/config over edited data
-    meta["build_id"] = uuid.uuid4().hex
-    _atomic_write_json(os.path.join(out_dir, "meta.json"), meta)
+    write_stats_and_meta(spark, out_dir, cfg, doc_count, sum_dl, avgdl)
     return InvertedIndex(out_dir)
 
 

@@ -1,22 +1,30 @@
 """Posting-list block codec: delta + variable-byte, 128-doc blocks, block-max.
 
-Re-implements (natively, in numpy — fully vectorized, no per-element Python)
-the behavioral layout of the reference's posting format: 128-doc blocks with
-per-block skip metadata and max impacts (reference wires Lucene's
-``Lucene99PostingsFormat`` at ``index/codec/CodecService.java:71-78`` /
+Re-implements natively, in numpy, the behavioral layout of the reference's
+posting format: 128-doc blocks with per-block skip metadata and max impacts
+(reference wires Lucene's ``Lucene99PostingsFormat`` at
+``index/codec/CodecService.java:71-78`` /
 ``PerFieldMappingPostingFormatCodec.java:87-95``; block size 128 and
 block-max impacts are public Lucene layout). We use varbyte instead of
 FOR-bitpacking — simpler, numpy-friendly, and the VByte/FastLanes literature
 (PAPERS.md) shows both decode at memory bandwidth for our block sizes.
 
 Block row layout (columns of the ``postings`` table):
-    field, term, bucket, block_seq, first_doc, last_doc, n,
-    max_tf, max_impact, docs_vb (binary), tfs_vb (binary)
+    term, bucket, block_seq, first_doc, last_doc, n,
+    max_tf, max_impact, docs_vb, tfs_vb, dls_vb (binary), part
 
-``docs_vb`` encodes gaps: [doc0 - block_base] + diffs; ``block_base`` is
-``first_doc`` so the first stored gap is 0 and is elided (n-1 gaps).
-``max_impact`` = max over the block of tf/(tf + k1*(1-b+b*dl/avgdl)) so the
-query-time upper bound for block-max WAND is ``idf*(k1+1)*max_impact``.
+``docs_vb`` encodes the n-1 doc-id gaps after ``first_doc`` (the first gap
+is elided: ``first_doc`` sits in the row). ``tfs_vb`` and ``dls_vb`` carry
+the n term frequencies and doc lengths, so a block scores without a norms
+lookup. ``max_impact`` = max over the block of tf/(tf + k1*(1-b+b*dl/avgdl))
+so the query-time upper bound for block-max WAND is
+``idf*(k1+1)*max_impact``. The packed per-task segments the build shuffles
+(``term, bucket, n, first_doc, docs_vb, tfs_vb, dls_vb``) use the same
+layout without the block cap.
+
+Every reader decodes through ``decode_blocks``: one varbyte pass per byte
+column over all the blocks of a batch, and one segmented cumsum for the
+doc ids. ``make_blocks_batch`` is the matching batch encoder.
 """
 
 from __future__ import annotations
@@ -38,10 +46,9 @@ def varbyte_encode(values: np.ndarray) -> bytes:
 
 
 def gaps_to_doc_ids(first_doc: int, gaps: np.ndarray, n: int) -> np.ndarray:
-    """Reconstruct a block's doc ids from ``first_doc`` + n-1 decoded
-    gaps (the first gap is elided by the block layout). The single
-    authoring site for the cumsum recipe — used by ``decode_block``,
-    the WAND scorer, and the postings-flattening path."""
+    """Reconstruct one block's doc ids from ``first_doc`` + n-1 decoded
+    gaps (the first gap is elided by the block layout). Readers of many
+    blocks use ``decode_blocks``."""
     if n <= 0:
         return np.empty(0, dtype=np.int64)
     doc_ids = np.empty(n, dtype=np.int64)
@@ -106,9 +113,9 @@ def make_blocks_batch(
     ``group_starts`` marks group boundaries (first row of each group).
     All varbyte encoding happens in three whole-batch calls; per-block rows
     are then cheap buffer slices. Returns the same row tuples as
-    ``make_blocks`` prefixed with (term, bucket) — this is the scale path
-    used by the index build (the per-group ``make_blocks`` remains the
-    reference implementation; equivalence is asserted in tests)."""
+    ``make_blocks`` prefixed with (term, bucket) — the encoder of both
+    ``build_index`` and ``merge_segments``; the per-group ``make_blocks``
+    is the reference it is tested against."""
     n = doc_ids.size
     if n == 0:
         return []
@@ -137,23 +144,25 @@ def make_blocks_batch(
     lbuf, loff = varbyte_encode_offsets(dl.astype(np.uint64))
     max_tf = np.maximum.reduceat(t, bs)
     max_imp = np.maximum.reduceat(imp, bs)
-    rows = []
-    for i in range(bs.size):
-        s, e = int(bs[i]), int(be[i])
-        rows.append((
-            terms[s],
-            int(buckets[s]),
-            int(block_seq[i]),
-            int(d[s]),
-            int(d[e - 1]),
-            e - s,
-            int(max_tf[i]),
-            float(max_imp[i]),
-            gbuf[goff[s + 1]:goff[e]].tobytes(),   # n-1 gaps (first elided)
-            tbuf[toff[s]:toff[e]].tobytes(),
-            lbuf[loff[s]:loff[e]].tobytes(),
-        ))
-    return rows
+    # per-block rows from whole columns: tolist() and bytes slices, no
+    # numpy scalar per field
+    def slices(buf, lo, hi):
+        raw = buf.tobytes()
+        return [raw[a:z] for a, z in zip(lo.tolist(), hi.tolist())]
+
+    return list(zip(
+        np.asarray(terms)[bs].tolist(),
+        np.asarray(buckets)[bs].tolist(),
+        block_seq.tolist(),
+        d[bs].tolist(),
+        d[be - 1].tolist(),
+        (be - bs).tolist(),
+        max_tf.tolist(),
+        max_imp.tolist(),
+        slices(gbuf, goff[bs + 1], goff[be]),   # n-1 gaps (first elided)
+        slices(tbuf, toff[bs], toff[be]),
+        slices(lbuf, loff[bs], loff[be]),
+    ))
 
 
 def encode_block(doc_ids: np.ndarray, tfs: np.ndarray) -> tuple[bytes, bytes]:
@@ -163,10 +172,45 @@ def encode_block(doc_ids: np.ndarray, tfs: np.ndarray) -> tuple[bytes, bytes]:
     return varbyte_encode(gaps), varbyte_encode(np.asarray(tfs, dtype=np.uint64))
 
 
+def decode_blocks(first_docs, ns, docs_vb, tfs_vb, dls_vb=None,
+                  tombstones: np.ndarray | None = None):
+    """Decode many blocks (or packed segments) in one pass.
+
+    ``first_docs``/``ns`` are per-block arrays and ``docs_vb``/``tfs_vb``/
+    ``dls_vb`` per-block byte strings. Varbyte values are self-terminating,
+    so each column is joined and decoded once; doc ids come back from ONE
+    cumsum over the gap stream, rebased per block at its start. Postings
+    of docs in the sorted ``tombstones`` array are dropped.
+
+    Returns ``(block, doc_ids, tfs, dls)`` as int64 arrays over the kept
+    postings in input order; ``block`` is each posting's block index and
+    ``dls`` is None when ``dls_vb`` is."""
+    ns = np.asarray(ns, dtype=np.int64)
+    first = np.asarray(first_docs, dtype=np.int64)
+    total = int(ns.sum())
+    starts = np.cumsum(ns) - ns
+    block = np.repeat(np.arange(ns.size), ns)
+    vals = np.zeros(total, dtype=np.int64)
+    is_gap = np.ones(total, dtype=bool)
+    is_gap[starts[ns > 0]] = False
+    vals[is_gap] = varbyte_decode(b"".join(docs_vb)).astype(np.int64)
+    csum = np.cumsum(vals)
+    doc_ids = first[block] + (csum - csum[starts[block]])
+    tfs = varbyte_decode(b"".join(tfs_vb)).astype(np.int64)
+    dls = None if dls_vb is None \
+        else varbyte_decode(b"".join(dls_vb)).astype(np.int64)
+    if tombstones is not None and tombstones.size and total:
+        # liveDocs test: sorted tombstones → membership via searchsorted
+        idx = np.searchsorted(tombstones, doc_ids)
+        live = tombstones[np.minimum(idx, tombstones.size - 1)] != doc_ids
+        block, doc_ids, tfs = block[live], doc_ids[live], tfs[live]
+        dls = None if dls is None else dls[live]
+    return block, doc_ids, tfs, dls
+
+
 def decode_block(first_doc: int, docs_vb: bytes, tfs_vb: bytes, n: int):
     """Decode one block → (doc_ids int64[n], tfs int64[n])."""
-    doc_ids = gaps_to_doc_ids(first_doc, varbyte_decode(docs_vb), n)
-    tfs = varbyte_decode(tfs_vb).astype(np.int64)
+    _, doc_ids, tfs, _ = decode_blocks([first_doc], [n], [docs_vb], [tfs_vb])
     return doc_ids, tfs
 
 

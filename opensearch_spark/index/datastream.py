@@ -25,7 +25,8 @@ are reused verbatim. What this layer adds:
   indices whose ranges can't match).
 
 ``materialize()`` = ``merge_segments`` — the force-merge that produces
-the query-optimal global index.
+the query-optimal global index, block for block and meta key for meta key
+what ``build_index`` writes for the same docs.
 """
 
 from __future__ import annotations

@@ -16,9 +16,11 @@ background (``OpenSearchTieredMergePolicy.java``) — projected onto Spark:
 - ``resume``: committed segments are skipped — restartable at segment
   granularity, which is exactly the north-rule checkpoint requirement;
 - ``merge_segments``: k-way merge-sort of all segment postings into the
-  global blocked posting lists — expressed as one Spark shuffle-sort over
-  (term, bucket) groups (Spark's sort IS the k-way merge; the tiered-merge
-  policy's job is done by the shuffle).
+  global blocked posting lists through ``build_index``'s own encoder: each
+  task packs its flat segment rows into (term, bucket) segments, and one
+  Spark shuffle-sort over (term, bucket) merges them (Spark's sort IS the
+  k-way merge; the tiered-merge policy's job is done by the shuffle). The
+  dictionary, stats and meta writers are ``build_index``'s too.
 """
 
 from __future__ import annotations
@@ -26,8 +28,6 @@ from __future__ import annotations
 import json
 import os
 import time as _time
-import uuid
-from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -35,13 +35,15 @@ from opensearch_spark.common.sparkconf import shuffle_partitions
 
 from opensearch_spark.analysis import termfreq_udf
 from opensearch_spark.index.build import (
-    LAYOUT_VERSION,
     IndexConfig,
     InvertedIndex,
     _atomic_write_json,
     _storage_level,
     assign_doc_ids,
-    encode_blocks,
+    encode_blocks_flat,
+    write_dictionary,
+    write_postings,
+    write_stats_and_meta,
 )
 
 
@@ -258,33 +260,12 @@ def merge_segments(
     stats = docs.agg(F.count("*").alias("n"), F.sum("dl").alias("s")).collect()[0]
     doc_count, sum_dl = int(stats["n"]), int(stats["s"] or 0)
     avgdl = sum_dl / doc_count if doc_count else 0.0
-    spark.createDataFrame(
-        [(doc_count, sum_dl, float(avgdl))],
-        "doc_count long, sum_dl long, avgdl double",
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, "stats"))
-
-    (flat.groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-         .write.mode("overwrite").parquet(os.path.join(out_dir, "dictionary")))
-
-    bucketed = flat.withColumn(
-        "bucket", (F.col("doc_id") / F.lit(cfg.bucket_span)).cast("long"))
-    n_shuffle = shuffle_partitions(spark)
-    blocks = encode_blocks(bucketed, cfg.k1, cfg.b, avgdl, n_shuffle)
-    blocks = blocks.withColumn(
-        "part", F.pmod(F.xxhash64("term"), F.lit(cfg.n_parts)).cast("int"))
-    (blocks.repartition(cfg.n_parts, "part")
-           .sortWithinPartitions("term", "bucket", "block_seq")
-           .write.mode("overwrite").partitionBy("part")
-           .parquet(os.path.join(out_dir, "postings")))
-
-    meta = dict(asdict(cfg), doc_count=doc_count, sum_dl=sum_dl, avgdl=avgdl)
-    meta["layout_version"] = LAYOUT_VERSION
-    meta["order_cols"] = list(cfg.order_cols)
-    meta["keyword_cols"] = list(cfg.keyword_cols)
-    # same rebuild-uniqueness stamp as build.build_index — the request
-    # cache's generation fingerprint keys on it
-    meta["build_id"] = uuid.uuid4().hex
-    _atomic_write_json(os.path.join(out_dir, "meta.json"), meta)
+    write_dictionary(flat, out_dir)
+    write_postings(
+        encode_blocks_flat(flat, cfg.bucket_span, cfg.k1, cfg.b, avgdl,
+                           shuffle_partitions(spark)),
+        cfg, out_dir)
+    write_stats_and_meta(spark, out_dir, cfg, doc_count, sum_dl, avgdl)
     # build-metrics rollup (north-rule: per-partition lineage + metrics):
     # every segment's manifest metrics plus the global merge cost, so a
     # cluster operator reads one file for throughput/capacity per build

@@ -93,6 +93,9 @@ _DCT = np.array([[math.cos((2 * x + 1) * u * math.pi / 16)
                   * (math.sqrt(1 / 8) if u == 0 else math.sqrt(2 / 8))
                   for x in range(8)] for u in range(8)])
 
+# pixel block contributed by a unit coefficient at row-major (u, v)
+_BASIS = np.einsum("ux,vy->uvxy", _DCT, _DCT).reshape(64, 8, 8)
+
 
 def _canonical_codes(bits, huffval):
     """(symbol → (code, length)) canonical Huffman assignment (T.81 C.2)."""
@@ -201,13 +204,56 @@ def _rgb_to_ycbcr(img: np.ndarray) -> np.ndarray:
     return np.stack([y, cb, cr], axis=-1)
 
 
+# rows: R, G, B from (Y, Cb - 128, Cr - 128); the decoder's inverse
+_YCC_TO_RGB = np.array([[1.0, 0.0, 1.402],
+                        [1.0, -0.344136, -0.714136],
+                        [1.0, 1.772, 0.0]])
+
+
 def _ycbcr_to_rgb(ycc: np.ndarray) -> np.ndarray:
-    y, cb, cr = (ycc[..., i] for i in range(3))
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    out = np.stack([r, g, b], axis=-1)
+    out = (ycc - [0.0, 128.0, 128.0]) @ _YCC_TO_RGB.T
     return np.clip(np.round(out), 0, 255).astype(np.uint8)
+
+
+# decoded samples must round back within this many counts of the source
+_FLAT_TOLERANCE = 2.25
+_FLAT_MAX_STEPS = 64
+
+
+def _refine_flat(qz: np.ndarray, src: np.ndarray,
+                 valid: np.ndarray) -> np.ndarray:
+    """Near-lossless MCU refinement for all-ones quant tables.
+
+    Rounding each coefficient is the L2-optimal lattice point, but the
+    YCbCr->RGB matrix amplifies chroma error (B = Y + 1.772 Cb), so a
+    rounded MCU can decode up to 3 counts off. Greedily step single
+    coefficients by +-1 while that lowers the worst decoded error over
+    the visible pixels, until every sample is within _FLAT_TOLERANCE.
+
+    qz: (nc, 64) integer coefficients; src: (nc, 8, 8) source samples
+    (grey or RGB); valid: (8, 8) mask of pixels inside the image.
+    """
+    nc = len(qz)
+    mix = np.eye(1) if nc == 1 else _YCC_TO_RGB
+    offset = np.array([128.0] if nc == 1 else [128.0, 0.0, 0.0])
+    planes = np.einsum("ck,kxy->cxy", qz, _BASIS) + offset[:, None, None]
+    err = np.einsum("oc,cxy->oxy", mix, planes) - src
+    # steps[c, k] = change of err when coefficient k of component c += 1
+    steps = np.einsum("oc,kxy->ckoxy", mix, _BASIS)[..., valid]
+    err = err[:, valid]
+    worst = np.abs(err).max()
+    for _ in range(_FLAT_MAX_STEPS):
+        if worst <= _FLAT_TOLERANCE:
+            break
+        trial = np.abs(err + np.stack([steps, -steps])).max(axis=(3, 4))
+        sign, c, k = np.unravel_index(np.argmin(trial), trial.shape)
+        if trial[sign, c, k] >= worst:
+            break
+        delta = 1 if sign == 0 else -1
+        qz[c, k] += delta
+        err = err + delta * steps[c, k]
+        worst = trial[sign, c, k]
+    return qz
 
 
 # ---------------------------------------------------------------------------
@@ -224,7 +270,8 @@ def encode_jpeg(img: np.ndarray,
                 quant_chroma: np.ndarray | None = None) -> bytes:
     """Baseline sequential JPEG encoder: (H, W) greyscale or (H, W, 3)
     RGB uint8 → SOF0 4:4:4 bitstream with Annex K tables (override the
-    quant tables for near-lossless fixtures)."""
+    quant tables for near-lossless fixtures). With all-ones tables every
+    MCU is refined so each decoded sample lands within 2 counts."""
     if img.dtype != np.uint8:
         raise ValueError("8-bit images only")
     ql = QUANT_LUMA if quant_luma is None else np.asarray(quant_luma)
@@ -242,16 +289,27 @@ def encode_jpeg(img: np.ndarray,
     ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
     padded = [np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
               for p in planes]
+    flat = all(np.all(q == 1) for q in qtabs)
+    src = (img[..., None] if grey else img).astype(np.float64)
+    src = np.pad(src, ((0, ph - h), (0, pw - w), (0, 0)), mode="edge")
+    inside = np.zeros((ph, pw), bool)
+    inside[:h, :w] = True
 
     bw = _BitWriter()
     pred = [0] * len(planes)
     for by in range(ph // 8):
         for bx in range(pw // 8):
-            for ci, plane in enumerate(padded):
-                block = plane[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] - 128.0
-                coef = _DCT @ block @ _DCT.T
-                qz = np.round(coef / qtabs[ci]).astype(np.int32)
-                zz = qz.flatten()[ZIGZAG]
+            rows = slice(by * 8, (by + 1) * 8)
+            cols = slice(bx * 8, (bx + 1) * 8)
+            mcu = np.stack([
+                np.round(_DCT @ (plane[rows, cols] - 128.0) @ _DCT.T
+                         / qtabs[ci]).astype(np.int32).reshape(64)
+                for ci, plane in enumerate(padded)])
+            if flat:
+                mcu = _refine_flat(mcu, src[rows, cols].transpose(2, 0, 1),
+                                   inside[rows, cols])
+            for ci, qz in enumerate(mcu):
+                zz = qz[ZIGZAG]
                 diff = int(zz[0]) - pred[ci]
                 pred[ci] = int(zz[0])
                 size, vbits = _category(diff)

@@ -210,44 +210,30 @@ class Searcher:
         return self.index.postings_for_terms(self.spark, terms)
 
     def _flat_postings(self, terms: list[str]) -> DataFrame:
-        """Decoded (term, doc_id, tf, dl) for the given terms — vectorized
-        block decode in mapInPandas. Soft-deleted docs drop at decode time
-        (liveDocs; stats intentionally keep counting them until an
-        expunging rebuild — Lucene's un-merged-segment behavior)."""
+        """Decoded (term, doc_id, tf, dl) for the given terms — one batched
+        block decode per Arrow batch in mapInPandas. Soft-deleted docs drop
+        at decode time (liveDocs; stats intentionally keep counting them
+        until an expunging rebuild — Lucene's un-merged-segment behavior)."""
         blocks = self._blocks_for_terms(terms)
         # broadcast handle, not the array: ships once per executor, and
         # the task closure stays bytes-sized however many docs are deleted
         tomb_bc = self.index.tombstones_bcast(self.spark)
 
         def decode(batches):
-            from opensearch_spark.index.codec import (gaps_to_doc_ids,
-                                                      varbyte_decode)
+            from opensearch_spark.index.codec import decode_blocks
 
             tomb = tomb_bc.value if tomb_bc is not None else None
             for pdf in batches:
-                outs = []
-                for term, first_doc, n, dvb, tvb, lvb in zip(
-                    pdf["term"], pdf["first_doc"], pdf["n"],
-                    pdf["docs_vb"], pdf["tfs_vb"], pdf["dls_vb"],
-                ):
-                    docs = gaps_to_doc_ids(first_doc, varbyte_decode(dvb), n)
-                    tf = varbyte_decode(tvb).astype(np.int64)
-                    dl = varbyte_decode(lvb).astype(np.int64)
-                    if tomb is not None and docs.size:
-                        idx = np.searchsorted(tomb, docs)
-                        dead = (idx < tomb.size) \
-                            & (tomb[np.minimum(idx, tomb.size - 1)] == docs)
-                        if dead.any():
-                            live = ~dead
-                            docs, tf, dl = docs[live], tf[live], dl[live]
-                    outs.append(pd.DataFrame({
-                        "term": term,
+                block, docs, tf, dl = decode_blocks(
+                    pdf["first_doc"].to_numpy(), pdf["n"].to_numpy(),
+                    pdf["docs_vb"], pdf["tfs_vb"], pdf["dls_vb"], tomb)
+                if docs.size:
+                    yield pd.DataFrame({
+                        "term": pdf["term"].to_numpy()[block],
                         "doc_id": docs,
                         "tf": tf,
                         "dl": dl,
-                    }))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+                    })
 
         return blocks.mapInPandas(decode, "term string, doc_id long, tf long, dl long")
 

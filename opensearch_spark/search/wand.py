@@ -14,8 +14,9 @@ SIMD-friendly, see the ICDE'25 columnar-inverted-index paper in PAPERS.md):
   - **bucket skip**: Σ_t max-impact-UB(t, bucket) < θ → skip whole bucket
     (and for AND/msm: skip buckets missing required terms);
   - **block skip**: UB(block) + Σ_{t'≠t} UB(t', bucket) < θ → skip block;
-  - surviving blocks: decode (vectorized varbyte) → per-posting scores →
-    sort-by-doc + reduceat aggregation → merge into running top-k, raise θ.
+  - surviving blocks: one batched decode (``codec.decode_blocks``) →
+    per-posting scores → sort-by-doc + reduceat aggregation → merge into
+    running top-k, raise θ.
 - global: per-task top-k frames → ``ORDER BY score DESC, doc_id LIMIT k``
   (Spark's TakeOrderedAndProject = the reference's ``TopDocs.merge``
   coordinator step, ``SearchPhaseController.java:175-241``).
@@ -31,7 +32,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from opensearch_spark.index.codec import gaps_to_doc_ids, varbyte_decode
+from opensearch_spark.index.codec import decode_blocks
 
 #: multiplicative slack on every skip bound. The bounds are sums of
 #: per-term float64 upper bounds; numpy's pairwise summation of the
@@ -103,22 +104,17 @@ def _score_bucket(
     if not keep.any():
         return None
     g = group.loc[keep]
-    doc_parts, score_parts = [], []
-    for first_doc, n, w_t, dvb, tvb, lvb in zip(
-        g["first_doc"].to_numpy(),
-        g["n"].to_numpy(),
-        weights[g["term_idx"].to_numpy()],
-        g["docs_vb"].to_numpy(),
-        g["tfs_vb"].to_numpy(),
-        g["dls_vb"].to_numpy(),
-    ):
-        docs = gaps_to_doc_ids(first_doc, varbyte_decode(dvb), n)
-        tf = varbyte_decode(tvb).astype(np.float64)
-        dl = varbyte_decode(lvb).astype(np.float64)
-        score_parts.append(w_t * (tf / (tf + k1 * (1.0 - b + b * dl / avgdl))))
-        doc_parts.append(docs)
-    all_docs = np.concatenate(doc_parts)
-    all_scores = np.concatenate(score_parts)
+    # liveDocs check at decode time (Lucene posture): dropping docs only
+    # lowers realized scores, so every skip bound stays strict
+    block, all_docs, tf, dl = decode_blocks(
+        g["first_doc"].to_numpy(), g["n"].to_numpy(), g["docs_vb"].to_numpy(),
+        g["tfs_vb"].to_numpy(), g["dls_vb"].to_numpy(), tombstones)
+    if not all_docs.size:
+        return None
+    tf = tf.astype(np.float64)
+    dl = dl.astype(np.float64)
+    w = weights[g["term_idx"].to_numpy()][block]
+    all_scores = w * (tf / (tf + k1 * (1.0 - b + b * dl / avgdl)))
     order = np.argsort(all_docs, kind="stable")
     all_docs, all_scores = all_docs[order], all_scores[order]
     starts = np.flatnonzero(np.concatenate(([True], all_docs[1:] != all_docs[:-1])))
@@ -128,14 +124,6 @@ def _score_bucket(
         counts = np.diff(np.concatenate((starts, [all_docs.size])))
         ok = counts >= n_required
         uniq_docs, sums = uniq_docs[ok], sums[ok]
-    if tombstones is not None and uniq_docs.size:
-        # liveDocs check at scoring time (Lucene posture): dropping docs
-        # only lowers realized scores, so every skip bound stays strict.
-        # tombstones is sorted → membership via searchsorted.
-        idx = np.searchsorted(tombstones, uniq_docs)
-        dead = (idx < tombstones.size) \
-            & (tombstones[np.minimum(idx, tombstones.size - 1)] == uniq_docs)
-        uniq_docs, sums = uniq_docs[~dead], sums[~dead]
     return uniq_docs, sums
 
 

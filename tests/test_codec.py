@@ -7,6 +7,7 @@ from hypothesis import strategies as st
 from opensearch_spark.index.codec import (
     BLOCK_SIZE,
     decode_block,
+    decode_blocks,
     encode_block,
     make_blocks,
     varbyte_decode,
@@ -112,3 +113,61 @@ def test_make_blocks_batch_equals_make_blocks():
     assert len(got) == len(expected)
     for g, e in zip(got, expected):
         assert g == e, (g[:6], e[:6])
+
+
+_gap = st.one_of(st.integers(1, 300), st.integers(2**35, 2**40))
+_block = st.tuples(
+    st.integers(0, 2**40),                                   # first_doc
+    st.lists(st.tuples(_gap,                                 # gap before
+                       st.integers(1, 1000),                 # tf
+                       st.one_of(st.integers(1, 500),
+                                 st.integers(2**35, 2**40))),  # dl
+             min_size=1, max_size=BLOCK_SIZE),
+    st.booleans(),                                           # kill all docs
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(_block, min_size=0, max_size=12), st.data())
+def test_decode_blocks_equals_per_block_decode(blocks, data):
+    """The batched decoder ≡ per-block ``decode_block`` + a plain
+    membership filter: n = 1 blocks (empty docs_vb), multi-byte gaps and
+    dls above 2^35, an empty input, and tombstones killing whole blocks."""
+    firsts, ns, dvbs, tvbs, lvbs = [], [], [], [], []
+    tomb = set()
+    want = []
+    for bi, (first, posts, kill) in enumerate(blocks):
+        docs = first + np.concatenate(
+            ([0], np.cumsum([g for g, _, _ in posts[1:]], dtype=np.int64)))
+        tfs = np.array([t for _, t, _ in posts], dtype=np.int64)
+        dls = np.array([d for _, _, d in posts], dtype=np.int64)
+        dvb, tvb = encode_block(docs, tfs)
+        lvb = varbyte_encode(dls.astype(np.uint64))
+        if len(posts) == 1:
+            assert dvb == b""
+        firsts.append(first)
+        ns.append(len(posts))
+        dvbs.append(dvb)
+        tvbs.append(tvb)
+        lvbs.append(lvb)
+        if kill:
+            tomb.update(int(d) for d in docs)
+        else:
+            tomb.update(data.draw(st.sets(st.sampled_from(
+                [int(d) for d in docs]), max_size=3)))
+        d1, t1 = decode_block(first, dvb, tvb, len(posts))
+        l1 = varbyte_decode(lvb).astype(np.int64)
+        want += [(bi, int(d), int(t), int(l))
+                 for d, t, l in zip(d1, t1, l1)]
+    # no tombstones: every posting, in input order
+    block, d, t, l = decode_blocks(firsts, ns, dvbs, tvbs, lvbs)
+    assert list(zip(block.tolist(), d.tolist(), t.tolist(), l.tolist())) \
+        == want
+    # sorted tombstones: exactly the postings of live docs survive
+    tarr = np.array(sorted(tomb), dtype=np.int64)
+    block, d, t, l = decode_blocks(firsts, ns, dvbs, tvbs, lvbs, tarr)
+    assert list(zip(block.tolist(), d.tolist(), t.tolist(), l.tolist())) \
+        == [w for w in want if w[1] not in tomb]
+    # without a dls column
+    block, d, t, l = decode_blocks(firsts, ns, dvbs, tvbs)
+    assert l is None and d.tolist() == [w[1] for w in want]

@@ -6,7 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from opensearch_spark.index.build import IndexConfig, build_index
+from opensearch_spark.index.build import LAYOUT_VERSION, IndexConfig, build_index
 from opensearch_spark.index.segments import (
     build_segments,
     merge_segments,
@@ -47,10 +47,30 @@ def test_crash_resume_merge_equals_direct_build(spark, tmp_path):
     b = sorted((r["doc_id"], round(r["score"], 10)) for r in
                Searcher(spark, direct).search(q, k=10).collect())
     assert a == b
-    # byte-level: same postings content signature
-    pa = idx.postings(spark).agg(F.sum(F.crc32(F.col("docs_vb"))).alias("s")).first()["s"]
-    pb = direct.postings(spark).agg(F.sum(F.crc32(F.col("docs_vb"))).alias("s")).first()["s"]
-    assert pa == pb
+    # byte-level: every postings column and every dictionary row agree
+    for table in ("postings", "dictionary"):
+        ta, tb = idx._table(spark, table), direct._table(spark, table)
+        assert sorted(ta.columns) == sorted(tb.columns)
+        cols = sorted(ta.columns)
+        ra = sorted(tuple(r) for r in ta.select(*cols).collect())
+        rb = sorted(tuple(r) for r in tb.select(*cols).collect())
+        assert ra == rb, table
+
+
+def test_merged_meta_records_vocab_size(spark, tmp_path):
+    """merge_segments writes meta.json through build_index's writer, so a
+    Searcher opened on a merged tree reads vocab_size instead of running a
+    dictionary count."""
+    import json
+
+    corpus = spark.read.parquet(DOCS).limit(80)
+    seg_dir = str(tmp_path / "vocab_idx")
+    build_segments(spark, corpus, seg_dir, CFG, n_segments=2)
+    idx = merge_segments(spark, seg_dir, CFG)
+    with open(os.path.join(seg_dir, "meta.json")) as fh:
+        meta = json.load(fh)
+    assert meta["vocab_size"] == idx.dictionary(spark).count() > 0
+    assert meta["layout_version"] == LAYOUT_VERSION
 
 
 def test_manifest_and_rollup_metrics(spark, tmp_path):

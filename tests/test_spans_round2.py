@@ -395,11 +395,18 @@ def test_wand_streaming_fallback_identical(searcher, monkeypatch):
 
 # ---------------- segment-merge build path ----------------
 def test_segment_merge_blocks_identical_to_row_path(spark, sf_dir):
-    """The segment-merge encode (packed per-partition segments → merge)
-    must produce bit-identical block rows to the row-per-posting
-    reference path."""
+    """Both inputs of the segment-merge encoder (per-doc arrays, as
+    build_index feeds it, and flat posting rows, as merge_segments feeds
+    it) must produce block rows bit-identical to the per-group reference
+    ``codec.make_blocks`` over the collected flat postings."""
+    from collections import defaultdict
+
+    import numpy as np
+
     from opensearch_spark.analysis import termfreq_udf
-    from opensearch_spark.index.build import encode_blocks, encode_blocks_segmented
+    from opensearch_spark.index.build import (encode_blocks_flat,
+                                              encode_blocks_segmented)
+    from opensearch_spark.index.codec import make_blocks
 
     corpus = spark.read.parquet(f"{sf_dir}/documents.parquet")
     analyzed = corpus.withColumn(
@@ -411,9 +418,19 @@ def test_segment_merge_blocks_identical_to_row_path(spark, sf_dir):
         F.explode(F.expr("arrays_zip(_tf.terms, _tf.tfs)")).alias("z"),
     ).select(F.col("z.terms").alias("term"), "doc_id",
              F.col("z.tfs").cast("long").alias("tf"), "dl")
-    bucketed = flat.withColumn("bucket", (F.col("doc_id") / F.lit(1 << 9)).cast("long"))
-    old = encode_blocks(bucketed, 1.2, 0.75, avgdl, 8).collect()
-    new = encode_blocks_segmented(analyzed, 1 << 9, 1.2, 0.75, avgdl, 8).collect()
+    span, k1, b = 1 << 9, 1.2, 0.75
+
+    groups = defaultdict(list)
+    for r in flat.collect():
+        groups[(r["term"], r["doc_id"] // span)].append(
+            (r["doc_id"], r["tf"], r["dl"]))
+    expected = []
+    for (term, bucket), posts in groups.items():
+        d, tf, dl = (np.array(c, dtype=np.int64) for c in zip(*posts))
+        tf64 = tf.astype(np.float64)
+        imp = tf64 / (tf64 + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
+        expected += [(term, bucket) + r for r in make_blocks(d, tf, imp, dls=dl)]
+    expected = sorted(e[:7] + (round(e[7], 10),) + e[8:] for e in expected)
 
     def norm(rows):
         return sorted(
@@ -422,7 +439,11 @@ def test_segment_merge_blocks_identical_to_row_path(spark, sf_dir):
              bytes(r["docs_vb"]), bytes(r["tfs_vb"]), bytes(r["dls_vb"]))
             for r in rows)
 
-    assert norm(old) == norm(new)
+    per_doc = encode_blocks_segmented(analyzed, span, k1, b, avgdl, 8).collect()
+    flat_rows = encode_blocks_flat(flat, span, k1, b, avgdl, 8).collect()
+    assert len(expected) > len(groups) > 0
+    assert norm(per_doc) == expected
+    assert norm(flat_rows) == expected
     analyzed.unpersist()
 
 
