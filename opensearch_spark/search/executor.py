@@ -7,9 +7,13 @@ DataFrame plan → global ``ORDER BY score LIMIT k`` (TakeOrderedAndProject =
 ``SearchPhaseController`` merge) → fetch join for hit content.
 
 Scoring modes:
-- exhaustive: decode → float64 BM25 as a Catalyst SQL expression → groupBy
-  sum. This is the oracle-comparable mode and the scoring oracle for WAND.
-- wand: block-max pruned; identical results (strict-bound skips).
+- exhaustive: ``_term_scores``, the one BM25 term-score plan (decoded
+  postings ⋈ broadcast df → float64 BM25 as a Catalyst SQL expression),
+  then groupBy sum. Match, term, cross_fields and explain all score
+  through it; it is the oracle-comparable mode and the scoring oracle for
+  WAND.
+- wand: ``wand.py``'s one block-max loop per partition; identical results
+  (strict-bound skips). A top-level Match takes it under ``mode="auto"``.
 
 Global stats by construction = the reference's DFS_QUERY_THEN_FETCH
 semantics; with 1 shard the reference's query_then_fetch coincides (§3.1),
@@ -28,14 +32,14 @@ from pyspark.sql import Window as W
 
 from opensearch_spark.analysis import tokenize
 from opensearch_spark.index.build import InvertedIndex
+from opensearch_spark.scoring.bm25 import bm25_idf
 from opensearch_spark.search import queries as Q
 
 SCORE_COLS = ("doc_id", "score")
 
 
 def _bm25_weight(N: int, df: np.ndarray, k1: float, boost: float) -> np.ndarray:
-    idf = np.log(1.0 + (N - df.astype(np.float64) + 0.5) / (df + 0.5))
-    return boost * idf * (k1 + 1.0)
+    return boost * bm25_idf(N, df) * (k1 + 1.0)
 
 
 def _levenshtein_leq(a: str, b: str, limit: int) -> bool:
@@ -280,15 +284,7 @@ class Searcher:
         n_required = self._n_required(q, live, terms)
         if not live or (q.operator == "and" and len(live) < len(set(terms))):
             return self._empty_scores()
-        flat = self._flat_postings(live)
-        stats = self.spark.createDataFrame(
-            [(t, dfs[t]) for t in live], "term string, df long"
-        )
-        scored = flat.join(F.broadcast(stats), "term").withColumn(
-            "tscore",
-            F.expr(self._bm25_sql(f"{q.boost}")),
-        )
-        agg = scored.groupBy("doc_id").agg(
+        agg = self._term_scores(live, dfs, q.boost).groupBy("doc_id").agg(
             F.sum("tscore").alias("score"), F.count("*").alias("_nt")
         )
         if n_required > 1:
@@ -640,7 +636,8 @@ class Searcher:
                 docs = self._flat_postings(terms).select("doc_id").distinct()
                 return docs.select(
                     "doc_id", F.lit(float(q.boost)).alias("score"))
-            ts = self._term_scores([str(q.value)], boost=q.boost)
+            dfs = self.term_dfs([str(q.value)])
+            ts = self._term_scores(list(dfs), dfs, q.boost)
             return ts.groupBy("doc_id").agg(F.sum("tscore").alias("score"))
         if isinstance(q, Q.Terms) and (q.field == self.field
                                        or q.field in self.extra_fields):
@@ -875,20 +872,21 @@ class Searcher:
             return self._sum_union(per_field)
         return self._dismax_union(per_field, q.tie_breaker)
 
-    def _term_scores(self, terms: list[str], boost: float = 1.0) -> DataFrame:
-        """(doc_id, term, tscore) per matching posting — the per-term BM25
-        building block shared by match and cross_fields."""
-        dfs = self.term_dfs(terms)
-        live = [t for t in dict.fromkeys(terms) if t in dfs]
+    def _term_scores(self, live: list[str], dfs: dict[str, int],
+                     boost: float) -> DataFrame:
+        """(doc_id, term, tf, dl, df, tscore) per posting of the ``live``
+        terms (each a key of ``dfs``) — the one BM25 term-score plan:
+        decoded postings ⋈ broadcast df → ``bm25_sql_expr``. Match, term,
+        cross_fields and explain all build on it."""
         if not live:
-            return self.spark.createDataFrame(
-                [], "doc_id long, term string, tscore double")
-        flat = self._flat_postings(live)
+            return self.spark.createDataFrame([], (
+                "doc_id long, term string, tf long, dl long, df long, "
+                "tscore double"))
         stats = self.spark.createDataFrame(
             [(t, dfs[t]) for t in live], "term string, df long")
-        return flat.join(F.broadcast(stats), "term").select(
-            "doc_id", "term",
-            F.expr(self._bm25_sql(f"{boost}")).alias("tscore"))
+        return self._flat_postings(live).join(F.broadcast(stats), "term") \
+            .select("doc_id", "term", "tf", "dl", "df",
+                    F.expr(self._bm25_sql(f"{boost}")).alias("tscore"))
 
     def _cross_fields(self, q: Q.MultiMatch) -> DataFrame:
         """cross_fields (MultiMatchQueryBuilder.java:74): term-centric —
@@ -900,7 +898,9 @@ class Searcher:
         for f in q.fields:
             s = self._searcher_for(f)
             terms = s.analyze(q.text)
-            frames.append(s._term_scores(terms, q.boost))
+            dfs = s.term_dfs(terms)
+            live = [t for t in dict.fromkeys(terms) if t in dfs]
+            frames.append(s._term_scores(live, dfs, q.boost))
         u = reduce(DataFrame.unionByName, frames)
         per_term = u.groupBy("doc_id", "term").agg(
             F.max("tscore").alias("_mx"), F.sum("tscore").alias("_sm"))
@@ -1022,22 +1022,20 @@ class Searcher:
         dfs = self.term_dfs(terms)
         if len(dfs) < len(set(terms)):
             return self._empty_scores()
-        idf_sum = float(
-            sum(np.log(1.0 + (self.N - d + 0.5) / (d + 0.5)) for d in
-                (dfs[t] for t in terms))
-        )
+        idf_sum = sum(bm25_idf(self.N, [dfs[t] for t in terms]).tolist())
+        return self._phrase_scores(ptf, idf_sum, q.boost)
+
+    def _phrase_scores(self, ptf: DataFrame, idf_sum: float,
+                       boost: float) -> DataFrame:
+        """(doc_id, score) from per-doc phrase frequencies ``ptf``: BM25
+        with tf = ptf and the phrase's summed idf (Lucene PhraseQuery) —
+        the one phrase-BM25 formula of the exact, prefix and sloppy
+        phrase paths."""
         dl = self.index.docs(self.spark).select("doc_id", "dl")
-        return (
-            ptf.join(dl, "doc_id")
-            .withColumn(
-                "score",
-                F.expr(
-                    f"{q.boost} * CAST({idf_sum!r} AS DOUBLE) * ({self.k1} + 1.0) * ptf "
-                    f"/ (ptf + {self.k1} * (1.0 - {self.b} + {self.b} * dl / {self.avgdl}))"
-                ),
-            )
-            .select("doc_id", "score")
-        )
+        return ptf.join(dl, "doc_id").select("doc_id", F.expr(
+            f"{boost} * CAST({idf_sum!r} AS DOUBLE) * ({self.k1} + 1.0) * ptf "
+            f"/ (ptf + {self.k1} * (1.0 - {self.b} + {self.b} * dl / {self.avgdl}))"
+        ).alias("score"))
 
     # ---------- phrase-prefix / bool-prefix / span ----------
     def _phrase_prefix(self, q: Q.MatchPhrasePrefix) -> DataFrame:
@@ -1068,15 +1066,10 @@ class Searcher:
         dfs = self.term_dfs(fixed + exps)
         if any(t not in dfs for t in fixed):
             return self._empty_scores()
-        idf = lambda d: np.log(1.0 + (self.N - d + 0.5) / (d + 0.5))  # noqa: E731
-        idf_sum = float(sum(idf(dfs[t]) for t in fixed)
-                        + max(idf(dfs[t]) for t in exps if t in dfs))
-        dl = self.index.docs(self.spark).select("doc_id", "dl")
-        return (ptf.join(dl, "doc_id").withColumn(
-            "score",
-            F.expr(f"{q.boost} * CAST({idf_sum!r} AS DOUBLE) * ({self.k1} + 1.0) * ptf "
-                   f"/ (ptf + {self.k1} * (1.0 - {self.b} + {self.b} * dl / {self.avgdl}))"),
-        ).select("doc_id", "score"))
+        idf_sum = (sum(bm25_idf(self.N, [dfs[t] for t in fixed]).tolist())
+                   + max(bm25_idf(self.N, [dfs[t] for t in exps
+                                           if t in dfs]).tolist()))
+        return self._phrase_scores(ptf, idf_sum, q.boost)
 
     def _bool_prefix(self, q: Q.MatchBoolPrefix) -> DataFrame:
         """match_bool_prefix: BM25 should-sum over fixed terms + the last
@@ -1225,22 +1218,8 @@ class Searcher:
             return self._empty_scores()
         m = span_match_counts(self, terms, q.slop, True, sloppy_freq=True) \
             .withColumnRenamed("n_matches", "ptf")
-        idf_sum = float(
-            sum(np.log(1.0 + (self.N - d + 0.5) / (d + 0.5)) for d in
-                (dfs[t] for t in terms))
-        )
-        dl = self.index.docs(self.spark).select("doc_id", "dl")
-        return (
-            m.join(dl, "doc_id")
-            .withColumn(
-                "score",
-                F.expr(
-                    f"{q.boost} * CAST({idf_sum!r} AS DOUBLE) * ({self.k1} + 1.0) * ptf "
-                    f"/ (ptf + {self.k1} * (1.0 - {self.b} + {self.b} * dl / {self.avgdl}))"
-                ),
-            )
-            .select("doc_id", "score")
-        )
+        idf_sum = sum(bm25_idf(self.N, [dfs[t] for t in terms]).tolist())
+        return self._phrase_scores(m, idf_sum, q.boost)
 
     # ---------- alternative similarity: LMDirichlet ----------
     def score_lm_dirichlet(self, q: Q.Match, mu: float = 2000.0) -> DataFrame:
@@ -1537,13 +1516,19 @@ class Searcher:
     def search(self, q, k: int = 10, mode: str = "auto",
                round_scores: int | None = None, margin: int = 50) -> DataFrame:
         """Top-k (doc_id, score), ties broken by ascending doc_id (Lucene
-        behavior). ``round_scores`` rounds for oracle comparison; candidates
-        are over-fetched by ``margin`` then re-ranked on the rounded score so
-        rounding cannot flip the cut (see bench/oracle notes)."""
+        behavior). ``mode`` is ``auto`` (WAND for a top-level Match),
+        ``wand`` or ``exhaustive``. ``round_scores`` rounds for oracle
+        comparison; candidates are over-fetched by ``margin`` then re-ranked
+        on the rounded score so rounding cannot flip the cut (see
+        bench/oracle notes)."""
+        if mode not in ("auto", "wand", "exhaustive"):
+            raise ValueError(
+                f"unknown search mode {mode!r}; "
+                "expected 'auto', 'wand' or 'exhaustive'")
         # route whole-query extra-field searches (multi-field mapping) to
-        # that field's index — score() dispatches per leaf (line ~366), but
-        # the WAND fast path below would otherwise read this index's
-        # postings for a foreign field's terms
+        # that field's index — score() dispatches per leaf (its Match and
+        # Term branches), but the WAND fast path below would otherwise read
+        # this index's postings for a foreign field's terms
         qf = getattr(q, "field", None)
         if qf is not None and qf != self.field and qf in self.extra_fields:
             return self.extra_fields[qf].search(
@@ -1625,22 +1610,12 @@ class Searcher:
 
     def explain(self, q: Q.Match) -> DataFrame:
         """Per-hit score breakdown (TransportExplainAction analog): one row
-        per (doc, term) with idf / tf-part / norm components."""
+        per (doc, term) with idf / tf-part / norm components. ``tscore``
+        carries the query boost, so a doc's Σ tscore is its score."""
         terms = self.analyze(q.text, getattr(q, "analyzer", None))
         dfs = self.term_dfs(terms)
         live = [t for t in dict.fromkeys(terms) if t in dfs]
-        if not live:
-            return self.spark.createDataFrame(
-                [], "doc_id long, term string, idf double, tf long, dl long, tscore double")
-        flat = self._flat_postings(live)
-        stats = self.spark.createDataFrame(
-            [(t, dfs[t]) for t in live], "term string, df long")
-        return (
-            flat.join(F.broadcast(stats), "term")
-            .withColumn("idf", F.expr(f"ln(1.0 + ({self.N} - df + 0.5) / (df + 0.5))"))
-            .withColumn(
-                "tscore",
-                F.expr(self._bm25_sql()),
-            )
-            .select("doc_id", "term", "idf", "tf", "dl", "tscore")
-        )
+        return self._term_scores(live, dfs, q.boost).select(
+            "doc_id", "term",
+            F.expr(f"ln(1.0 + ({self.N} - df + 0.5) / (df + 0.5))").alias("idf"),
+            "tf", "dl", "tscore")

@@ -9,10 +9,15 @@ SIMD-friendly, see the ICDE'25 columnar-inverted-index paper in PAPERS.md):
 
 - postings are chunked into doc-id-range **buckets** (build-time), so every
   doc's postings for all query terms live in the same bucket;
-- per Spark task: iterate its buckets in descending score upper-bound,
-  maintaining the running top-k threshold θ;
-  - **bucket skip**: Σ_t max-impact-UB(t, bucket) < θ → skip whole bucket
-    (and for AND/msm: skip buckets missing required terms);
+- per Spark task, one loop: Arrow batches are buffered into **frames** of
+  at most ``MAX_BUFFER_ROWS`` block rows (whole buckets; a bucket split
+  across the cut is carried into the next frame). ``_score_frame`` computes
+  every bound of a frame once, then scores its buckets in descending
+  upper-bound order against the running top-k threshold θ, which carries
+  across frames:
+  - **bucket skip**: Σ_t max-impact-UB(t, bucket) < θ → skip the bucket and
+    every later one in the frame (and for AND/msm: skip buckets missing
+    required terms);
   - **block skip**: UB(block) + Σ_{t'≠t} UB(t', bucket) < θ → skip block;
   - surviving blocks: one batched decode (``codec.decode_blocks``) →
     per-posting scores → sort-by-doc + reduceat aggregation → merge into
@@ -45,6 +50,11 @@ from opensearch_spark.index.codec import decode_blocks
 #: floats — exactness (WAND ≡ exhaustive) is preserved, not weakened.
 UB_SLACK = 1.0 + 1e-12
 
+#: block rows buffered per task before a frame is scored — bounds per-task
+#: memory on hot terms over a huge corpus; each row carries ≤ block_size
+#: postings of varbyte
+MAX_BUFFER_ROWS = 250_000
+
 
 class _TopK:
     """Running top-k of (score desc, doc_id asc), numpy-based."""
@@ -73,64 +83,71 @@ class _TopK:
         self.docs, self.scores = d[order], s[order]
 
 
-def _score_bucket(
-    group: pd.DataFrame,
-    weights: np.ndarray,
-    k1: float,
-    b: float,
-    avgdl: float,
-    n_required: int,
-    theta: float,
-    tombstones: "np.ndarray | None" = None,
-):
-    """Exact per-doc scores for one bucket, with block-level skipping.
-
-    Returns (doc_ids, scores) or None if fully skipped.
-    """
-    tidx = group["term_idx"].to_numpy()
-    ub_rows = weights[tidx] * group["max_impact"].to_numpy()
-    # per-term max UB within bucket → bucket-level UB
-    n_terms = weights.size
-    term_ub = np.zeros(n_terms)
-    np.maximum.at(term_ub, tidx, ub_rows)
-    present = term_ub > 0
-    if int(present.sum()) < n_required:
-        return None  # bucket cannot satisfy AND/msm
-    bucket_ub = float(term_ub.sum())
-    if bucket_ub * UB_SLACK < theta:
-        return None
-    # block skip: ub(block) + (bucket_ub - term_ub[t]) < theta
-    keep = (ub_rows + (bucket_ub - term_ub[tidx])) * UB_SLACK >= theta
-    if not keep.any():
-        return None
-    g = group.loc[keep]
-    # liveDocs check at decode time (Lucene posture): dropping docs only
-    # lowers realized scores, so every skip bound stays strict
-    block, all_docs, tf, dl = decode_blocks(
-        g["first_doc"].to_numpy(), g["n"].to_numpy(), g["docs_vb"].to_numpy(),
-        g["tfs_vb"].to_numpy(), g["dls_vb"].to_numpy(), tombstones)
-    if not all_docs.size:
-        return None
-    tf = tf.astype(np.float64)
-    dl = dl.astype(np.float64)
-    w = weights[g["term_idx"].to_numpy()][block]
-    all_scores = w * (tf / (tf + k1 * (1.0 - b + b * dl / avgdl)))
-    order = np.argsort(all_docs, kind="stable")
-    all_docs, all_scores = all_docs[order], all_scores[order]
-    starts = np.flatnonzero(np.concatenate(([True], all_docs[1:] != all_docs[:-1])))
-    uniq_docs = all_docs[starts]
-    sums = np.add.reduceat(all_scores, starts)
-    if n_required > 1:
-        counts = np.diff(np.concatenate((starts, [all_docs.size])))
-        ok = counts >= n_required
-        uniq_docs, sums = uniq_docs[ok], sums[ok]
-    return uniq_docs, sums
+def _starts(*keys: np.ndarray) -> np.ndarray:
+    """Row indices where any of the sorted ``keys`` changes value."""
+    change = np.zeros(keys[0].size, dtype=bool)
+    change[0] = True
+    for key in keys:
+        change[1:] |= key[1:] != key[:-1]
+    return np.flatnonzero(change)
 
 
-#: rows of block metadata buffered per task before falling back to the
-#: streaming (bucket-at-a-time) path — bounds per-task memory on hot terms
-#: over a huge corpus; each row carries ≤ block_size postings of varbyte
-MAX_BUFFER_ROWS = 250_000
+def _score_frame(frame: pd.DataFrame, w: np.ndarray, k1: float, b: float,
+                 avgdl: float, n_required: int, topk: _TopK,
+                 tombstones: np.ndarray | None) -> None:
+    """Score every bucket of ``frame`` into ``topk``.
+
+    ``frame`` holds whole buckets, sorted by (bucket, term_idx) —
+    executor.py pins ``sortWithinPartitions`` before the mapInPandas — so
+    each (bucket, term) maximum is one ``maximum.reduceat`` and each bucket
+    bound one ``add.reduceat`` over those maxima."""
+    bucket = frame["bucket"].to_numpy()
+    tidx = frame["term_idx"].to_numpy()
+    ub_rows = w[tidx] * frame["max_impact"].to_numpy()
+    b_start = _starts(bucket)
+    b_end = np.append(b_start[1:], bucket.size)
+    seg_start = _starts(bucket, tidx)
+    seg_max = np.maximum.reduceat(ub_rows, seg_start)
+    b_seg = np.searchsorted(seg_start, b_start)
+    bucket_ub = np.add.reduceat(seg_max, b_seg)
+    n_present = np.add.reduceat((seg_max > 0).astype(np.int64), b_seg)
+    # block bound: own maximum + the other terms' maxima in its bucket
+    row_seg = np.searchsorted(seg_start, np.arange(bucket.size), "right") - 1
+    row_bucket = np.repeat(np.arange(b_start.size), b_end - b_start)
+    block_ub = (ub_rows + (bucket_ub[row_bucket] - seg_max[row_seg])) * UB_SLACK
+    bucket_ub *= UB_SLACK
+
+    first, ns = frame["first_doc"].to_numpy(), frame["n"].to_numpy()
+    docs_vb, tfs_vb, dls_vb = (frame[c].to_numpy()
+                               for c in ("docs_vb", "tfs_vb", "dls_vb"))
+    live = np.flatnonzero(n_present >= n_required)  # AND/msm bucket test
+    for i in live[np.argsort(-bucket_ub[live], kind="stable")]:
+        theta = topk.threshold
+        if bucket_ub[i] < theta:
+            break  # desc order: every later bucket is prunable too
+        s = int(b_start[i])
+        rows = s + np.flatnonzero(block_ub[s:b_end[i]] >= theta)
+        if not rows.size:
+            continue
+        # liveDocs check at decode time (Lucene posture): dropping docs
+        # only lowers realized scores, so every skip bound stays strict
+        block, docs, tf, dl = decode_blocks(
+            first[rows], ns[rows], docs_vb[rows], tfs_vb[rows], dls_vb[rows],
+            tombstones)
+        if not docs.size:
+            continue
+        tf = tf.astype(np.float64)
+        dl = dl.astype(np.float64)
+        scores = w[tidx[rows]][block] \
+            * (tf / (tf + k1 * (1.0 - b + b * dl / avgdl)))
+        order = np.argsort(docs, kind="stable")
+        docs, scores = docs[order], scores[order]
+        starts = _starts(docs)
+        uniq, sums = docs[starts], np.add.reduceat(scores, starts)
+        if n_required > 1:
+            ok = np.diff(np.append(starts, docs.size)) >= n_required
+            uniq, sums = uniq[ok], sums[ok]
+        topk.merge(uniq, sums)
 
 
 def wand_partition_fn(
@@ -140,110 +157,49 @@ def wand_partition_fn(
     b: float,
     avgdl: float,
     n_required: int,
-    max_buffer_rows: int | None = None,
     tombstones=None,
 ):
-    """Build the mapInPandas function: block rows (sorted by bucket within
-    the partition) → this partition's top-k.
+    """Build the mapInPandas function: block rows (sorted by bucket, then
+    term_idx, within the partition) → this partition's top-k.
 
     ``tombstones`` is a sorted int64 ndarray, a Spark Broadcast wrapping
     one (resolved executor-side, so the task closure carries only the
     handle), or None.
 
-    Fast path (partition fits ``max_buffer_rows``): buffer the partition,
-    compute bucket upper bounds, process buckets in descending-UB order —
-    θ rises fast and once a bucket's UB drops below θ every remaining
-    bucket is prunable (break). Fallback (hot-term partitions beyond the
-    cap): stream Arrow batches bucket-at-a-time in storage order,
-    stitching buckets split across batch boundaries — identical results
-    (the skip bounds are strict either way), bounded memory, only the
-    pruning order degrades."""
+    One loop: Arrow batches are buffered; whenever the buffer passes
+    ``MAX_BUFFER_ROWS`` rows, its complete buckets go to ``_score_frame``
+    as one frame and the last, possibly partial, bucket is carried into the
+    next. A partition under the cap is one frame; over it, each frame is
+    scored in its own descending-bound order with θ carried across frames.
+    Results are identical either way (the skip bounds are strict); only
+    the pruning power depends on the frame size."""
     w = np.asarray(weights, dtype=np.float64)
-    cap = MAX_BUFFER_ROWS if max_buffer_rows is None else max_buffer_rows
-
-    def process_frame(pdf: pd.DataFrame, topk: _TopK, ordered: bool,
-                      tomb=None) -> None:
-        """Score every complete bucket group of ``pdf`` (desc-UB order when
-        ``ordered``, storage order otherwise)."""
-        buckets = pdf["bucket"].to_numpy()
-        tidx = pdf["term_idx"].to_numpy()
-        ub_rows = w[tidx] * pdf["max_impact"].to_numpy()
-        starts = np.flatnonzero(
-            np.concatenate(([True], buckets[1:] != buckets[:-1])))
-        ends = np.concatenate((starts[1:], [len(pdf)]))
-        # rows arrive sorted by (bucket, term_idx) — executor.py pins
-        # sortWithinPartitions before the mapInPandas — so per-(bucket,
-        # term) maxima are one maximum.reduceat at the segment starts
-        # and bucket UBs one add.reduceat over those maxima (was: a
-        # Python loop allocating an n_terms array + maximum.at per
-        # bucket, the task hot path at 10^4+ buckets/partition)
-        seg_starts = np.flatnonzero(np.concatenate(
-            ([True], (buckets[1:] != buckets[:-1])
-             | (tidx[1:] != tidx[:-1]))))
-        seg_max = np.maximum.reduceat(ub_rows, seg_starts)
-        seg_bucket_starts = np.flatnonzero(np.concatenate(
-            ([True], buckets[seg_starts][1:] != buckets[seg_starts][:-1])))
-        bucket_ubs = np.add.reduceat(seg_max, seg_bucket_starts) * UB_SLACK
-        order = np.argsort(-bucket_ubs, kind="stable") if ordered \
-            else np.arange(starts.size)
-        for i in order:
-            if bucket_ubs[i] < topk.threshold:
-                if ordered:
-                    break  # desc order: everything after is prunable too
-                continue
-            s, e = int(starts[i]), int(ends[i])
-            res = _score_bucket(
-                pdf.iloc[s:e], w, k1, b, avgdl, n_required, topk.threshold,
-                tomb)
-            if res is not None:
-                topk.merge(*res)
-
-    def split_last_bucket(pdf: pd.DataFrame):
-        """(complete-buckets frame | None, last-bucket carry frame)."""
-        buckets = pdf["bucket"].to_numpy()
-        last_start = int(np.flatnonzero(
-            np.concatenate(([True], buckets[1:] != buckets[:-1])))[-1])
-        if last_start == 0:
-            return None, pdf
-        return pdf.iloc[:last_start], pdf.iloc[last_start:].reset_index(drop=True)
+    cap = MAX_BUFFER_ROWS
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Broadcast → resolve ONCE per task, executor-side, into a local
-        # passed explicitly to process_frame (closure-cell sharing between
-        # sibling inner functions does not survive worker pickling, so a
-        # nonlocal rebind here would not reach process_frame's cell)
+        # Broadcast → resolve ONCE per task, executor-side
         tomb = tombstones.value if hasattr(tombstones, "value") \
             else tombstones
         topk = _TopK(k)
         buf: list[pd.DataFrame] = []
         total = 0
-        carry: pd.DataFrame | None = None
-        streaming = False
         for pdf in batches:
             if not len(pdf):
                 continue
-            if not streaming:
-                buf.append(pdf)
-                total += len(pdf)
-                if total > cap:
-                    streaming = True
-                    frame = pd.concat(buf, ignore_index=True)
-                    buf = []
-                    done, carry = split_last_bucket(frame)
-                    if done is not None:
-                        process_frame(done, topk, ordered=False, tomb=tomb)
-            else:
-                frame = (pd.concat([carry, pdf], ignore_index=True)
-                         if carry is not None and len(carry) else pdf)
-                done, carry = split_last_bucket(frame)
-                if done is not None:
-                    process_frame(done, topk, ordered=False, tomb=tomb)
-        if streaming:
-            if carry is not None and len(carry):
-                process_frame(carry, topk, ordered=False, tomb=tomb)
-        elif buf:
+            buf.append(pdf)
+            total += len(pdf)
+            if total <= cap:
+                continue
+            frame = pd.concat(buf, ignore_index=True)
+            bucket = frame["bucket"].to_numpy()
+            cut = int(np.searchsorted(bucket, bucket[-1]))
+            if cut:
+                _score_frame(frame.iloc[:cut], w, k1, b, avgdl, n_required,
+                             topk, tomb)
+            buf, total = [frame.iloc[cut:]], len(frame) - cut
+        if buf:
             frame = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            process_frame(frame, topk, ordered=True, tomb=tomb)
+            _score_frame(frame, w, k1, b, avgdl, n_required, topk, tomb)
         yield pd.DataFrame({"doc_id": topk.docs, "score": topk.scores})
 
     return run

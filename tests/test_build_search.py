@@ -179,6 +179,23 @@ def test_explain_components(searcher):
     assert r["idf"] == pytest.approx(want, abs=1e-12)
 
 
+def test_explain_boosted_sums_to_score(searcher):
+    """explain's tscore carries the query boost: for a boosted Match each
+    doc's Σ tscore equals its score(q) row."""
+    q = Match(field="text", text="spark table", boost=2.0)
+    ex = searcher.explain(q).groupBy("doc_id").agg(F.sum("tscore").alias("s"))
+    got = {r["doc_id"]: r["s"] for r in ex.collect()}
+    want = {r["doc_id"]: r["score"] for r in searcher.score(q).collect()}
+    assert got.keys() == want.keys() and want
+    for d, sc in want.items():
+        assert got[d] == pytest.approx(sc, rel=1e-12)
+
+
+def test_search_rejects_unknown_mode(searcher):
+    with pytest.raises(ValueError, match="exhaustve"):
+        searcher.search(Match(field="text", text="spark"), mode="exhaustve")
+
+
 def test_micro_corpus_hand_scores(spark, tmp_path):
     """FIXTURES.md §5-style: 5 docs, hand-computed BM25 (exact mode)."""
     rows = [

@@ -378,11 +378,12 @@ def test_kmeanspp_deterministic(spark, sf_dir):
     assert len(a) == 4 and len({tuple(c) for c in a}) == 4
 
 
-# ---------------- WAND streaming fallback ----------------
+# ---------------- WAND over the buffer cap ----------------
 def test_wand_streaming_fallback_identical(searcher, monkeypatch):
-    """With the buffer cap forced tiny, every partition takes the
-    streaming bucket-at-a-time path — results must still equal the
-    exhaustive oracle (strict bounds prune identically)."""
+    """With the buffer cap forced tiny, every partition is scored as many
+    frames (each its complete buckets, θ carried across frames) — results
+    must still equal the exhaustive oracle (strict bounds prune
+    identically)."""
     from opensearch_spark.search import wand as wand_mod
 
     q = Q.Match(field="text", text="spark table merge")
