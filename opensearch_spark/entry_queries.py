@@ -25,6 +25,8 @@ from opensearch_spark.search import (
     Prefix, Range, Regexp, Searcher, SpanNear, Term, Terms, TermsSet, Wildcard,
     highlight_field, parse_query_string, rank_metrics, term_suggest, with_ranks,
 )
+from opensearch_spark.search.fetchphase import (
+    fetch_fields, field_mapping, script_fields, source_filter)
 
 _INDEX_CACHE: dict[str, Searcher] = {}
 INDEX_ROOT = os.environ.get("SPARK_GRAFT_INDEX_DIR", "/tmp/opensearch_spark_indexes")
@@ -1935,7 +1937,7 @@ def search_highlight(spark, sf_dir):
     terms = s.analyze("spark merge")
     hits = s.search(Match(field="text", text="spark merge"),
                     k=5, mode="exhaustive", round_scores=4)
-    fetched = s.fetch(hits, columns=["text"])
+    fetched = source_filter(s.index.docs(spark), hits, includes=["text"])
     return (highlight_field(fetched, "text", terms)
             .select("doc_id", "score", "highlight").orderBy("doc_id"))
 
@@ -2057,7 +2059,8 @@ def search_fetch(spark, sf_dir):
     s = get_searcher(spark, sf_dir)
     hits = s.search(Match(field="text", text="spark vector"),
                     k=3, mode="exhaustive", round_scores=4)
-    return s.fetch(hits, columns=["lang", "source"]).orderBy("doc_id")
+    return source_filter(s.index.docs(spark), hits,
+                         includes=["lang", "source"]).orderBy("doc_id")
 
 
 @q("search_fetch_fields", f"""
@@ -2082,14 +2085,14 @@ def search_fetch_fields(spark, sf_dir):
     resolved projection is exactly the fetch scan's ReadSchema; the date
     column is the derived calendar-day ``ts`` (geo/ip-family trick), so
     formatting is session-timezone-invariant."""
-    from opensearch_spark.search.fetchphase import fetch_fields
-
     s = get_searcher(spark, sf_dir)
     hits = s.search(Match(field="text", text="spark vector"), k=5,
                     mode="exhaustive", round_scores=4)
+    docs = s.index.docs(spark)
     return fetch_fields(
-        s.index.docs(spark), hits,
+        docs, hits,
         ["lang", "n_*", {"field": "ts", "format": "yyyy/MM/dd"}],
+        field_mapping(docs, (s.field, *s.extra_fields)),
     ).orderBy("doc_id")
 
 
@@ -2114,15 +2117,14 @@ def search_docvalue_fields(spark, sf_dir):
     values), a wildcard silently skips text. Doc values ARE the columnar
     layout here, so the phase is the same pruned broadcast-join
     projection with per-field date formatting."""
-    from opensearch_spark.search.fetchphase import fetch_fields
-
     s = get_searcher(spark, sf_dir)
     hits = s.search(Match(field="text", text="merge table"), k=5,
                     mode="exhaustive", round_scores=4)
+    docs = s.index.docs(spark)
     return fetch_fields(
-        s.index.docs(spark), hits,
+        docs, hits,
         ["source", "n_chars", {"field": "ts", "format": "yyyy-MM-dd"}],
-        docvalues=True,
+        field_mapping(docs, (s.field, *s.extra_fields)), docvalues=True,
     ).orderBy("doc_id")
 
 
@@ -2145,8 +2147,6 @@ def search_source_filter(spark, sf_dir):
     exclude patterns veto — excludes win on overlap. Re-expressed as
     pure column pruning: the filtered-out columns (here ``text`` — the
     wide one — and ``n_chars``) never leave the parquet reader."""
-    from opensearch_spark.search.fetchphase import source_filter
-
     s = get_searcher(spark, sf_dir)
     hits = s.search(Match(field="text", text="window table"), k=5,
                     mode="exhaustive", round_scores=4)
@@ -2173,8 +2173,6 @@ def search_script_fields(spark, sf_dir):
     fetched hit. Each script compiles through the Painless subset
     compiler (search/painless.py) into a Catalyst projection over the
     joined top-k — per-hit scripting with zero Python in the loop."""
-    from opensearch_spark.search.fetchphase import script_fields
-
     s = get_searcher(spark, sf_dir)
     hits = s.search(Match(field="text", text="table"), k=10,
                     mode="exhaustive", round_scores=4)

@@ -34,6 +34,7 @@ from opensearch_spark.analysis import tokenize
 from opensearch_spark.index.build import InvertedIndex
 from opensearch_spark.scoring.bm25 import bm25_idf
 from opensearch_spark.search import queries as Q
+from opensearch_spark.search.fetchphase import source_filter
 
 SCORE_COLS = ("doc_id", "score")
 
@@ -1563,13 +1564,6 @@ class Searcher:
             top = top.limit(k)
         return top
 
-    def fetch(self, hits: DataFrame, columns: list[str] | None = None) -> DataFrame:
-        """Fetch phase (FetchPhase.java analog): broadcast-join the tiny
-        top-k frame back to the docs table for stored fields."""
-        docs = self.index.docs(self.spark)
-        cols = columns or [c for c in docs.columns if c not in ("doc_id",)]
-        return F.broadcast(hits).join(docs.select("doc_id", *cols), "doc_id")
-
     def profile(self, q, k: int = 10, mode: str = "auto") -> DataFrame:
         """``_search?profile=true`` analog (search/profile/query/
         QueryProfiler.java): per-phase timing breakdown of one search.
@@ -1599,8 +1593,8 @@ class Searcher:
         rows.append(("execute", (t3 - t2) * 1000.0,
                      f"{len(collected)} hits (mode={mode})"))
         if collected:
-            self.fetch(
-                self.spark.createDataFrame(collected, hits.schema)).collect()
+            source_filter(self.index.docs(self.spark), self.spark
+                          .createDataFrame(collected, hits.schema)).collect()
         t4 = _time.perf_counter()
         rows.append(("fetch", (t4 - t3) * 1000.0, f"{len(collected)} docs"))
         rows.append(("total", (t4 - t0) * 1000.0, type(q).__name__))

@@ -10,17 +10,16 @@ FieldFetcher.java: wildcard patterns resolved against the mapping, date
 fields rendered through the requested format), and ScriptFieldsPhase
 (``script_fields`` — ScriptFieldsPhase.java: one scripted value per hit).
 
-Spark-first re-expression: every sub-phase is column pruning + Catalyst
-expressions over the *bounded* top-k frame broadcast-joined back to the
-docs table — the same second-round-trip shape as ``Searcher.fetch``. No
-phase ever touches unfetched rows; wildcard resolution happens driver-side
-against the schema (it is mapping metadata, not data), so the projected
-column set reaches the parquet scan (ReadSchema pruning). Scripted fields
-compile through the Painless subset compiler (search/painless.py) into
-whole-stage codegen — never Python.
+Spark-first re-expression: the sub-phases resolve driver-side into ONE
+projection (each name once) over ONE broadcast join of the *bounded* page
+onto the docs table, so the projected columns reach the parquet scan
+(ReadSchema pruning). Scripted fields compile through the Painless subset
+compiler (search/painless.py) into whole-stage codegen — never Python.
+The mapping comes from the index's own docs schema (``field_mapping``):
+``_source`` sees the stored columns, ``fields`` the derived ones too.
 
-The corpus has no date column, so — exactly like the geo/ip families — a
-deterministic ``ts`` DATE is derived from doc_id (calendar-day arithmetic,
+When the docs table has no ``ts`` of its own, a deterministic ``ts`` DATE
+is derived from doc_id like the geo/ip families (calendar-day arithmetic,
 timezone-free by construction); the DuckDB oracles inline the identical
 expression, making the derivation part of the gated contract.
 """
@@ -30,6 +29,7 @@ from __future__ import annotations
 from fnmatch import fnmatchcase
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import IntegralType
 
 from opensearch_spark.search.painless import painless_to_sql
 
@@ -38,147 +38,165 @@ from opensearch_spark.search.painless import painless_to_sql
 TS_SPARK_SQL = "date_add(date'2024-01-01', cast(doc_id % 365 as int))"
 TS_DUCK_SQL = "(DATE '2024-01-01' + CAST(doc_id % 365 AS INT))"
 
-# mapping metadata for the docs table (IpFieldMapper-style field types);
-# ``text``/``title`` are analyzed text: no doc values in the reference
-FIELD_TYPES = {
-    "doc_id": "long",
-    "text": "text",
-    "title": "text",
-    "lang": "keyword",
-    "source": "keyword",
-    "n_chars": "long",
-    "dl": "long",
-    "content_sha256": "keyword",
-    "ts": "date",
-}
 _INTERNAL = {"dl", "content_sha256"}  # engine columns, not user fields
 
 
 def with_derived(docs: DataFrame) -> DataFrame:
-    """Attach the derived ``ts`` date column (the geo/ip-family trick)."""
-    return docs.withColumn("ts", F.expr(TS_SPARK_SQL))
+    """Attach the derived ``ts`` date column (the geo/ip-family trick)
+    unless the docs table stores a ``ts`` of its own."""
+    return docs if "ts" in docs.columns \
+        else docs.withColumn("ts", F.expr(TS_SPARK_SQL))
 
 
-def resolve_patterns(patterns: list[str], *, docvalues: bool = False) -> list[str]:
+def field_mapping(docs: DataFrame, text_fields) -> dict[str, str]:
+    """Field name → type for the docs table (plus the derived ``ts``),
+    from its own schema. ``text_fields`` are the searcher's analyzed
+    fields (``Searcher.field`` and its ``extra_fields``)."""
+    out = {}
+    for f in docs.schema.fields:
+        if f.name in _INTERNAL:
+            continue
+        kind = f.dataType.simpleString()
+        if kind == "string":
+            kind = "text" if f.name in text_fields else "keyword"
+        elif kind in ("date", "timestamp", "timestamp_ntz"):
+            kind = "date"
+        elif isinstance(f.dataType, IntegralType):
+            kind = "long"
+        out[f.name] = kind
+    out.setdefault("ts", "date")  # what with_derived adds
+    return out
+
+
+def resolve_patterns(patterns: list[str], mapping: dict[str, str], *,
+                     docvalues: bool = False) -> list[str]:
     """Resolve field patterns against the mapping, preserving request
     order and de-duplicating (FieldFetcher.create). Unmapped patterns
     resolve to nothing — the reference skips them silently. With
     ``docvalues=True`` an *explicit* text field raises like
-    FetchDocValuesPhase ("no doc values for text"); a wildcard simply
-    skips text fields."""
-    fields = [f for f in FIELD_TYPES if f not in _INTERNAL]
+    FetchDocValuesPhase; a wildcard simply skips text fields."""
     out: list[str] = []
     for pat in patterns:
         if any(ch in pat for ch in "*?["):
-            hits = [f for f in fields if fnmatchcase(f, pat)]
+            hits = [f for f in mapping if fnmatchcase(f, pat)]
             if docvalues:
-                hits = [f for f in hits if FIELD_TYPES[f] != "text"]
+                hits = [f for f in hits if mapping[f] != "text"]
         else:
-            hits = [pat] if pat in fields else []
-            if docvalues and hits and FIELD_TYPES[pat] == "text":
+            hits = [pat] if pat in mapping else []
+            if docvalues and hits and mapping[pat] == "text":
                 raise ValueError(
-                    f"cannot load doc values on text field [{pat}]: "
-                    "text fields are not stored as doc values "
-                    "(FetchDocValuesPhase)")
+                    f"cannot load doc values on text field [{pat}]: text "
+                    "fields have no doc values (FetchDocValuesPhase)")
         for f in hits:
             if f not in out:
                 out.append(f)
     return out
 
 
-def _format_col(field: str, fmt: str | None) -> Column:
-    """Render one field, applying a date format where requested
-    (FieldFetcher uses the mapper's DocValueFormat; format on a non-date
-    field is a 400 in the reference)."""
-    col = F.col(field)
-    if fmt is None:
-        return col
-    if FIELD_TYPES[field] != "date":
-        raise ValueError(
-            f"field [{field}] of type [{FIELD_TYPES[field]}] does not "
-            "support custom formats (FieldFetcher)")
-    return F.date_format(col, fmt)
+def _source_columns(stored: list[str], src) -> dict:
+    """``_source`` (true, a pattern, a list, or {includes, excludes}) over
+    the stored columns (FetchSourceContext.filter): include patterns
+    select, exclude patterns veto — excludes win on overlap."""
+    if src is None or src is False:
+        return {}
+    if not isinstance(src, dict):
+        src = {"includes": ["*"] if src is True
+               else [src] if isinstance(src, str) else src}
+    inc, exc = src.get("includes") or ["*"], src.get("excludes") or []
+    return {f: F.col(f) for f in stored
+            if f not in _INTERNAL and f != "doc_id"
+            and any(fnmatchcase(f, p) for p in inc)
+            and not any(fnmatchcase(f, p) for p in exc)}
 
 
-def _norm_specs(specs: list) -> list[tuple[str, str | None]]:
-    """``fields``/``docvalue_fields`` accept bare strings or
-    {"field": ..., "format": ...} objects (SearchSourceBuilder)."""
-    out = []
-    for s in specs:
-        if isinstance(s, str):
-            out.append((s, None))
-        else:
-            out.append((s["field"], s.get("format")))
-    return out
+def _add_fields(cols: dict, mapping: dict[str, str], specs: list,
+                docvalues: bool) -> dict:
+    """``fields``/``docvalue_fields`` (bare names or {"field", "format"}
+    objects, SearchSourceBuilder) into the projection: a plain name never
+    displaces an earlier entry; a date format re-renders it (FieldFetcher
+    uses the mapper's DocValueFormat; a format on a non-date field is a
+    400 in the reference)."""
+    for spec in specs:
+        pat, fmt = (spec, None) if isinstance(spec, str) \
+            else (spec["field"], spec.get("format"))
+        for f in resolve_patterns([pat], mapping, docvalues=docvalues):
+            if fmt is None:
+                cols.setdefault(f, F.col(f))
+            elif mapping[f] != "date":
+                raise ValueError(
+                    f"field [{f}] of type [{mapping[f]}] does not "
+                    "support custom formats (FieldFetcher)")
+            else:
+                cols[f] = F.date_format(f, fmt)
+    return cols
 
 
-def fetch_fields(docs: DataFrame, hits: DataFrame, specs: list,
-                 *, docvalues: bool = False) -> DataFrame:
-    """``fields`` (or ``docvalue_fields``) over the top-k frame: broadcast
-    the bounded hits onto the docs table projecting exactly the resolved
-    columns — the projection reaches the scan's ReadSchema."""
+def _script_columns(scripts: dict[str, dict]) -> dict:
+    """``script_fields``: each {name: {script: {source, params}}} entry
+    compiles through the Painless subset compiler to one Catalyst
+    expression (ScriptFieldsPhase runs the script per fetched doc)."""
+    cols = {}
+    for name, spec in scripts.items():
+        script = spec.get("script", spec)
+        cols[name] = F.expr(painless_to_sql(script["source"],
+                                            script.get("params")))
+    return cols
+
+
+def fetch_columns(stored: list[str], mapping: dict[str, str],
+                  body: dict) -> dict[str, Column]:
+    """The one projection of a request body's ``_source``, ``fields`` and
+    ``script_fields``, in that order, each name once."""
+    cols = _source_columns(stored, body.get("_source"))
+    _add_fields(cols, mapping, body.get("fields", []), False)
+    cols.update(_script_columns(body.get("script_fields", {})))
+    return cols
+
+
+def join_page(docs: DataFrame, page: DataFrame) -> DataFrame:
+    """The one fetch join: the bounded page broadcast onto the docs table
+    (plus the derived ``ts``). Docs columns the page already carries (a
+    sort key) are dropped, so every name appears once."""
     docs = with_derived(docs)
-    cols: list[Column] = []
-    # doc_id is the join key; any column already on the hit frame (a
-    # prior _source phase, a sort key) must not be emitted twice
-    seen: set[str] = set(hits.columns)
-    overrides: list[tuple[str, str]] = []
-    for pat, fmt in _norm_specs(specs):
-        for f in resolve_patterns([pat], docvalues=docvalues):
-            if f == "doc_id":
-                continue
-            if f in seen:
-                # already on the hit frame (a sort key, a prior phase):
-                # don't emit twice, but DO honor a requested date format
-                # by re-rendering the existing column in place
-                if fmt is not None:
-                    overrides.append((f, fmt))
-                continue
-            seen.add(f)
-            cols.append(_format_col(f, fmt).alias(f))
-    out = F.broadcast(hits).join(docs.select("doc_id", *cols), "doc_id")
-    for f, fmt in overrides:
-        out = out.withColumn(f, _format_col(f, fmt))
-    return out
+    dup = [c for c in page.columns if c != "doc_id" and c in docs.columns]
+    return F.broadcast(page).join(docs.drop(*dup), "doc_id")
+
+
+def select_fetched(joined: DataFrame, page_columns: list[str],
+                   cols: dict[str, Column]) -> DataFrame:
+    """Project the joined page: its own columns first (re-rendered in
+    place where ``cols`` names them), then the fetched ones."""
+    cols = dict(cols)
+    keep = [cols.pop(c).alias(c) if c in cols else F.col(c)
+            for c in page_columns]
+    return joined.select(*keep, *[c.alias(n) for n, c in cols.items()])
+
+
+def _fetch(docs: DataFrame, hits: DataFrame, cols: dict) -> DataFrame:
+    return select_fetched(join_page(docs, hits), hits.columns, cols)
 
 
 def source_filter(docs: DataFrame, hits: DataFrame,
                   includes: list[str] | None = None,
                   excludes: list[str] | None = None) -> DataFrame:
-    """``_source`` filtering (FetchSourceContext.filter): include
-    patterns select, exclude patterns veto — excludes win on overlap.
-    Source filtering is pure column pruning here: the unselected columns
-    never leave the parquet reader."""
-    fields = [f for f in FIELD_TYPES if f not in _INTERNAL and f != "ts"]
-    inc = includes if includes else ["*"]
-    keep = [f for f in fields
-            if any(fnmatchcase(f, p) for p in inc)
-            and not any(fnmatchcase(f, p) for p in (excludes or []))]
-    keep = [f for f in keep if f != "doc_id"]
-    return F.broadcast(hits).join(docs.select("doc_id", *keep), "doc_id")
+    """``_source`` filtering over the hit frame: pure column pruning, the
+    unselected columns never leave the parquet reader."""
+    return _fetch(docs, hits, _source_columns(
+        docs.columns, {"includes": includes, "excludes": excludes}))
+
+
+def fetch_fields(docs: DataFrame, hits: DataFrame, specs: list,
+                 mapping: dict[str, str], *,
+                 docvalues: bool = False) -> DataFrame:
+    """``fields`` (or ``docvalue_fields``) over the hit frame, resolved
+    against ``mapping`` (``field_mapping`` of the docs table)."""
+    return _fetch(docs, hits, _add_fields({}, mapping, specs, docvalues))
 
 
 def script_fields(docs: DataFrame, hits: DataFrame,
                   scripts: dict[str, dict]) -> DataFrame:
-    """``script_fields``: each entry {name: {script: {source, params}}}
-    compiles through the Painless subset compiler to one Catalyst
-    expression per hit (ScriptFieldsPhase runs the script per fetched
-    doc; here it is a codegen projection over the joined top-k)."""
-    docs = with_derived(docs)
-    # hit frames may already carry doc columns (a prior _source phase):
-    # drop the docs-side duplicates so references stay unambiguous — the
-    # surviving hits-side copy holds the identical value
-    dup = [c for c in docs.columns
-           if c != "doc_id" and c in set(hits.columns)]
-    if dup:
-        docs = docs.drop(*dup)
-    cols = []
-    for name, spec in scripts.items():
-        script = spec.get("script", spec)
-        sql = painless_to_sql(script["source"], script.get("params"))
-        cols.append(F.expr(sql).alias(name))
-    joined = F.broadcast(hits).join(docs, "doc_id")
-    return joined.select(*[F.col(c) for c in hits.columns], *cols)
+    """``script_fields`` over the hit frame."""
+    return _fetch(docs, hits, _script_columns(scripts))
 
 
 def apply_indices_boost(legs: dict[str, DataFrame],

@@ -16,9 +16,9 @@ single Catalyst plan:
 - ``from``/``size``    → offset + limit over the bounded ordered frame
 - ``search_after``     → keyset predicate on the sort keys (no deep
                          from+size scan — the scale-correct cursor)
-- ``_source``          → fetchphase.source_filter (pure column pruning)
-- ``fields``           → fetchphase.fetch_fields (wildcards + date fmt)
-- ``script_fields``    → fetchphase.script_fields (Painless → Catalyst)
+- ``_source``          → stored columns by include/exclude pattern
+- ``fields``           → mapped columns by pattern (wildcards + date fmt)
+- ``script_fields``    → Painless → Catalyst expressions
 - ``derived``          → derivedfields.with_derived_fields (sortable /
                          aggregatable query-time scripted columns)
 - ``min_score``        → post-score filter
@@ -29,8 +29,11 @@ single Catalyst plan:
 Unsupported body keys raise NotImplementedError naming the dedicated
 module (highlight/suggest/rescore/collapse each have their own gated
 API) — explicit, never silently ignored. Everything composes into ONE
-plan: the query's bounded top-k broadcast-joins the docs table once, so
-a full-body request costs the same as its bare query at any corpus size.
+plan: the query's bounded page broadcast-joins the docs table once for
+one projection (fetchphase.fetch_columns), so a full-body request costs
+the same as its bare query at any corpus size. One order list (the sort
+spec or ``score desc``, then ``doc_id``) cuts the page and re-orders it
+after the join, so the hits come back in rank order.
 """
 
 from __future__ import annotations
@@ -208,14 +211,16 @@ def execute_search_request(s, body: dict, *,
     size = int(body.get("size", 10))
     offset = int(body.get("from", 0))
 
-    def _min_score_ids():
-        """matching ids AFTER the min_score filter (the reference applies
-        min_score in the collector chain, before counting/aggregating)."""
+    def _scores():
+        """every match's score, rounded like the hits and min_score-
+        filtered (the reference applies min_score in the collector
+        chain, before counting, aggregating or sorting)."""
         m = s.score(ast)
         if round_scores is not None:
             m = m.withColumn("score", F.round("score", round_scores))
-        return (m.where(F.col("score") >= float(body["min_score"]))
-                .select("doc_id"))
+        if "min_score" in body:
+            m = m.where(F.col("score") >= float(body["min_score"]))
+        return m
 
     total = None
     if "track_total_hits" in body:
@@ -225,17 +230,18 @@ def execute_search_request(s, body: dict, *,
                 "track_total_hits with aggs: one frame can't carry both "
                 "shapes — run api_track_total_hits / the aggs body "
                 "separately")
-        base_ids = _min_score_ids() if "min_score" in body \
+        base_ids = _scores().select("doc_id") if "min_score" in body \
             else s.matching_docs(ast)
         total = track_total_hits(base_ids, body["track_total_hits"])
         if size == 0:  # count-only request: the total IS the response
             return s.spark.createDataFrame(
                 [total], "total_hits long, total_relation string")
 
-    docs = s.index.docs(s.spark)
+    stored = s.index.docs(s.spark)
+    docs = stored
     if "derived" in body:
         from opensearch_spark.search.derivedfields import with_derived_fields
-        docs = with_derived_fields(docs, body["derived"])
+        docs = with_derived_fields(stored, body["derived"])
 
     aggs = body.get("aggs", body.get("aggregations"))
     if aggs:
@@ -246,7 +252,7 @@ def execute_search_request(s, body: dict, *,
             raise NotImplementedError(
                 "aggs with a non-zero size: run the hits request and the "
                 "aggs request as two bodies")
-        matching = _min_score_ids() if "min_score" in body \
+        matching = _scores().select("doc_id") if "min_score" in body \
             else s.matching_docs(ast)
         return _compile_aggs(matching, docs, aggs)
 
@@ -255,20 +261,12 @@ def execute_search_request(s, body: dict, *,
     if spec != [("_score", False)]:
         # generic sort path: any field order, _score at any position or
         # direction (SortBuilder list semantics)
-        need_score = ("min_score" in body
-                      or any(f == "_score" for f, _ in spec))
-        cols = [f for f, _ in spec if f != "_score"]
-        if need_score:
-            base = s.score(ast).withColumnRenamed("score", "_score")
-            if round_scores is not None:
-                base = base.withColumn(
-                    "_score", F.round(F.col("_score"), round_scores))
-            if "min_score" in body:
-                base = base.where(
-                    F.col("_score") >= float(body["min_score"]))
+        if "min_score" in body or any(f == "_score" for f, _ in spec):
+            base = _scores().withColumnRenamed("score", "_score")
         else:
             base = s.matching_docs(ast)
-        hits = base.join(docs.select("doc_id", *cols), "doc_id")
+        keys = [f for f, _ in spec if f != "_score"]
+        hits = base.join(docs.select("doc_id", *keys), "doc_id")
         order = [F.asc(f) if asc else F.desc(f) for f, asc in spec]
         order.append(F.asc("doc_id"))  # stable tiebreak (shard doc order)
         if "search_after" in body:
@@ -301,7 +299,6 @@ def execute_search_request(s, body: dict, *,
                         strict = strict | k.isNull()
                     pred = strict | (k.eqNullSafe(F.lit(v)) & pred)
             hits = hits.where(pred)
-        hits = hits.orderBy(*order)
     else:
         if "search_after" in body:
             raise NotImplementedError(
@@ -310,35 +307,24 @@ def execute_search_request(s, body: dict, *,
         hits = s.search(ast, k=offset + size, round_scores=round_scores)
         if "min_score" in body:
             hits = hits.where(F.col("score") >= float(body["min_score"]))
-        hits = hits.orderBy(F.desc("score"), F.asc("doc_id"))
+        order = [F.desc("score"), F.asc("doc_id")]
 
-    page = hits.offset(offset).limit(size) if offset else hits.limit(size)
+    hits = hits.orderBy(*order)
+    out = hits.offset(offset).limit(size) if offset else hits.limit(size)
 
-    # fetch sub-phases over the bounded page (broadcast joins)
+    # fetch sub-phases: one projection over one broadcast join of the
+    # bounded page, re-ordered by rank (a TakeOrderedAndProject)
     from opensearch_spark.search import fetchphase
 
-    out = page
-    src = body.get("_source")
-    if isinstance(src, dict):
-        out = fetchphase.source_filter(
-            docs, out, includes=src.get("includes"),
-            excludes=src.get("excludes"))
-    elif isinstance(src, str):
-        # single-pattern string form ("_source": "lang*") — previously
-        # fell through silently (round-4 review)
-        out = fetchphase.source_filter(docs, out, includes=[src])
-    elif isinstance(src, list):
-        out = fetchphase.source_filter(docs, out, includes=src)
-    elif src is True:
-        # full source: every doc column (the REST default when hits
-        # carry _source; the bare-hits DataFrame shape needs the ask)
-        out = fetchphase.source_filter(docs, out, includes=["*"])
-    # src False / absent: no source columns — the bare hits frame
-    if "fields" in body:
-        out = fetchphase.fetch_fields(docs, out, body["fields"])
-    if "script_fields" in body:
-        out = fetchphase.script_fields(docs, out, body["script_fields"])
+    cols = fetchphase.fetch_columns(
+        stored.columns,
+        fetchphase.field_mapping(docs, (s.field, *s.extra_fields)), body)
+    if cols:
+        out = fetchphase.select_fetched(
+            fetchphase.join_page(docs, out).orderBy(*order).limit(size),
+            out.columns, cols)
     if total is not None:
         # hits.total rides alongside the hits, as in the REST response
-        out = out.withColumn("total_hits", F.lit(total[0]))                  .withColumn("total_relation", F.lit(total[1]))
+        out = (out.withColumn("total_hits", F.lit(total[0]))
+               .withColumn("total_relation", F.lit(total[1])))
     return out

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from opensearch_spark.index.build import IndexConfig, InvertedIndex, build_index
 from opensearch_spark.oracle import match_sql
 from opensearch_spark.search import Match, Searcher
+from opensearch_spark.search.fetchphase import source_filter
 
 DOCS = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001") + "/documents.parquet"
 
@@ -163,7 +164,8 @@ def test_wand_identical_to_exhaustive(searcher, text, op):
 def test_fetch_phase(spark, searcher):
     q = Match(field="text", text="spark table")
     hits = searcher.search(q, k=5)
-    fetched = searcher.fetch(hits, ["text", "lang"])
+    fetched = source_filter(searcher.index.docs(spark), hits,
+                            includes=["text", "lang"])
     rows = fetched.collect()
     assert len(rows) == 5
     assert all(r["text"] is not None for r in rows)

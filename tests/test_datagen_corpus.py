@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from opensearch_spark.datagen import gen_row, generate_corpus
 from opensearch_spark.index.build import IndexConfig, build_index
 from opensearch_spark.search import Match, Searcher
+from opensearch_spark.search.fetchphase import source_filter
 
 
 def test_gen_row_deterministic_and_shaped():
@@ -58,7 +59,8 @@ def test_unique_marker_exact_match(spark, code_index):
     q = Match(field="content", text="uniq_42", operator="and")
     hits = s.search(q, k=5).collect()
     assert len(hits) == 1
-    doc = s.fetch(s.search(q, k=1), ["content"]).first()
+    doc = source_filter(code_index.docs(spark), s.search(q, k=1),
+                        includes=["content"]).first()
     assert "uniq_42" in doc["content"]
 
 

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from opensearch_spark.index.build import IndexConfig
 from opensearch_spark.index.datastream import DataStream
+from opensearch_spark.search.fetchphase import source_filter
 
 CFG = IndexConfig(field="content", analyzer="standard_code", n_parts=2)
 
@@ -65,7 +66,8 @@ def test_materialize_searches_all_generations(stream, spark):
     s = Searcher(spark, idx)
     hits = s.search(Q.Match(field="content", text="beta"), k=130,
                     mode="exhaustive")
-    docs = s.fetch(hits, columns=["content"]).collect()
+    docs = source_filter(idx.docs(spark), hits,
+                         includes=["content"]).collect()
     assert len(docs) == 90
     assert all("beta" in r["content"] for r in docs)
     # sha256 invariant holds across the merged stream

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from opensearch_spark.search.fetchphase import (
     apply_indices_boost,
     fetch_fields,
+    field_mapping,
     resolve_patterns,
     script_fields,
     source_filter,
@@ -23,45 +24,53 @@ def _docs(spark):
         "source string, n_chars long, dl long, content_sha256 string")
 
 
+def _mapping(spark):
+    # ``text``/``title`` are the analyzed fields: no doc values
+    return field_mapping(_docs(spark), ("text", "title"))
+
+
 def _hits(spark):
     return spark.createDataFrame(
         [(1, 2.5), (2, 1.5)], "doc_id long, score double")
 
 
-def test_resolve_preserves_request_order_and_dedups():
-    assert resolve_patterns(["n_*", "lang", "n_chars"]) == ["n_chars", "lang"]
+def test_resolve_preserves_request_order_and_dedups(spark):
+    assert resolve_patterns(["n_*", "lang", "n_chars"],
+                            _mapping(spark)) == ["n_chars", "lang"]
 
 
-def test_resolve_unmapped_pattern_is_silently_empty():
-    assert resolve_patterns(["nope", "zz*"]) == []
+def test_resolve_unmapped_pattern_is_silently_empty(spark):
+    assert resolve_patterns(["nope", "zz*"], _mapping(spark)) == []
 
 
-def test_resolve_internal_columns_never_match():
+def test_resolve_internal_columns_never_match(spark):
     # dl / content_sha256 are engine columns, not user fields
-    assert "dl" not in resolve_patterns(["*"])
-    assert "content_sha256" not in resolve_patterns(["*"])
+    assert "dl" not in resolve_patterns(["*"], _mapping(spark))
+    assert "content_sha256" not in resolve_patterns(["*"], _mapping(spark))
 
 
-def test_docvalues_explicit_text_field_rejected():
+def test_docvalues_explicit_text_field_rejected(spark):
     # FetchDocValuesPhase: text fields carry no doc values
     with pytest.raises(ValueError, match="doc values on text field"):
-        resolve_patterns(["text"], docvalues=True)
+        resolve_patterns(["text"], _mapping(spark), docvalues=True)
 
 
-def test_docvalues_wildcard_silently_skips_text():
-    got = resolve_patterns(["t*"], docvalues=True)
+def test_docvalues_wildcard_silently_skips_text(spark):
+    got = resolve_patterns(["t*"], _mapping(spark), docvalues=True)
     assert "text" not in got and "title" not in got and "ts" in got
 
 
 def test_format_on_non_date_field_rejected(spark):
     with pytest.raises(ValueError, match="does not support custom formats"):
         fetch_fields(_docs(spark), _hits(spark),
-                     [{"field": "lang", "format": "yyyy"}]).collect()
+                     [{"field": "lang", "format": "yyyy"}],
+                     _mapping(spark)).collect()
 
 
 def test_fetch_fields_wildcard_and_date_format(spark):
     out = fetch_fields(_docs(spark), _hits(spark),
-                       ["n_*", {"field": "ts", "format": "yyyy/MM/dd"}])
+                       ["n_*", {"field": "ts", "format": "yyyy/MM/dd"}],
+                       _mapping(spark))
     rows = {r["doc_id"]: r for r in out.collect()}
     assert rows[1]["n_chars"] == 10
     # doc_id 1 -> date_add(2024-01-01, 1) == 2024-01-02, tz-free
@@ -73,7 +82,7 @@ def test_fetch_fields_star_wildcard_no_duplicate_doc_id(spark):
     """fields: ["*"] resolves to doc_id among others — the join key must
     not be emitted twice (downstream orderBy("doc_id") would be
     ambiguous)."""
-    out = fetch_fields(_docs(spark), _hits(spark), ["*"])
+    out = fetch_fields(_docs(spark), _hits(spark), ["*"], _mapping(spark))
     assert out.columns.count("doc_id") == 1
     got = {r["doc_id"] for r in out.orderBy("doc_id").collect()}
     assert got == {1, 2}

@@ -66,10 +66,11 @@ def test_topk_is_take_ordered(spark, idx):
 
 def test_fetch_join_broadcasts(spark, idx):
     from opensearch_spark.search import Match, Searcher
+    from opensearch_spark.search.fetchphase import source_filter
 
     s = Searcher(spark, idx)
     hits = s.search(Match(field="content", text="import"), k=5)
-    fetched = s.fetch(hits, columns=["repo"])
+    fetched = source_filter(idx.docs(spark), hits, includes=["repo"])
     plan = explain_str(fetched)
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 

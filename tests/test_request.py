@@ -432,3 +432,106 @@ def test_highlight_fragments_randomized_every_fragment_has_a_match(s, spark):
                 stripped = frag.replace("<em>", "").replace("</em>", "")
                 assert stripped in originals[r["doc_id"]], \
                     f"case {case}: fragment not a substring: {frag!r}"
+
+
+def _ranked(s, body):
+    return [r.doc_id for r in execute_search_request(s, body).collect()]
+
+
+def test_fetch_keeps_rank_order(s):
+    """The fetch join re-orders the page: _source / fields /
+    script_fields / from leave the bare request's hit order, and that
+    order is the body's own (score desc or the sort spec, then doc_id)."""
+    base = {"query": {"match": {"text": "spark merge table"}}, "size": 10}
+    fetch_keys = [
+        {"_source": ["lang", "source"]},
+        {"fields": ["n_chars", {"field": "ts", "format": "yyyy-MM-dd"}]},
+        {"script_fields": {"c2": {"script": {
+            "source": "doc['n_chars'].value * 2"}}}},
+    ]
+    for body in (base, {**base, "from": 4}):
+        bare = execute_search_request(s, body).collect()
+        assert len(bare) == 10
+        keys = [(-r.score, r.doc_id) for r in bare]
+        assert keys == sorted(keys)
+        for extra in fetch_keys:
+            assert _ranked(s, {**body, **extra}) == [r.doc_id for r in bare]
+    full = _ranked(s, {**base, "size": 14})
+    assert _ranked(s, {**base, "from": 4, "_source": ["lang"]}) == full[4:]
+    sort = {**base, "sort": [{"n_chars": "desc"}]}
+    rows = execute_search_request(s, {**sort, "_source": ["lang"]}).collect()
+    assert [r.doc_id for r in rows] == _ranked(s, sort)
+    keys = [(-r.n_chars, r.doc_id) for r in rows]
+    assert keys == sorted(keys)
+
+
+def test_fetch_on_a_schema_the_fixtures_lack(spark, tmp_path):
+    """The fetch mapping comes from the index's own docs schema: a
+    repo/path/commit/lang/content table fetches ``path`` through every
+    form of _source and fields, and ``content`` is the analyzed field."""
+    from opensearch_spark.index.build import (IndexConfig, InvertedIndex,
+                                              build_index)
+    from opensearch_spark.search import Match, Searcher
+    from opensearch_spark.search.fetchphase import fetch_fields, field_mapping
+
+    rows = [(f"repo{i % 3}", f"src/m{i:02d}.py", f"c{i:04x}",
+             ("py", "go", "rs")[i % 3],
+             f"def load{i} spark table merge" if i % 2 else "spark index")
+            for i in range(40)]
+    corpus = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, "
+        "content string")
+    path = str(tmp_path / "code_idx")
+    build_index(spark, corpus, path,
+                IndexConfig(field="content", analyzer="standard",
+                            keyword_cols=("lang",), n_parts=2,
+                            bucket_span=1 << 12))
+    s = Searcher(spark, InvertedIndex(path))
+    docs = s.index.docs(spark)
+    stored = {r.doc_id: r for r in docs.collect()}
+    body = {"query": {"match": {"content": "spark table"}}, "size": 6}
+
+    for src in (["path", "lang"], True, "pa*"):
+        out = execute_search_request(s, {**body, "_source": src})
+        got = out.collect()
+        assert len(got) == 6
+        assert all(r.path == stored[r.doc_id].path for r in got), src
+    full = execute_search_request(s, {**body, "_source": True})
+    assert {"repo", "path", "commit", "lang", "content"} <= set(full.columns)
+    assert not {"dl", "content_sha256", "ts"} & set(full.columns)
+    got = execute_search_request(s, {**body, "fields": ["path"]}).collect()
+    assert all(r.path == stored[r.doc_id].path for r in got)
+
+    mapping = field_mapping(docs, (s.field, *s.extra_fields))
+    assert mapping["content"] == "text" and mapping["path"] == "keyword"
+    hits = s.search(Match(field="content", text="spark"), k=3)
+    with pytest.raises(ValueError, match="no doc values"):
+        fetch_fields(docs, hits, ["content"], mapping, docvalues=True)
+    wild = fetch_fields(docs, hits, ["*"], mapping, docvalues=True)
+    assert "content" not in wild.columns and "path" in wild.columns
+
+    out = execute_search_request(
+        s, {**body, "sort": [{"lang": "asc"}], "_source": ["lang"]})
+    assert out.columns.count("lang") == 1
+    langs = [r.lang for r in out.collect()]
+    assert langs == sorted(langs)
+
+
+def _joins(df) -> int:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return sum(1 for line in plan.splitlines()
+               if line.lstrip(" :+-").startswith("Join "))
+
+
+def test_one_docs_join_per_request(s):
+    """_source, fields and script_fields share one docs join: the plan
+    has as many joins as with _source alone (the scorer's own join plus
+    the fetch join)."""
+    base = {"query": {"match": {"text": "spark merge"}}, "size": 5,
+            "_source": ["lang"]}
+    full = {**base, "fields": ["n_chars", {"field": "ts",
+                                          "format": "yyyy/MM/dd"}],
+            "script_fields": {"c2": {"script": {
+                "source": "doc['n_chars'].value * 2"}}}}
+    n = _joins(execute_search_request(s, full))
+    assert n == _joins(execute_search_request(s, base)) == 2

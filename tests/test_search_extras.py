@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from opensearch_spark.search import queries as Q
+from opensearch_spark.search.fetchphase import source_filter
 from opensearch_spark.search.query_string import parse_query_string
 
 
@@ -143,7 +144,8 @@ def test_highlight_fragments(searcher, spark):
     from opensearch_spark.search import highlight_fragments
 
     hits = searcher.search(Q.Match(field="text", text="spark"), k=3)
-    fetched = searcher.fetch(hits, columns=["text"])
+    fetched = source_filter(searcher.index.docs(spark), hits,
+                            includes=["text"])
     out = highlight_fragments(fetched, "text", ["spark"], fragment_size=40,
                               number_of_fragments=2).collect()
     for r in out:

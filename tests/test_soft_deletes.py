@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from opensearch_spark.index.build import (IndexConfig, InvertedIndex,
                                           build_index, delete_docs)
 from opensearch_spark.search import Searcher, queries as Q
+from opensearch_spark.search.fetchphase import source_filter
 
 
 @pytest.fixture(scope="module")
@@ -139,7 +140,8 @@ def test_delete_by_query_distributed_tombstones(spark, sf_dir, tmp_path):
     # keyword path excludes them without a new handle
     assert s.matching_docs(Q.Term(field="lang", value="de")).count() == 0
     # scoring path excludes them too
-    hit_langs = {r["lang"] for r in s.fetch(
+    hit_langs = {r["lang"] for r in source_filter(
+        s.index.docs(spark),
         s.search(Q.Match(field="text", text="the"), k=50,
-                 mode="exhaustive"), ["lang"]).collect()}
+                 mode="exhaustive"), includes=["lang"]).collect()}
     assert "de" not in hit_langs
