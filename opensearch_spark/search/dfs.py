@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from opensearch_spark.common.sparkconf import local_frame
 from opensearch_spark.scoring.bm25 import bm25_sql_expr
 
 
@@ -72,8 +73,8 @@ def sharded_search(s, text: str, *, field: str = "text", n_shards: int = 4,
             return fs._empty_scores().select(
                 "doc_id", F.lit(0).alias("shard"), "score").limit(0)
         flat = fs._flat_postings(live).withColumn("shard", shard)
-        dfreq = s.spark.createDataFrame(
-            [(t, dfd[t]) for t in live], "term string, df long")
+        dfreq = local_frame(
+            s.spark, [(t, dfd[t]) for t in live], "term string, df long")
         per_term = (flat.join(F.broadcast(dfreq), "term")
                     .withColumn("term_score", F.expr(bm25_sql_expr(
                         "tf", "dl", "df", str(fs.N), str(fs.avgdl),

@@ -12,8 +12,22 @@ Scoring modes:
   then groupBy sum. Match, term, cross_fields and explain all score
   through it; it is the oracle-comparable mode and the scoring oracle for
   WAND.
-- wand: ``wand.py``'s one block-max loop per partition; identical results
-  (strict-bound skips). A top-level Match takes it under ``mode="auto"``.
+- wand: ``wand.py``'s one block-max kernel; identical results (strict-
+  bound skips). A top-level Match takes it under ``mode="auto"``, on one
+  of two paths chosen by memory, never by a flag:
+  - driver: when ``common/breaker.request_breaker`` admits an estimate of
+    the decoded postings (Σ df of the live terms × a per-posting byte
+    cost), the term-pruned blocks are collected through Arrow in one
+    JVM-only action and scored in the driver; the top ``k + margin``
+    comes back as a JVM-local relation. No shuffle, no Python worker.
+    The charge is held while the blocks are decoded, then released.
+  - distributed: when the breaker refuses, one shuffle co-locates each
+    bucket's blocks and the kernel runs per Spark task in mapInPandas.
+  Either way ``search()`` rounds, re-ranks and cuts in Spark.
+
+Every small per-request frame (term weights, stats, empty results) is
+built by ``common/sparkconf.local_frame`` as a JVM-local relation, so no
+request starts a Python worker just to build a frame.
 
 Global stats by construction = the reference's DFS_QUERY_THEN_FETCH
 semantics; with 1 shard the reference's query_then_fetch coincides (§3.1),
@@ -23,7 +37,7 @@ so rank identity is well-defined.
 from __future__ import annotations
 
 import re
-from functools import reduce
+from functools import partial, reduce
 
 import numpy as np
 import pandas as pd
@@ -31,12 +45,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import Window as W
 
 from opensearch_spark.analysis import tokenize
+from opensearch_spark.common.sparkconf import local_frame
 from opensearch_spark.index.build import InvertedIndex
 from opensearch_spark.scoring.bm25 import bm25_idf
 from opensearch_spark.search import queries as Q
 from opensearch_spark.search.fetchphase import source_filter
 
 SCORE_COLS = ("doc_id", "score")
+#: the posting-block columns the WAND kernel reads besides ``term_idx``
+_WAND_BLOCK_COLS = ("bucket", "first_doc", "n", "max_impact",
+                    "docs_vb", "tfs_vb", "dls_vb")
 
 
 def _bm25_weight(N: int, df: np.ndarray, k1: float, boost: float) -> np.ndarray:
@@ -308,6 +326,8 @@ class Searcher:
         return max(msm, 1) if msm else 1
 
     def _match_wand(self, q: Q.Match, k: int) -> DataFrame:
+        from opensearch_spark.common.breaker import (
+            CircuitBreakingException, request_breaker)
         from opensearch_spark.search.wand import wand_partition_fn
 
         terms = self.analyze(q.text, getattr(q, "analyzer", None))
@@ -326,30 +346,53 @@ class Searcher:
             # docs with score 0. Zero-signal bounds mean zero pruning
             # anyway: route to the exhaustive twin (identical results).
             return self._match_exhaustive(q)
-        term_idx = self.spark.createDataFrame(
-            [(t, i) for i, t in enumerate(live)], "term string, term_idx int"
-        )
+        kernel = partial(wand_partition_fn, list(weights), k, self.k1,
+                         self.b, self.avgdl, n_required)
+        # the driver path holds every posting of the live terms decoded:
+        # ≈ 96 bytes each over decode_blocks' int64 arrays and the
+        # kernel's float64 score and sort arrays. A refused charge is the
+        # routing signal, never an error: the request runs distributed.
+        need = 96 * sum(dfs[t] for t in live)
+        try:
+            request_breaker.add_estimate(need, f"wand[{self.index.path}]")
+        except CircuitBreakingException:
+            return self._match_wand_spark(live, kernel)
+        try:
+            return self._match_wand_driver(live, kernel)
+        finally:
+            request_breaker.release(need)
+
+    def _match_wand_driver(self, live: list[str], kernel) -> DataFrame:
+        """The term-pruned blocks collected through Arrow (one JVM-only
+        action), scored in the driver by the same kernel, returned as a
+        JVM-local top-k — no shuffle and no Python worker."""
+        blocks = self._blocks_for_terms(live).select(
+            "term", *_WAND_BLOCK_COLS).toPandas()
+        blocks["term_idx"] = blocks["term"].map(
+            {t: i for i, t in enumerate(live)})
+        order = np.lexsort((blocks["term_idx"].to_numpy(),
+                            blocks["bucket"].to_numpy()))
+        run = kernel(tombstones=self.index.tombstones(self.spark))
+        page = next(run(iter([blocks.take(order)])))
+        return local_frame(self.spark, page, "doc_id long, score double")
+
+    def _match_wand_spark(self, live: list[str], kernel) -> DataFrame:
+        """The distributed twin: ONE shuffle co-locates each bucket's
+        blocks (all terms) in a task, which sorts them by (bucket,
+        term_idx) and runs the kernel in mapInPandas; per-partition
+        ordering prunes identically to a global order since partitions
+        run independently."""
+        term_idx = local_frame(self.spark, [(t, i) for i, t in enumerate(live)],
+                               "term string, term_idx int")
         blocks = self._blocks_for_terms(live).join(F.broadcast(term_idx), "term")
-        # ONE shuffle: co-locate each bucket's blocks (all terms) in a task;
-        # bucket upper bounds and the desc-UB processing order (which makes
-        # θ rise fast) are computed with numpy inside the partition —
-        # per-partition ordering prunes identically to a global order since
-        # partitions run independently (was: 2 agg shuffles + a join)
         ordered = (
             blocks.repartition(self.index.n_parts,
                                F.pmod(F.col("bucket"), F.lit(self.index.n_parts)))
             .sortWithinPartitions("bucket", "term_idx")
         )
-        fn = wand_partition_fn(
-            list(weights), k, self.k1, self.b, self.avgdl, n_required,
-            tombstones=self.index.tombstones_bcast(self.spark),
-        )
-        part_topk = ordered.select(
-            "bucket", "term_idx", "first_doc", "n", "max_impact",
-            "docs_vb", "tfs_vb", "dls_vb",
-        ).mapInPandas(fn, "doc_id long, score double")
-        return part_topk
-
+        run = kernel(tombstones=self.index.tombstones_bcast(self.spark))
+        return ordered.select("term_idx", *_WAND_BLOCK_COLS).mapInPandas(
+            run, "doc_id long, score double")
 
     def _bm25_sql(self, boost="1.0") -> str:
         """The exact BM25 formula over the (tf, dl, df) posting columns,
@@ -362,7 +405,7 @@ class Searcher:
             "tf", "dl", "df", f"{self.N}", f"{self.avgdl}", self.k1, self.b)
 
     def _empty_scores(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(self.spark, [], "doc_id long, score double")
 
     # ---------- filter context ----------
     def _docs_predicate(self, q) -> F.Column | None:
@@ -880,11 +923,11 @@ class Searcher:
         decoded postings ⋈ broadcast df → ``bm25_sql_expr``. Match, term,
         cross_fields and explain all build on it."""
         if not live:
-            return self.spark.createDataFrame([], (
+            return local_frame(self.spark, [], (
                 "doc_id long, term string, tf long, dl long, df long, "
                 "tscore double"))
-        stats = self.spark.createDataFrame(
-            [(t, dfs[t]) for t in live], "term string, df long")
+        stats = local_frame(
+            self.spark, [(t, dfs[t]) for t in live], "term string, df long")
         return self._flat_postings(live).join(F.broadcast(stats), "term") \
             .select("doc_id", "term", "tf", "dl", "df",
                     F.expr(self._bm25_sql(f"{boost}")).alias("tscore"))
@@ -1233,8 +1276,8 @@ class Searcher:
         if not live:
             return self._empty_scores()
         flat = self._flat_postings(live)
-        cf_df = self.spark.createDataFrame(
-            [(t, stats[t][1]) for t in live], "term string, cf long")
+        cf_df = local_frame(
+            self.spark, [(t, stats[t][1]) for t in live], "term string, cf long")
         denom = float(self.sum_dl + 1)
         scored = flat.join(F.broadcast(cf_df), "term").withColumn(
             "tscore",
@@ -1254,8 +1297,8 @@ class Searcher:
         if not live:
             return self._empty_scores()
         flat = self._flat_postings(live)
-        cf_df = self.spark.createDataFrame(
-            [(t, stats[t][1]) for t in live], "term string, cf long")
+        cf_df = local_frame(
+            self.spark, [(t, stats[t][1]) for t in live], "term string, cf long")
         denom = float(self.sum_dl + 1)
         scored = flat.join(F.broadcast(cf_df), "term").withColumn(
             "tscore",
@@ -1278,8 +1321,8 @@ class Searcher:
         if not live:
             return self._empty_scores()
         flat = self._flat_postings(live)
-        st = self.spark.createDataFrame(
-            [(t, stats[t][0], stats[t][1]) for t in live],
+        st = local_frame(
+            self.spark, [(t, stats[t][0], stats[t][1]) for t in live],
             "term string, df long, cf long")
         sub = re.sub(r"\bavgdl\b", f"CAST({self.avgdl!r} AS DOUBLE)", expr)
         sub = re.sub(r"\bN\b", f"CAST({self.N} AS DOUBLE)", sub)
@@ -1364,8 +1407,8 @@ class Searcher:
         if not live:
             return self._empty_scores()
         flat = self._flat_postings(live)
-        wdf = self.spark.createDataFrame(
-            [(t, float(weights[t])) for t in live], "term string, w double")
+        wdf = local_frame(self.spark, [(t, float(weights[t])) for t in live],
+                          "term string, w double")
         scored = (flat.join(F.broadcast(wdf), "term")
                   .groupBy("doc_id")
                   .agg(F.sum(F.col("w") * F.col("tf")).alias("score")))
@@ -1383,8 +1426,8 @@ class Searcher:
         scan cost is paid once for the whole batch instead of per query.
         Mixed batches fall back to unioned independent plans."""
         if not queries:
-            return self.spark.createDataFrame(
-                [], "query_id string, doc_id long, score double")
+            return local_frame(
+                self.spark, [], "query_id string, doc_id long, score double")
         # fused path requires every query to hit THIS searcher's analyzed
         # field — a Match on an extra field or keyword column routes
         # through score()'s field dispatch, so those batches fall back
@@ -1415,10 +1458,10 @@ class Searcher:
                 wrows.append((qid, t, dfs[t], float(q.boost), req))
                 live_union.add(t)
         if not wrows:
-            return self.spark.createDataFrame(
-                [], "query_id string, doc_id long, score double")
-        w = self.spark.createDataFrame(
-            wrows,
+            return local_frame(
+                self.spark, [], "query_id string, doc_id long, score double")
+        w = local_frame(
+            self.spark, wrows,
             "query_id string, term string, df long, boost double, n_required int")
         flat = self._flat_postings(sorted(live_union))
         scored = flat.join(F.broadcast(w), "term").withColumn(
@@ -1510,8 +1553,8 @@ class Searcher:
         stats = self.term_stats(list(tf))
         rows = [(t, n) + tuple(stats.get(t, (0, 0)))
                 for t, n in sorted(tf.items())]
-        return self.spark.createDataFrame(
-            rows, "term string, tf int, df long, ttf long")
+        return local_frame(
+            self.spark, rows, "term string, tf int, df long, ttf long")
 
     # ---------- entry points ----------
     def search(self, q, k: int = 10, mode: str = "auto",
@@ -1593,13 +1636,13 @@ class Searcher:
         rows.append(("execute", (t3 - t2) * 1000.0,
                      f"{len(collected)} hits (mode={mode})"))
         if collected:
-            source_filter(self.index.docs(self.spark), self.spark
-                          .createDataFrame(collected, hits.schema)).collect()
+            source_filter(self.index.docs(self.spark), local_frame(
+                self.spark, collected, "doc_id long, score double")).collect()
         t4 = _time.perf_counter()
         rows.append(("fetch", (t4 - t3) * 1000.0, f"{len(collected)} docs"))
         rows.append(("total", (t4 - t0) * 1000.0, type(q).__name__))
-        return self.spark.createDataFrame(
-            [(p, round(ms, 3), d) for p, ms, d in rows],
+        return local_frame(
+            self.spark, [(p, round(ms, 3), d) for p, ms, d in rows],
             "phase string, time_ms double, detail string")
 
     def explain(self, q: Q.Match) -> DataFrame:

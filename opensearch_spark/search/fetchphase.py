@@ -145,10 +145,12 @@ def _script_columns(scripts: dict[str, dict]) -> dict:
 
 def fetch_columns(stored: list[str], mapping: dict[str, str],
                   body: dict) -> dict[str, Column]:
-    """The one projection of a request body's ``_source``, ``fields`` and
-    ``script_fields``, in that order, each name once."""
+    """The one projection of a request body's ``_source``, ``fields``,
+    ``docvalue_fields`` and ``script_fields``, in that order, each name
+    once."""
     cols = _source_columns(stored, body.get("_source"))
     _add_fields(cols, mapping, body.get("fields", []), False)
+    _add_fields(cols, mapping, body.get("docvalue_fields", []), True)
     cols.update(_script_columns(body.get("script_fields", {})))
     return cols
 

@@ -18,6 +18,7 @@ single Catalyst plan:
                          from+size scan — the scale-correct cursor)
 - ``_source``          → stored columns by include/exclude pattern
 - ``fields``           → mapped columns by pattern (wildcards + date fmt)
+- ``docvalue_fields``  → the same, minus text fields (no doc values)
 - ``script_fields``    → Painless → Catalyst expressions
 - ``derived``          → derivedfields.with_derived_fields (sortable /
                          aggregatable query-time scripted columns)
@@ -40,14 +41,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from opensearch_spark.common.sparkconf import local_frame
 from opensearch_spark.search import queries as Q
 from opensearch_spark.search.queries import from_dsl
 
 # body keys executed here; anything else raises with a pointer
 _HANDLED = {
-    "query", "from", "size", "sort", "_source", "fields", "script_fields",
-    "min_score", "search_after", "aggs", "aggregations", "derived",
-    "track_total_hits", "pit",
+    "query", "from", "size", "sort", "_source", "fields", "docvalue_fields",
+    "script_fields", "min_score", "search_after", "aggs", "aggregations",
+    "derived", "track_total_hits", "pit",
 }
 _DEDICATED = {
     "highlight": "search/highlight.py (highlight_field)",
@@ -234,8 +236,8 @@ def execute_search_request(s, body: dict, *,
             else s.matching_docs(ast)
         total = track_total_hits(base_ids, body["track_total_hits"])
         if size == 0:  # count-only request: the total IS the response
-            return s.spark.createDataFrame(
-                [total], "total_hits long, total_relation string")
+            return local_frame(
+                s.spark, [total], "total_hits long, total_relation string")
 
     stored = s.index.docs(s.spark)
     docs = stored

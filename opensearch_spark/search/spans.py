@@ -34,7 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from opensearch_spark.common.sparkconf import shuffle_partitions
+from opensearch_spark.common.sparkconf import local_frame, shuffle_partitions
 
 SPAN_SCHEMA = "doc_id long, n_matches long"
 SPAN_SCHEMA_W = "doc_id long, n_matches double"
@@ -233,7 +233,7 @@ def span_containing_docs(searcher, big: tuple[str, str], slop: int,
     spark = searcher.spark
     mapping = [(big[0], 0), (big[1], 1), (little, 2)]
     terms = sorted({t for t, _ in mapping})
-    map_df = spark.createDataFrame(mapping, "term string, clause int")
+    map_df = local_frame(spark, mapping, "term string, clause int")
     pos = (searcher.index.positions(spark)
            .where(F.col("term").isin(terms))
            .join(F.broadcast(map_df), "term")
@@ -301,7 +301,7 @@ def span_match_counts(searcher, clauses: list, slop: int,
         src = searcher if fld is None else searcher._searcher_for(fld)
         src._require_positions("field_masking_span")
         terms = sorted({t for t, _ in mapping})
-        map_df = spark.createDataFrame(mapping, "term string, clause int")
+        map_df = local_frame(spark, mapping, "term string, clause int")
         frames.append(
             src.index.positions(spark)
             .where(F.col("term").isin(terms))

@@ -9,9 +9,10 @@ SIMD-friendly, see the ICDE'25 columnar-inverted-index paper in PAPERS.md):
 
 - postings are chunked into doc-id-range **buckets** (build-time), so every
   doc's postings for all query terms live in the same bucket;
-- per Spark task, one loop: Arrow batches are buffered into **frames** of
-  at most ``MAX_BUFFER_ROWS`` block rows (whole buckets; a bucket split
-  across the cut is carried into the next frame). ``_score_frame`` computes
+- in the driver or per Spark task, one loop: Arrow batches are buffered
+  into **frames** of at most ``MAX_BUFFER_ROWS`` block rows (whole
+  buckets; a bucket split across the cut is carried into the next
+  frame). ``_score_frame`` computes
   every bound of a frame once, then scores its buckets in descending
   upper-bound order against the running top-k threshold θ, which carries
   across frames:
@@ -22,9 +23,10 @@ SIMD-friendly, see the ICDE'25 columnar-inverted-index paper in PAPERS.md):
   - surviving blocks: one batched decode (``codec.decode_blocks``) →
     per-posting scores → sort-by-doc + reduceat aggregation → merge into
     running top-k, raise θ.
-- global: per-task top-k frames → ``ORDER BY score DESC, doc_id LIMIT k``
-  (Spark's TakeOrderedAndProject = the reference's ``TopDocs.merge``
-  coordinator step, ``SearchPhaseController.java:175-241``).
+- global: the driver's top-k, or the per-task top-k frames →
+  ``ORDER BY score DESC, doc_id LIMIT k`` (Spark's TakeOrderedAndProject
+  = the reference's ``TopDocs.merge`` coordinator step,
+  ``SearchPhaseController.java:175-241``).
 
 Exactness: all skips use strict upper bounds (< θ), so results are identical
 to exhaustive scoring — verified by the oracle-comparison tests.
@@ -98,7 +100,8 @@ def _score_frame(frame: pd.DataFrame, w: np.ndarray, k1: float, b: float,
     """Score every bucket of ``frame`` into ``topk``.
 
     ``frame`` holds whole buckets, sorted by (bucket, term_idx) —
-    executor.py pins ``sortWithinPartitions`` before the mapInPandas — so
+    executor.py sorts the driver's block set, or pins
+    ``sortWithinPartitions`` before the mapInPandas — so
     each (bucket, term) maximum is one ``maximum.reduceat`` and each bucket
     bound one ``add.reduceat`` over those maxima."""
     bucket = frame["bucket"].to_numpy()
@@ -159,8 +162,10 @@ def wand_partition_fn(
     n_required: int,
     tombstones=None,
 ):
-    """Build the mapInPandas function: block rows (sorted by bucket, then
-    term_idx, within the partition) → this partition's top-k.
+    """Build the kernel function: block rows (sorted by bucket, then
+    term_idx, within the partition) → this partition's top-k. The driver
+    calls it on its one block set; the distributed plan runs it in
+    mapInPandas.
 
     ``tombstones`` is a sorted int64 ndarray, a Spark Broadcast wrapping
     one (resolved executor-side, so the task closure carries only the

@@ -19,3 +19,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def distributed_wand():
+    """``with distributed_wand(): ...`` runs its block on WAND's
+    distributed leg: the request breaker refuses every charge, which
+    routes a top-level match from the driver kernel to the Spark plan.
+    Session-scoped so property tests can use it too."""
+    from contextlib import contextmanager
+
+    from opensearch_spark.common.breaker import request_breaker
+
+    @contextmanager
+    def forced():
+        old = request_breaker.limit
+        request_breaker.limit = 0
+        try:
+            yield
+        finally:
+            request_breaker.limit = old
+
+    return forced
+

@@ -53,6 +53,11 @@ def spark_rows(df):
     return sorted((r["doc_id"], r["score"]) for r in df.collect())
 
 
+def ranked(df):
+    """(doc_id, score) in the order the frame returns them."""
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
 def test_stats_match_duckdb(index, duck):
     n, sumdl = duck.sql(
         "SELECT count(*), sum(len(string_split_regex(trim(text), '\\s+'))) FROM documents"
@@ -79,28 +84,32 @@ def test_docs_and_dictionary_consistent(spark, index, duck):
     assert got["df"] == row[1]
 
 
-def test_wand_k0_returns_empty_not_crash(searcher):
+def test_wand_k0_returns_empty_not_crash(searcher, distributed_wand):
     """size=0 is a legal request (aggregation-only searches): WAND must
-    return an empty frame, not crash a task on an empty top-k heap
+    return an empty frame on both paths, not crash on an empty top-k heap
     (round-4 review finding — _TopK.threshold IndexError)."""
     out = searcher.search(Match(field="text", text="spark table"),
                           k=0, mode="wand")
     assert out.count() == 0
+    with distributed_wand():
+        out = searcher.search(Match(field="text", text="spark table"),
+                              k=0, mode="wand")
+        assert out.count() == 0
     exh = searcher.search(Match(field="text", text="spark table"),
                           k=0, mode="exhaustive")
     assert exh.count() == 0
 
 
-def test_wand_boost_zero_matches_exhaustive(searcher):
+def test_wand_boost_zero_matches_exhaustive(searcher, distributed_wand):
     """boost=0 zeroes every WAND upper bound; the engine must fall back
     to the exhaustive twin so both modes return the same score-0 docs
     (round-4 review finding — WAND returned empty)."""
     q = Match(field="text", text="spark", boost=0.0)
-    wand = {(r["doc_id"], r["score"]) for r in
-            searcher.search(q, k=10, mode="wand").collect()}
-    exh = {(r["doc_id"], r["score"]) for r in
-           searcher.search(q, k=10, mode="exhaustive").collect()}
-    assert wand == exh
+    wand = ranked(searcher.search(q, k=10, mode="wand"))
+    with distributed_wand():
+        dist = ranked(searcher.search(q, k=10, mode="wand"))
+    exh = ranked(searcher.search(q, k=10, mode="exhaustive"))
+    assert wand == dist == exh
     assert wand and all(s == 0.0 for _, s in wand)
 
 
@@ -154,11 +163,34 @@ def test_match_vs_duckdb_oracle(searcher, duck, text, op, msm):
     [("spark table", "or"), ("spark table", "and"),
      ("merge sort window batch fast slow", "or"), ("the a value", "or")],
 )
-def test_wand_identical_to_exhaustive(searcher, text, op):
+def test_wand_identical_to_exhaustive(searcher, distributed_wand, text, op):
+    """Driver WAND ≡ distributed WAND ≡ exhaustive, in rank order."""
     q = Match(field="text", text=text, operator=op)
-    ex = spark_rows(searcher.search(q, k=10, mode="exhaustive", round_scores=4))
-    wd = spark_rows(searcher.search(q, k=10, mode="wand", round_scores=4))
-    assert wd == ex
+    ex = ranked(searcher.search(q, k=10, mode="exhaustive", round_scores=4))
+    wd = ranked(searcher.search(q, k=10, mode="wand", round_scores=4))
+    with distributed_wand():
+        dist = ranked(searcher.search(q, k=10, mode="wand", round_scores=4))
+    assert wd == dist == ex
+
+
+@pytest.mark.parametrize(
+    "text,op,msm,k",
+    [("spark nonexistentterm42", "and", 0, 10),   # and with an absent term
+     ("spark table merge sort", "or", "75%", 10),  # msm percentage
+     ("spark table merge sort", "or", "-50%", 25),
+     ("spark table", "and", 0, 10_000),            # k above the match count
+     ("merge window", "or", 2, 10_000)],
+)
+def test_wand_paths_rank_identical_edge_cases(searcher, distributed_wand,
+                                              text, op, msm, k):
+    q = Match(field="text", text=text, operator=op, minimum_should_match=msm)
+    ex = ranked(searcher.search(q, k=k, mode="exhaustive", round_scores=4))
+    wd = ranked(searcher.search(q, k=k, mode="wand", round_scores=4))
+    with distributed_wand():
+        dist = ranked(searcher.search(q, k=k, mode="wand", round_scores=4))
+    assert wd == dist == ex
+    if k > 1000:
+        assert 0 < len(ex) < k
 
 
 def test_fetch_phase(spark, searcher):
@@ -266,15 +298,19 @@ def test_disk_cache_level_identical_index(spark, tmp_path):
     st.integers(min_value=1, max_value=3),
     st.integers(min_value=1, max_value=25),
 )
-def test_wand_exhaustive_property(searcher, words, op, msm, k):
-    """Block-max WAND must be rank-identical to exhaustive scoring for
-    ANY term multiset, operator, minimum_should_match and k (strict
-    upper bounds — pruning can never change the result set)."""
+def test_wand_exhaustive_property(searcher, distributed_wand, words, op,
+                                  msm, k):
+    """Block-max WAND, on the driver and distributed, must be
+    rank-identical to exhaustive scoring for ANY term multiset, operator,
+    minimum_should_match and k (strict upper bounds — pruning can never
+    change the result set)."""
     q = Match(field="text", text=" ".join(words), operator=op,
               minimum_should_match=msm if op == "or" else 0)
-    ex = spark_rows(searcher.search(q, k=k, mode="exhaustive", round_scores=4))
-    wd = spark_rows(searcher.search(q, k=k, mode="wand", round_scores=4))
-    assert wd == ex
+    ex = ranked(searcher.search(q, k=k, mode="exhaustive", round_scores=4))
+    wd = ranked(searcher.search(q, k=k, mode="wand", round_scores=4))
+    with distributed_wand():
+        dist = ranked(searcher.search(q, k=k, mode="wand", round_scores=4))
+    assert wd == dist == ex
 
 
 def test_match_only_text_postings_have_unit_tf(spark, tmp_path):
@@ -649,7 +685,8 @@ def test_bool_tree_randomized_match_set_vs_bruteforce(spark, sf_dir):
         assert got == want, f"case {case}: {q}"
 
 
-def test_wand_randomized_rank_identical_to_exhaustive(spark, sf_dir):
+def test_wand_randomized_rank_identical_to_exhaustive(spark, sf_dir,
+                                                      distributed_wand):
     """Seeded randomized block-max WAND check: for random multi-term
     match queries (1-5 terms, mixed hot/rare, or/and msm), WAND top-k
     must be RANK-IDENTICAL to the exhaustive scorer with scores equal
@@ -674,9 +711,12 @@ def test_wand_randomized_rank_identical_to_exhaustive(spark, sf_dir):
         k = rng.choice([3, 10, 25])
         w = [(r["doc_id"], round(r["score"], 6))
              for r in s.search(q, k=k, mode="wand").collect()]
+        with distributed_wand():
+            d = [(r["doc_id"], round(r["score"], 6))
+                 for r in s.search(q, k=k, mode="wand").collect()]
         e = [(r["doc_id"], round(r["score"], 6))
              for r in s.search(q, k=k, mode="exhaustive").collect()]
-        assert w == e, f"case {case}: {text!r} op={op} msm={msm} k={k}"
+        assert w == d == e, f"case {case}: {text!r} op={op} msm={msm} k={k}"
 
 
 def test_multiterm_expansion_randomized_vs_bruteforce(spark, sf_dir):

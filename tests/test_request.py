@@ -525,8 +525,8 @@ def _joins(df) -> int:
 
 def test_one_docs_join_per_request(s):
     """_source, fields and script_fields share one docs join: the plan
-    has as many joins as with _source alone (the scorer's own join plus
-    the fetch join)."""
+    has as many joins as with _source alone. A driver-scored match adds
+    no join of its own, so that one join is the fetch join."""
     base = {"query": {"match": {"text": "spark merge"}}, "size": 5,
             "_source": ["lang"]}
     full = {**base, "fields": ["n_chars", {"field": "ts",
@@ -534,4 +534,82 @@ def test_one_docs_join_per_request(s):
             "script_fields": {"c2": {"script": {
                 "source": "doc['n_chars'].value * 2"}}}}
     n = _joins(execute_search_request(s, full))
-    assert n == _joins(execute_search_request(s, base)) == 2
+    assert n == _joins(execute_search_request(s, base)) == 1
+
+
+def test_docvalue_fields_executed(s):
+    """docvalue_fields runs the FetchDocValuesPhase: a keyword column is
+    fetched, an explicit text field has no doc values, and a wildcard
+    skips text fields."""
+    body = {"query": {"match": {"text": "spark merge"}}, "size": 5}
+    bare = execute_search_request(s, body).collect()
+    got = execute_search_request(
+        s, {**body, "docvalue_fields": ["lang"]}).collect()
+    langs = {r.doc_id: r.lang for r in
+             s.index.docs(s.spark).select("doc_id", "lang").collect()}
+    assert [(r.doc_id, r.score) for r in got] == \
+        [(r.doc_id, r.score) for r in bare]
+    assert all(r.lang == langs[r.doc_id] for r in got)
+    with pytest.raises(ValueError, match="no doc values"):
+        execute_search_request(s, {**body, "docvalue_fields": ["text"]})
+    wild = execute_search_request(s, {**body, "docvalue_fields": ["*"]})
+    assert "text" not in wild.columns and "lang" in wild.columns
+
+
+def _run_counted(spark, fn):
+    """(result, Spark jobs run, executed-plan strings) of ``fn()``; the
+    plans come from every collect/toPandas the call makes."""
+    from pyspark.sql.classic.dataframe import DataFrame as Classic
+
+    group = f"counted-{id(fn)}"
+    plans = []
+    orig = {name: getattr(Classic, name) for name in ("collect", "toPandas")}
+
+    def spy(name):
+        def run(self, *a, **kw):
+            out = orig[name](self, *a, **kw)
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return out
+        return run
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        for name in orig:
+            setattr(Classic, name, spy(name))
+        out = fn()
+    finally:
+        for name, f in orig.items():
+            setattr(Classic, name, f)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group)), plans
+
+
+def _python_or_shuffle(plans) -> list[str]:
+    """Plan lines that start a Python worker or a shuffle."""
+    return [line for plan in plans for line in plan.splitlines()
+            if any(w in line for w in ("MapInPandas", "PythonRDD",
+                                       "ExistingRDD"))
+            or line.lstrip(" :+-").startswith("Exchange ")]
+
+
+def test_served_match_runs_no_python_worker(s, distributed_wand):
+    """A top-level match is scored in the driver: no Python-worker stage
+    and no shuffle in any executed plan, at most 3 Spark jobs, and an
+    empty score frame costs no job at all. Forcing the distributed leg
+    brings the mapInPandas plan back, so the check sees the routing."""
+    body = {"query": {"match": {"text": "spark merge"}}, "size": 5,
+            "_source": ["lang"]}
+    execute_search_request(s, body).collect()  # warm: caches, tombstones
+    rows, jobs, plans = _run_counted(
+        s.spark, lambda: execute_search_request(s, body).collect())
+    assert len(rows) == 5 and plans
+    assert _python_or_shuffle(plans) == []
+    assert jobs <= 3
+    _, jobs, _ = _run_counted(s.spark, lambda: s._empty_scores().collect())
+    assert jobs == 0
+    with distributed_wand():
+        dist, _, plans = _run_counted(
+            s.spark, lambda: execute_search_request(s, body).collect())
+    assert dist == rows
+    assert any("MapInPandas" in line for line in _python_or_shuffle(plans))

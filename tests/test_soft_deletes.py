@@ -27,7 +27,7 @@ def _searcher(spark, path):
     return Searcher(spark, InvertedIndex(path))
 
 
-def test_soft_deletes_exclude_everywhere(spark, del_index):
+def test_soft_deletes_exclude_everywhere(spark, del_index, distributed_wand):
     s = _searcher(spark, del_index)
     base = s.search(Q.Match(field="text", text="the"), k=5,
                     mode="exhaustive").collect()
@@ -44,13 +44,18 @@ def test_soft_deletes_exclude_everywhere(spark, del_index):
                    mode="exhaustive")
     assert victim not in {r["doc_id"] for r in ex.collect()}
     assert ex.count() == n_before - 1
-    # WAND path: excluded AND still rank-identical to exhaustive
-    w = s2.search(Q.Match(field="text", text="the"), k=10, mode="wand")
-    e = s2.search(Q.Match(field="text", text="the"), k=10,
-                  mode="exhaustive")
-    assert [(r["doc_id"], round(r["score"], 4)) for r in w.collect()] == \
-           [(r["doc_id"], round(r["score"], 4)) for r in e.collect()]
-    assert victim not in {r["doc_id"] for r in w.collect()}
+    # WAND, driver and distributed: excluded AND still rank-identical to
+    # exhaustive
+    def ranked(df):
+        return [(r["doc_id"], round(r["score"], 4)) for r in df.collect()]
+
+    q = Q.Match(field="text", text="the")
+    w = ranked(s2.search(q, k=10, mode="wand"))
+    with distributed_wand():
+        d = ranked(s2.search(q, k=10, mode="wand"))
+    e = ranked(s2.search(q, k=10, mode="exhaustive"))
+    assert w == d == e
+    assert victim not in {doc for doc, _ in w}
     # positional path
     ph = s2.score(Q.MatchPhrase(field="text", text="the fast"))
     assert victim not in {r["doc_id"] for r in ph.collect()}

@@ -379,18 +379,23 @@ def test_kmeanspp_deterministic(spark, sf_dir):
 
 
 # ---------------- WAND over the buffer cap ----------------
-def test_wand_streaming_fallback_identical(searcher, monkeypatch):
-    """With the buffer cap forced tiny, every partition is scored as many
-    frames (each its complete buckets, θ carried across frames) — results
-    must still equal the exhaustive oracle (strict bounds prune
-    identically)."""
+def test_wand_streaming_fallback_identical(searcher, monkeypatch,
+                                          distributed_wand):
+    """With the buffer cap forced tiny, the driver's block set and every
+    distributed partition are scored as many frames (each its complete
+    buckets, θ carried across frames) — results must still equal the
+    exhaustive oracle in rank order (strict bounds prune identically)."""
     from opensearch_spark.search import wand as wand_mod
 
     q = Q.Match(field="text", text="spark table merge")
     exh = searcher.search(q, k=10, mode="exhaustive", round_scores=4).collect()
     monkeypatch.setattr(wand_mod, "MAX_BUFFER_ROWS", 2)
     got = searcher.search(q, k=10, mode="wand", round_scores=4).collect()
+    with distributed_wand():
+        dist = searcher.search(q, k=10, mode="wand",
+                               round_scores=4).collect()
     assert [(r["doc_id"], r["score"]) for r in got] == \
+           [(r["doc_id"], r["score"]) for r in dist] == \
            [(r["doc_id"], r["score"]) for r in exh]
 
 
