@@ -592,6 +592,9 @@ class InvertedIndex:
         with open(os.path.join(path, "meta.json")) as f:
             self.meta = json.load(f)
         self._cached: dict[str, DataFrame] = {}
+        # one liveDocs generation per reader: concurrent searches on a
+        # shared reader load (and charge) it once, never twice
+        self._tomb_lock = threading.RLock()
 
     def cache(self, spark: SparkSession) -> "InvertedIndex":
         """Pin the index tables in executor memory (`df.persist()`), the
@@ -653,9 +656,15 @@ class InvertedIndex:
         exact posture of Lucene's in-RAM liveDocs bitset per segment
         (soft-deleted docs stay in postings and STATS until a merge
         expunges them; only result sets exclude them). Memory bound:
-        8 bytes per tombstone until expunge-by-rebuild."""
-        if getattr(self, "_tomb_loaded", False):
-            return self._tomb
+        8 bytes per tombstone until expunge-by-rebuild. Concurrent
+        callers on one reader load it once, under ``_tomb_lock``."""
+        if not getattr(self, "_tomb_loaded", False):
+            with self._tomb_lock:
+                if not getattr(self, "_tomb_loaded", False):
+                    self._load_tombstones(spark)
+        return self._tomb
+
+    def _load_tombstones(self, spark: SparkSession) -> None:
         self._release_tomb_charge()
         self._tomb = None
         srcs = self._delete_sources()
@@ -685,7 +694,6 @@ class InvertedIndex:
                 arr = dels.toPandas()["doc_id"].to_numpy(dtype="int64")
                 self._tomb = _np.sort(arr)
         self._tomb_loaded = True
-        return self._tomb
 
     def _release_tomb_charge(self) -> None:
         from opensearch_spark.common.breaker import fielddata_breaker
@@ -702,23 +710,25 @@ class InvertedIndex:
         per executor (torrent blocks), while a closure-captured numpy
         array re-serializes into EVERY task. The UDFs resolve ``.value``
         executor-side."""
-        tomb = self.tombstones(spark)
-        if tomb is None:
-            return None
-        if getattr(self, "_tomb_bcast", None) is None:
-            self._tomb_bcast = spark.sparkContext.broadcast(tomb)
-        return self._tomb_bcast
+        with self._tomb_lock:
+            tomb = self.tombstones(spark)
+            if tomb is None:
+                return None
+            if getattr(self, "_tomb_bcast", None) is None:
+                self._tomb_bcast = spark.sparkContext.broadcast(tomb)
+            return self._tomb_bcast
 
     def refresh_tombstones(self) -> None:
         """Invalidate the cached delete set (call after delete_docs) —
         releases the reader's breaker charge so accounting follows the
         memory actually held."""
-        self._tomb_loaded = False
-        self._release_tomb_charge()
-        self._tomb_df = None  # the anti-join frame follows the same generation
-        if getattr(self, "_tomb_bcast", None) is not None:
-            self._tomb_bcast.unpersist()
-            self._tomb_bcast = None
+        with self._tomb_lock:
+            self._tomb_loaded = False
+            self._release_tomb_charge()
+            self._tomb_df = None  # the anti-join frame follows the same generation
+            if getattr(self, "_tomb_bcast", None) is not None:
+                self._tomb_bcast.unpersist()
+                self._tomb_bcast = None
 
     def _live(self, spark: SparkSession, df: DataFrame) -> DataFrame:
         """Filter a doc_id-bearing frame to live (non-deleted) docs."""

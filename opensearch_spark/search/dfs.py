@@ -39,7 +39,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from opensearch_spark.common.sparkconf import local_frame
 from opensearch_spark.scoring.bm25 import bm25_sql_expr
 
 
@@ -67,18 +66,10 @@ def sharded_search(s, text: str, *, field: str = "text", n_shards: int = 4,
         # AggregatedDfs = the coordinator's (delete-inclusive) Lucene
         # stats: dictionary df + meta docCount/avgdl, exactly what the
         # plain searcher inlines — driver-side, no extra Spark jobs
-        dfd = fs.term_dfs(terms)
-        live = [t for t in terms if t in dfd]
-        if not live:
-            return fs._empty_scores().select(
-                "doc_id", F.lit(0).alias("shard"), "score").limit(0)
-        flat = fs._flat_postings(live).withColumn("shard", shard)
-        dfreq = local_frame(
-            s.spark, [(t, dfd[t]) for t in live], "term string, df long")
-        per_term = (flat.join(F.broadcast(dfreq), "term")
-                    .withColumn("term_score", F.expr(bm25_sql_expr(
-                        "tf", "dl", "df", str(fs.N), str(fs.avgdl),
-                        k1=fs.k1, b=fs.b))))
+        stats = fs.term_stats(terms)
+        per_term = fs._bm25_scores(
+            [t for t in terms if t in stats], stats, 1.0,
+        ).withColumn("shard", shard)
     else:
         flat = fs._flat_postings(terms).withColumn("shard", shard)
         # shard-local stats over the live routing partition: n_shards
@@ -93,12 +84,12 @@ def sharded_search(s, text: str, *, field: str = "text", n_shards: int = 4,
         per_term = (flat
                     .join(F.broadcast(dfreq), ["shard", "term"])
                     .join(F.broadcast(stats), "shard")
-                    .withColumn("term_score", F.expr(bm25_sql_expr(
+                    .withColumn("tscore", F.expr(bm25_sql_expr(
                         "tf", "dl", "df", "N", "avgdl",
                         k1=fs.k1, b=fs.b))))
 
     per_doc = (per_term.groupBy("shard", "doc_id")
-               .agg(F.sum("term_score").alias("score")))
+               .agg(F.sum("tscore").alias("score")))
     if round_to is not None:
         per_doc = per_doc.withColumn("score", F.round("score", round_to))
 

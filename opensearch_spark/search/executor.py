@@ -7,11 +7,21 @@ DataFrame plan → global ``ORDER BY score LIMIT k`` (TakeOrderedAndProject =
 ``SearchPhaseController`` merge) → fetch join for hit content.
 
 Scoring modes:
-- exhaustive: ``_term_scores``, the one BM25 term-score plan (decoded
-  postings ⋈ broadcast df → float64 BM25 as a Catalyst SQL expression),
-  then groupBy sum. Match, term, cross_fields and explain all score
-  through it; it is the oracle-comparable mode and the scoring oracle for
-  WAND.
+- exhaustive: ``_term_scores``, the one per-posting plan — decoded
+  postings ⋈ broadcast per-term stats rows → a Catalyst SQL expression
+  per posting (``tscore``) — then each caller's own grouping. BM25 match,
+  term, cross_fields, explain and msearch, the LM / DFR / IB / DFI /
+  scripted similarities, ``sparse_topk`` and ``dfs.sharded_search(dfs=
+  True)`` all score through it; it is the oracle-comparable mode and the
+  scoring oracle for WAND. Two rules hold for every scorer because they
+  are written once:
+  - analyzer: ``_resolve`` is the one term-resolution step of a
+    Match-family query — it analyzes with ``q.analyzer`` when set, looks
+    up (df, cf) once through ``term_stats`` and keeps the ordered unique
+    live terms;
+  - boost: each built-in similarity (BM25, LM, DFR, IB, DFI) multiplies
+    by ``q.boost`` exactly once (Lucene's SimilarityBase posture); a
+    scripted similarity is evaluated as written, boost is the script's.
 - wand: ``wand.py``'s one block-max kernel; identical results (strict-
   bound skips). A top-level Match takes it under ``mode="auto"``, on one
   of two paths chosen by memory, never by a flag:
@@ -52,6 +62,8 @@ from opensearch_spark.search import queries as Q
 from opensearch_spark.search.fetchphase import source_filter
 
 SCORE_COLS = ("doc_id", "score")
+#: the decoded posting rows ``_flat_postings`` yields
+_FLAT_DDL = "term string, doc_id long, tf long, dl long"
 #: the posting-block columns the WAND kernel reads besides ``term_idx``
 _WAND_BLOCK_COLS = ("bucket", "first_doc", "n", "max_impact",
                     "docs_vb", "tfs_vb", "dls_vb")
@@ -132,6 +144,20 @@ def _damerau_leq(a: str, b: str, limit: int) -> bool:
     return d[la + 1][lb + 1] <= limit
 
 
+def _fuzziness(q: Q.Fuzzy) -> int:
+    """The query's edit budget; AUTO (libs/core Fuzziness) maps term
+    lengths 0-2, 3-5, 6+ to 0, 1, 2 edits."""
+    if q.fuzziness is not None:
+        return q.fuzziness
+    n = len(q.value)
+    return 0 if n <= 2 else (1 if n <= 5 else 2)
+
+
+def _wildcard_regex(value: str) -> str:
+    """Anchored regex of a Lucene wildcard (``*`` any run, ``?`` one char)."""
+    return "^" + re.escape(value).replace("\\*", ".*").replace("\\?", ".") + "$"
+
+
 def _damerau_udf(value: str, limit: int):
     """Arrow-batched exact Damerau accept test for the Spark-side
     dictionary expansion (applied AFTER the JVM levenshtein<=2*limit
@@ -164,7 +190,6 @@ class Searcher:
         # index per analyzed field and route by field name
         self.extra_fields = dict(extra_fields or {})
         self._dict_pd: pd.DataFrame | None = None
-        self._part_cache: dict[str, int] = {}
         if preload_dictionary == "auto":
             # vocabulary size decides the posture — read from the meta
             # cached at build time (zero Spark jobs per construction);
@@ -190,14 +215,18 @@ class Searcher:
         raise KeyError(f"no index for analyzed field {field!r}")
 
     def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
-        """(df, cf) per term; absent terms omitted."""
+        """(df, cf) per term; absent terms omitted (like a missing Lucene
+        term). The one dictionary lookup: the preloaded frame when the
+        vocabulary fits the driver, else one term-filtered Spark read."""
         uniq = list(dict.fromkeys(terms))
         if not uniq:
             return {}
         if self._dict_pd is not None:
-            found = self._dict_pd.index.intersection(uniq)
-            return {t: (int(self._dict_pd.loc[t, "df"]),
-                        int(self._dict_pd.loc[t, "cf"])) for t in found}
+            d = self._dict_pd
+            at = d.index.get_indexer(uniq)
+            df, cf = d["df"].to_numpy(), d["cf"].to_numpy()
+            return {t: (int(df[i]), int(cf[i]))
+                    for t, i in zip(uniq, at) if i >= 0}
         rows = (
             self.index.dictionary(self.spark)
             .where(F.col("term").isin(uniq))
@@ -207,20 +236,18 @@ class Searcher:
         return {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """df per term; absent terms omitted (like a missing Lucene term)."""
-        uniq = list(dict.fromkeys(terms))
-        if not uniq:
-            return {}
-        if self._dict_pd is not None:
-            found = self._dict_pd.index.intersection(uniq)
-            return {t: int(self._dict_pd.loc[t, "df"]) for t in found}
-        rows = (
-            self.index.dictionary(self.spark)
-            .where(F.col("term").isin(uniq))
-            .select("term", "df")
-            .collect()
-        )
-        return {r["term"]: int(r["df"]) for r in rows}
+        """df per term; absent terms omitted."""
+        return {t: df for t, (df, _) in self.term_stats(terms).items()}
+
+    def _resolve(self, q) -> tuple[list[str], list[str],
+                                   dict[str, tuple[int, int]]]:
+        """The one term-resolution step of every Match-family scorer:
+        ``q.text`` analyzed (with ``q.analyzer`` when the query sets one),
+        the (df, cf) of each token looked up once, and the ordered unique
+        live terms. Returns (tokens, live, stats)."""
+        terms = self.analyze(q.text, getattr(q, "analyzer", None))
+        stats = self.term_stats(terms)
+        return terms, [t for t in dict.fromkeys(terms) if t in stats], stats
 
     def _require_positions(self, op: str) -> None:
         if not self.index.meta.get("with_positions"):
@@ -236,7 +263,10 @@ class Searcher:
         """Decoded (term, doc_id, tf, dl) for the given terms — one batched
         block decode per Arrow batch in mapInPandas. Soft-deleted docs drop
         at decode time (liveDocs; stats intentionally keep counting them
-        until an expunging rebuild — Lucene's un-merged-segment behavior)."""
+        until an expunging rebuild — Lucene's un-merged-segment behavior).
+        No terms is an empty JVM-local frame: nothing to scan."""
+        if not terms:
+            return local_frame(self.spark, [], _FLAT_DDL)
         blocks = self._blocks_for_terms(terms)
         # broadcast handle, not the array: ships once per executor, and
         # the task closure stays bytes-sized however many docs are deleted
@@ -258,7 +288,7 @@ class Searcher:
                         "dl": dl,
                     })
 
-        return blocks.mapInPandas(decode, "term string, doc_id long, tf long, dl long")
+        return blocks.mapInPandas(decode, _FLAT_DDL)
 
     # ---------- scoring: match ----------
     def _common_terms(self, q: "Q.CommonTerms") -> DataFrame:
@@ -267,16 +297,16 @@ class Searcher:
         when >= 1, else a fraction of doc_count) are LOW-frequency and
         required; the rest only score. The reference itself rewrites to
         a boolean query over the df split — this does the same: one tiny
-        dictionary lookup (term_dfs, driver-side when the vocab is
+        dictionary lookup (``_resolve``, driver-side when the vocab is
         preloaded) classifies, then the standard Match/Bool plans run —
         no new physical operator, WAND-eligible subplans."""
-        terms = list(dict.fromkeys(self.analyze(q.text)))
+        tokens, _, stats = self._resolve(q)
+        terms = list(dict.fromkeys(tokens))
         if not terms:
             return self._empty_scores()
-        dfs = self.term_dfs(terms)
         cut = float(q.cutoff_frequency)
         max_df = cut if cut >= 1.0 else cut * self.index.doc_count
-        low = [t for t in terms if dfs.get(t, 0) <= max_df]
+        low = [t for t in terms if stats.get(t, (0, 0))[0] <= max_df]
         low_set = set(low)
         high = [t for t in terms if t not in low_set]
 
@@ -297,13 +327,11 @@ class Searcher:
         return self.score(_m(side, op, msm))
 
     def _match_exhaustive(self, q: Q.Match) -> DataFrame:
-        terms = self.analyze(q.text, getattr(q, "analyzer", None))
-        dfs = self.term_dfs(terms)
-        live = [t for t in dict.fromkeys(terms) if t in dfs]
+        terms, live, stats = self._resolve(q)
         n_required = self._n_required(q, live, terms)
         if not live or (q.operator == "and" and len(live) < len(set(terms))):
             return self._empty_scores()
-        agg = self._term_scores(live, dfs, q.boost).groupBy("doc_id").agg(
+        agg = self._bm25_scores(live, stats, q.boost).groupBy("doc_id").agg(
             F.sum("tscore").alias("score"), F.count("*").alias("_nt")
         )
         if n_required > 1:
@@ -330,15 +358,12 @@ class Searcher:
             CircuitBreakingException, request_breaker)
         from opensearch_spark.search.wand import wand_partition_fn
 
-        terms = self.analyze(q.text, getattr(q, "analyzer", None))
-        dfs = self.term_dfs(terms)
-        live = [t for t in dict.fromkeys(terms) if t in dfs]
+        terms, live, stats = self._resolve(q)
         if not live or (q.operator == "and" and len(live) < len(set(terms))):
             return self._empty_scores()
         n_required = self._n_required(q, live, terms)
-        weights = _bm25_weight(
-            self.N, np.array([dfs[t] for t in live]), self.k1, q.boost
-        )
+        dfs = [stats[t][0] for t in live]
+        weights = _bm25_weight(self.N, np.array(dfs), self.k1, q.boost)
         if not (weights > 0).any():
             # boost=0 zeroes every upper bound, which WAND's presence
             # test (term_ub > 0) cannot distinguish from an absent term
@@ -352,7 +377,7 @@ class Searcher:
         # ≈ 96 bytes each over decode_blocks' int64 arrays and the
         # kernel's float64 score and sort arrays. A refused charge is the
         # routing signal, never an error: the request runs distributed.
-        need = 96 * sum(dfs[t] for t in live)
+        need = 96 * sum(dfs)
         try:
             request_breaker.add_estimate(need, f"wand[{self.index.path}]")
         except CircuitBreakingException:
@@ -519,16 +544,11 @@ class Searcher:
         if isinstance(q, Q.Prefix):
             d = d.where(F.col("term").startswith(q.value))
         elif isinstance(q, Q.Wildcard):
-            pat = "^" + re.escape(q.value).replace("\\*", ".*").replace("\\?", ".") + "$"
-            d = d.where(F.col("term").rlike(pat))
+            d = d.where(F.col("term").rlike(_wildcard_regex(q.value)))
         elif isinstance(q, Q.Regexp):
             d = d.where(F.col("term").rlike("^(" + q.value + ")$"))
         elif isinstance(q, Q.Fuzzy):
-            v = q.value
-            if q.fuzziness is None:  # AUTO (libs/core Fuzziness): 0-2,3-5,6+ → 0,1,2
-                fz = 0 if len(v) <= 2 else (1 if len(v) <= 5 else 2)
-            else:
-                fz = q.fuzziness
+            v, fz = q.value, _fuzziness(q)
             d = d.where(F.length("term").between(len(v) - fz, len(v) + fz))
             if q.transpositions:
                 # one transposition = two classic edits, so DL<=fz implies
@@ -557,17 +577,12 @@ class Searcher:
         if isinstance(q, Q.Prefix):
             hits = list(vocab[vocab.str.startswith(q.value)])
         elif isinstance(q, Q.Wildcard):
-            pat = "^" + re.escape(q.value).replace("\\*", ".*").replace("\\?", ".") + "$"
-            hits = list(vocab[vocab.str.match(pat)])
+            hits = list(vocab[vocab.str.match(_wildcard_regex(q.value))])
         elif isinstance(q, Q.Regexp):
             pat = "^(" + q.value + ")$"
             hits = list(vocab[vocab.str.match(pat)])
         elif isinstance(q, Q.Fuzzy):
-            v = q.value
-            if q.fuzziness is None:  # AUTO (libs/core Fuzziness)
-                fz = 0 if len(v) <= 2 else (1 if len(v) <= 5 else 2)
-            else:
-                fz = q.fuzziness
+            v, fz = q.value, _fuzziness(q)
             cand = vocab[(vocab.str.len() >= len(v) - fz)
                          & (vocab.str.len() <= len(v) + fz)]
             accept = _damerau_leq if q.transpositions else _levenshtein_leq
@@ -675,34 +690,21 @@ class Searcher:
                     terms = [r["term"] for r in
                              d.where(F.lower(F.col("term")) == F.lit(lv))
                               .select("term").collect()]
-                if not terms:
-                    return self._empty_scores()
-                docs = self._flat_postings(terms).select("doc_id").distinct()
-                return docs.select(
-                    "doc_id", F.lit(float(q.boost)).alias("score"))
-            dfs = self.term_dfs([str(q.value)])
-            ts = self._term_scores(list(dfs), dfs, q.boost)
+                return self._constant_docs(terms, q.boost)
+            stats = self.term_stats([str(q.value)])
+            ts = self._bm25_scores(list(stats), stats, q.boost)
             return ts.groupBy("doc_id").agg(F.sum("tscore").alias("score"))
         if isinstance(q, Q.Terms) and (q.field == self.field
                                        or q.field in self.extra_fields):
             # TermsQuery on a text field: constant score over the union
             # of the LITERAL values' postings (no analysis)
             s = self._searcher_for(q.field)
-            dfs = s.term_dfs([str(v) for v in q.values])
-            live = [t for t in dict.fromkeys(str(v) for v in q.values)
-                    if t in dfs]
-            if not live:
-                return self._empty_scores()
-            docs = s._flat_postings(live).select("doc_id").distinct()
-            return docs.select("doc_id", F.lit(float(q.boost)).alias("score"))
+            live = list(s.term_stats([str(v) for v in q.values]))
+            return s._constant_docs(live, q.boost)
         if isinstance(q, (Q.Prefix, Q.Wildcard, Q.Regexp, Q.Fuzzy,
                           Q.Phonetic)) and q.field == self.field:
-            terms = self.expand_terms(q)
-            if not terms:
-                return self._empty_scores()
             # constant_score rewrite (the reference's default for multi-term)
-            docs = self._flat_postings(terms).select("doc_id").distinct()
-            return docs.select("doc_id", F.lit(float(q.boost)).alias("score"))
+            return self._constant_docs(self.expand_terms(q), q.boost)
         if isinstance(q, Q.TermsSet):
             dfs = self.term_dfs(q.values)
             live = [t for t in q.values if t in dfs]
@@ -916,21 +918,34 @@ class Searcher:
             return self._sum_union(per_field)
         return self._dismax_union(per_field, q.tie_breaker)
 
-    def _term_scores(self, live: list[str], dfs: dict[str, int],
-                     boost: float) -> DataFrame:
-        """(doc_id, term, tf, dl, df, tscore) per posting of the ``live``
-        terms (each a key of ``dfs``) — the one BM25 term-score plan:
-        decoded postings ⋈ broadcast df → ``bm25_sql_expr``. Match, term,
-        cross_fields and explain all build on it."""
-        if not live:
-            return local_frame(self.spark, [], (
-                "doc_id long, term string, tf long, dl long, df long, "
-                "tscore double"))
-        stats = local_frame(
-            self.spark, [(t, dfs[t]) for t in live], "term string, df long")
+    def _term_scores(self, live: list[str], rows: list[tuple], ddl: str,
+                     expr: str) -> DataFrame:
+        """The one per-posting scoring plan: the decoded postings of the
+        ``live`` terms ⋈ the broadcast stats ``rows`` (schema ``ddl``,
+        keyed by ``term`` plus any extra key such as ``query_id``), with
+        ``tscore`` = the SQL ``expr`` over the posting and stats columns.
+        Every postings scorer builds on it and keeps its own grouping,
+        msm filter, window and rounding."""
+        stats = local_frame(self.spark, rows, ddl)
         return self._flat_postings(live).join(F.broadcast(stats), "term") \
-            .select("doc_id", "term", "tf", "dl", "df",
-                    F.expr(self._bm25_sql(f"{boost}")).alias("tscore"))
+            .withColumn("tscore", F.expr(expr))
+
+    def _bm25_scores(self, live: list[str],
+                     stats: dict[str, tuple[int, int]],
+                     boost: float) -> DataFrame:
+        """``_term_scores`` under BM25 with each live term's dictionary df
+        (``stats`` as ``term_stats`` returns it) — match, term,
+        cross_fields, explain and ``dfs.sharded_search(dfs=True)``."""
+        return self._term_scores(
+            live, [(t, stats[t][0]) for t in live], "term string, df long",
+            self._bm25_sql(f"{boost}"))
+
+    def _constant_docs(self, terms: list[str], boost: float) -> DataFrame:
+        """Constant ``boost`` over the union of the ``terms``' postings —
+        the constant-score rewrite of a multi-term, terms or
+        case-insensitive term query."""
+        return self._flat_postings(terms).select("doc_id").distinct() \
+            .select("doc_id", F.lit(float(boost)).alias("score"))
 
     def _cross_fields(self, q: Q.MultiMatch) -> DataFrame:
         """cross_fields (MultiMatchQueryBuilder.java:74): term-centric —
@@ -941,10 +956,8 @@ class Searcher:
         frames = []
         for f in q.fields:
             s = self._searcher_for(f)
-            terms = s.analyze(q.text)
-            dfs = s.term_dfs(terms)
-            live = [t for t in dict.fromkeys(terms) if t in dfs]
-            frames.append(s._term_scores(live, dfs, q.boost))
+            _, live, stats = s._resolve(q)
+            frames.append(s._bm25_scores(live, stats, q.boost))
         u = reduce(DataFrame.unionByName, frames)
         per_term = u.groupBy("doc_id", "term").agg(
             F.max("tscore").alias("_mx"), F.sum("tscore").alias("_sm"))
@@ -1265,48 +1278,30 @@ class Searcher:
         idf_sum = sum(bm25_idf(self.N, [dfs[t] for t in terms]).tolist())
         return self._phrase_scores(m, idf_sum, q.boost)
 
-    # ---------- alternative similarity: LMDirichlet ----------
+    # ---------- alternative similarities ----------
+    def _similarity(self, q: Q.Match, expr: str) -> DataFrame:
+        """A built-in similarity: the per-posting ``expr`` times
+        ``q.boost``, applied once (Lucene's SimilarityBase multiplies every
+        built-in score by the boost), through the scripted plan."""
+        return self.score_scripted_similarity(q, f"{q.boost} * ({expr})")
+
     def score_lm_dirichlet(self, q: Q.Match, mu: float = 2000.0) -> DataFrame:
         """LMDirichlet similarity (SimilarityProviders.java:198-210 wiring;
         public Lucene LMDirichletSimilarity math): per matching term
         score = ln(1 + tf/(mu*p)) + ln(mu/(dl+mu)), p=(cf+1)/(sum_dl+1)."""
-        terms = self.analyze(q.text)
-        stats = self.term_stats(terms)
-        live = [t for t in dict.fromkeys(terms) if t in stats]
-        if not live:
-            return self._empty_scores()
-        flat = self._flat_postings(live)
-        cf_df = local_frame(
-            self.spark, [(t, stats[t][1]) for t in live], "term string, cf long")
         denom = float(self.sum_dl + 1)
-        scored = flat.join(F.broadcast(cf_df), "term").withColumn(
-            "tscore",
-            F.expr(f"{q.boost} * (ln(1.0 + tf / ({mu!r} * ((cf + 1.0) / {denom!r}))) "
-                   f"+ ln({mu!r} / (dl + {mu!r})))"),
-        )
-        return (scored.groupBy("doc_id").agg(F.sum("tscore").alias("score"))
-                .select("doc_id", "score"))
+        return self._similarity(
+            q, f"ln(1.0 + tf / ({mu!r} * ((cf + 1.0) / {denom!r}))) "
+               f"+ ln({mu!r} / (dl + {mu!r}))")
 
     def score_lm_jelinek_mercer(self, q: Q.Match, lam: float = 0.1) -> DataFrame:
         """LMJelinekMercer similarity (SimilarityProviders.java wiring;
         public Lucene math): score = Σ_t ln(1 + ((1-λ)·tf/dl) / (λ·p)),
         p = (cf+1)/(sum_dl+1)."""
-        terms = self.analyze(q.text)
-        stats = self.term_stats(terms)
-        live = [t for t in dict.fromkeys(terms) if t in stats]
-        if not live:
-            return self._empty_scores()
-        flat = self._flat_postings(live)
-        cf_df = local_frame(
-            self.spark, [(t, stats[t][1]) for t in live], "term string, cf long")
         denom = float(self.sum_dl + 1)
-        scored = flat.join(F.broadcast(cf_df), "term").withColumn(
-            "tscore",
-            F.expr(f"{q.boost} * ln(1.0 + ((1.0 - {lam!r}) * tf / dl) "
-                   f"/ ({lam!r} * ((cf + 1.0) / {denom!r})))"),
-        )
-        return (scored.groupBy("doc_id").agg(F.sum("tscore").alias("score"))
-                .select("doc_id", "score"))
+        return self._similarity(
+            q, f"ln(1.0 + ((1.0 - {lam!r}) * tf / dl) "
+               f"/ ({lam!r} * ((cf + 1.0) / {denom!r})))")
 
     def score_scripted_similarity(self, q: Q.Match, expr: str) -> DataFrame:
         """Scripted similarity (index/similarity/ScriptedSimilarity.java):
@@ -1314,22 +1309,16 @@ class Searcher:
         variables — ``tf``, ``df``, ``cf``, ``dl``, ``N``, ``avgdl`` —
         summed per doc. The reference exposes the same statistics to the
         Painless script (term.docFreq/totalTermFreq, doc.length,
-        field.docCount/sumTotalTermFreq)."""
-        terms = self.analyze(q.text)
-        stats = self.term_stats(terms)
-        live = [t for t in dict.fromkeys(terms) if t in stats]
-        if not live:
-            return self._empty_scores()
-        flat = self._flat_postings(live)
-        st = local_frame(
-            self.spark, [(t, stats[t][0], stats[t][1]) for t in live],
-            "term string, df long, cf long")
+        field.docCount/sumTotalTermFreq). The expression is evaluated as
+        written: ``q.boost`` is not applied, boosting is the script's job
+        (the reference leaves it to the script too)."""
+        _, live, stats = self._resolve(q)
         sub = re.sub(r"\bavgdl\b", f"CAST({self.avgdl!r} AS DOUBLE)", expr)
         sub = re.sub(r"\bN\b", f"CAST({self.N} AS DOUBLE)", sub)
-        scored = flat.join(F.broadcast(st), "term").withColumn(
-            "tscore", F.expr(sub).cast("double"))
-        return (scored.groupBy("doc_id").agg(F.sum("tscore").alias("score"))
-                .select("doc_id", "score"))
+        scored = self._term_scores(
+            live, [(t, *stats[t]) for t in live],
+            "term string, df long, cf long", f"CAST(({sub}) AS DOUBLE)")
+        return scored.groupBy("doc_id").agg(F.sum("tscore").alias("score"))
 
     def score_dfr(self, q: Q.Match, c: float = 1.0) -> DataFrame:
         """DFR similarity, model I(n) / after-effect L / normalization H2
@@ -1342,7 +1331,7 @@ class Searcher:
         expr = (f"(tf * log2(1.0 + {c!r} * avgdl / dl)) "
                 f"* log2((N + 1.0) / (df + 0.5)) "
                 f"/ ((tf * log2(1.0 + {c!r} * avgdl / dl)) + 1.0)")
-        return self.score_scripted_similarity(q, expr)
+        return self._similarity(q, expr)
 
     def score_ib(self, q: Q.Match, lam_mode: str = "df", c: float = 1.0) -> DataFrame:
         """IB (information-based) similarity, LL distribution / DF lambda /
@@ -1356,7 +1345,7 @@ class Searcher:
         expr = (f"-log2( ((df + 1.0) / (N + 1.0)) "
                 f"/ (((df + 1.0) / (N + 1.0)) "
                 f"+ tf * log2(1.0 + {c!r} * avgdl / dl)) )")
-        return self.score_scripted_similarity(q, expr)
+        return self._similarity(q, expr)
 
     def score_dfi(self, q: Q.Match) -> DataFrame:
         """DFI (divergence-from-independence) similarity with the
@@ -1372,7 +1361,7 @@ class Searcher:
         e = "((cf + 1.0) * dl / (N * avgdl + 1.0))"
         expr = (f"CASE WHEN tf <= {e} THEN 0.0 "
                 f"ELSE log2( (tf - {e}) * (tf - {e}) / {e} + 1.0 ) END")
-        return self.score_scripted_similarity(q, expr)
+        return self._similarity(q, expr)
 
     def matched_queries(self, named: dict[str, Q.Query]) -> DataFrame:
         """Named queries (`matched_queries`, SearchModule.java:1055): one
@@ -1402,16 +1391,11 @@ class Searcher:
         broadcast weights join, one (doc_id) aggregation,
         TakeOrderedAndProject — identical shape to a match, so the same
         posting layout serves lexical BM25 and learned-sparse queries."""
-        dfs = self.term_dfs(list(weights))
-        live = [t for t in weights if t in dfs]
-        if not live:
-            return self._empty_scores()
-        flat = self._flat_postings(live)
-        wdf = local_frame(self.spark, [(t, float(weights[t])) for t in live],
-                          "term string, w double")
-        scored = (flat.join(F.broadcast(wdf), "term")
-                  .groupBy("doc_id")
-                  .agg(F.sum(F.col("w") * F.col("tf")).alias("score")))
+        live = list(self.term_stats(list(weights)))
+        scored = self._term_scores(
+            live, [(t, float(weights[t])) for t in live],
+            "term string, w double", "w * tf",
+        ).groupBy("doc_id").agg(F.sum("tscore").alias("score"))
         if round_scores is not None:
             scored = scored.withColumn("score", F.round("score", round_scores))
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -1441,33 +1425,23 @@ class Searcher:
             u = reduce(DataFrame.unionByName, frames)
             return u.select("query_id", "doc_id", "score")
 
-        per_q = {qid: self.analyze(q.text, getattr(q, "analyzer", None))
-                 for qid, q in queries.items()}
-        all_terms = list(dict.fromkeys(
-            t for terms in per_q.values() for t in terms))
-        dfs = self.term_dfs(all_terms)
         wrows, live_union = [], set()
         for qid, q in queries.items():
-            terms = per_q[qid]
-            live = [t for t in dict.fromkeys(terms) if t in dfs]
+            terms, live, stats = self._resolve(q)
             if not live or (q.operator == "and"
                             and len(live) < len(set(terms))):
                 continue  # this query matches nothing — same as old path
             req = self._n_required(q, live, terms)
             for t in live:
-                wrows.append((qid, t, dfs[t], float(q.boost), req))
+                wrows.append((qid, t, stats[t][0], float(q.boost), req))
                 live_union.add(t)
         if not wrows:
             return local_frame(
                 self.spark, [], "query_id string, doc_id long, score double")
-        w = local_frame(
-            self.spark, wrows,
-            "query_id string, term string, df long, boost double, n_required int")
-        flat = self._flat_postings(sorted(live_union))
-        scored = flat.join(F.broadcast(w), "term").withColumn(
-            "tscore",
-            F.expr(self._bm25_sql("boost")),
-        )
+        scored = self._term_scores(
+            sorted(live_union), wrows,
+            "query_id string, term string, df long, boost double, n_required int",
+            self._bm25_sql("boost"))
         agg = (scored.groupBy("query_id", "doc_id")
                .agg(F.sum("tscore").alias("score"),
                     F.count("*").alias("_nt"),
@@ -1649,10 +1623,8 @@ class Searcher:
         """Per-hit score breakdown (TransportExplainAction analog): one row
         per (doc, term) with idf / tf-part / norm components. ``tscore``
         carries the query boost, so a doc's Σ tscore is its score."""
-        terms = self.analyze(q.text, getattr(q, "analyzer", None))
-        dfs = self.term_dfs(terms)
-        live = [t for t in dict.fromkeys(terms) if t in dfs]
-        return self._term_scores(live, dfs, q.boost).select(
+        _, live, stats = self._resolve(q)
+        return self._bm25_scores(live, stats, q.boost).select(
             "doc_id", "term",
             F.expr(f"ln(1.0 + ({self.N} - df + 0.5) / (df + 0.5))").alias("idf"),
             "tf", "dl", "tscore")

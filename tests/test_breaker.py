@@ -118,3 +118,52 @@ def test_tombstone_charge_released_on_refresh(spark, tmp_path):
         idx.refresh_tombstones()
         assert fielddata_breaker.used == 0   # released with the array
     reset_all()
+
+
+def test_concurrent_tombstone_load_charges_once(spark, tmp_path):
+    """Searches loading one shared reader's liveDocs together load and
+    charge it once; a refresh then releases all of it (no leaked charge).
+    The barrier holds the first loader until every other would arrive;
+    the reader's lock keeps them out, so the wait ends by timeout."""
+    import shutil
+    import threading
+
+    from opensearch_spark.common.breaker import fielddata_breaker
+    from opensearch_spark.entry_queries import get_searcher
+    from opensearch_spark.index.build import InvertedIndex
+
+    s = get_searcher(spark, "/root/testdata/sf0.001")
+    tree = str(tmp_path / "idx3")
+    shutil.copytree(s.index.path, tree,
+                    ignore=shutil.ignore_patterns("deletes"))
+    spark.createDataFrame([(1,), (2,), (3,)], ["doc_id"]) \
+        .write.parquet(tree + "/deletes")
+    reset_all()
+    idx = InvertedIndex(tree)
+    n = 6  # more loaders than cores
+    barrier = threading.Barrier(n, timeout=3)
+    sources = idx._delete_sources
+
+    def together():
+        try:
+            barrier.wait()
+        except threading.BrokenBarrierError:
+            pass
+        return sources()
+
+    idx._delete_sources = together
+    got = []
+    threads = [threading.Thread(target=lambda: got.append(
+        list(idx.tombstones(spark)))) for _ in range(n)]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+            assert not t.is_alive()
+        assert got == [[1, 2, 3]] * n
+        assert fielddata_breaker.used == 24
+        idx.refresh_tombstones()
+        assert fielddata_breaker.used == 0
+    finally:
+        reset_all()

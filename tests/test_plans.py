@@ -99,17 +99,39 @@ def test_hot_term_blocks_bounded_by_bucket(spark, idx):
     assert all(r["n"] <= 128 for r in blocks)
 
 
-def test_msearch_fused_single_postings_scan(spark, idx):
-    """A fused Match-batch _msearch must read the postings table ONCE for
-    the whole batch (shared term-pruned scan), not once per query."""
+def _scorer_frames():
+    """Every postings scorer that builds on ``Searcher._term_scores``."""
     import opensearch_spark.search.queries as Q
+    from opensearch_spark.search.dfs import sharded_search
+
+    m = Q.Match(field="content", text="import merge")
+    return {
+        "score_match": lambda s: s.score(m),
+        "score_term": lambda s: s.score(Q.Term(field="content", value="import")),
+        "explain": lambda s: s.explain(m),
+        "lm_dirichlet": lambda s: s.score_lm_dirichlet(m),
+        "lm_jelinek_mercer": lambda s: s.score_lm_jelinek_mercer(m),
+        "dfr": lambda s: s.score_dfr(m),
+        "ib": lambda s: s.score_ib(m),
+        "dfi": lambda s: s.score_dfi(m),
+        "scripted": lambda s: s.score_scripted_similarity(m, "tf * df"),
+        "sparse_topk": lambda s: s.sparse_topk({"import": 1.0, "merge": 0.5}),
+        # a fused Match batch shares one term-pruned scan for all queries
+        "msearch": lambda s: s.msearch({
+            "q1": m, "q2": Q.Match(field="content", text="table")}, k=5),
+        "sharded_dfs": lambda s: sharded_search(
+            s, "import merge", field="content", dfs=True),
+    }
+
+
+@pytest.mark.parametrize("scorer", list(_scorer_frames()))
+def test_single_postings_scan_per_scorer(spark, idx, scorer):
+    """Each scorer on the shared per-posting plan reads the postings table
+    exactly once — no scorer grows a second scan."""
     from opensearch_spark.search.executor import Searcher
 
     s = Searcher(spark, idx)
-    plan = explain_str(s.msearch({
-        "q1": Q.Match(field="content", text="import merge"),
-        "q2": Q.Match(field="content", text="table"),
-    }, k=5))
+    plan = explain_str(_scorer_frames()[scorer](s))
     n_posting_scans = sum(
         1 for line in plan.splitlines()
         if "InMemoryFileIndex" in line and "/postings" in line)

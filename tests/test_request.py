@@ -1,6 +1,8 @@
 """_search request-body executor (SearchSourceBuilder surface) —
 composition, paging, keyset search_after, failure modes."""
 
+import itertools
+
 import pytest
 
 from opensearch_spark.entry_queries import get_searcher
@@ -556,12 +558,17 @@ def test_docvalue_fields_executed(s):
     assert "text" not in wild.columns and "lang" in wild.columns
 
 
+_GROUPS = itertools.count()
+
+
 def _run_counted(spark, fn):
     """(result, Spark jobs run, executed-plan strings) of ``fn()``; the
-    plans come from every collect/toPandas the call makes."""
+    plans come from every collect/toPandas the call makes. Each call gets
+    its own job group: ``id(fn)`` is reused once a lambda is freed, and a
+    shared group would count an earlier call's jobs too."""
     from pyspark.sql.classic.dataframe import DataFrame as Classic
 
-    group = f"counted-{id(fn)}"
+    group = f"counted-{next(_GROUPS)}"
     plans = []
     orig = {name: getattr(Classic, name) for name in ("collect", "toPandas")}
 

@@ -528,6 +528,25 @@ def test_msearch_fused_respects_analyzer_override(spark, searcher):
     assert sorted(map(tuple, syn)) == sorted(map(tuple, direct))
 
 
+@pytest.mark.parametrize("similarity", [
+    "score_lm_dirichlet", "score_lm_jelinek_mercer", "score_dfr", "score_ib",
+    "score_dfi", "score_scripted_similarity"])
+def test_similarity_respects_analyzer_override(searcher, similarity):
+    """Every similarity resolves its terms through the match query's
+    analyzer: a synonym query scores like the query it expands to."""
+    fn = getattr(searcher, similarity)
+    args = (("tf * ln(1.0 + N / (df + 1.0))",)
+            if similarity == "score_scripted_similarity" else ())
+
+    def rows(q):
+        return sorted((r["doc_id"], round(r["score"], 9))
+                      for r in fn(q, *args).collect())
+
+    syn = rows(Q.Match(field="text", text="tbl rapid", analyzer="synonym_demo"))
+    direct = rows(Q.Match(field="text", text="table fast"))
+    assert direct and syn == direct
+
+
 def test_dsl_parses_new_query_options():
     from opensearch_spark.search import from_dsl
 

@@ -493,6 +493,27 @@ def test_dfr_ib_scripted_positive_and_deterministic(searcher):
         assert all(s > 0 for _, s in a)
 
 
+def test_similarity_boost_applied_once(searcher):
+    """Every built-in similarity (BM25, LM, DFR, IB, DFI) multiplies by the
+    query boost exactly once; a scripted expression is evaluated as
+    written, so boost leaves it unchanged. Two terms per doc at most, so
+    the per-doc sums are exact and doubling is bit-exact."""
+    def scores(fn, boost):
+        q = Q.Match(field="text", text="spark table", boost=boost)
+        return dict((r["doc_id"], r["score"]) for r in fn(q).collect())
+
+    for fn in (searcher.score, searcher.score_lm_dirichlet,
+               searcher.score_lm_jelinek_mercer, searcher.score_dfr,
+               searcher.score_ib, searcher.score_dfi):
+        one, two = scores(fn, 1.0), scores(fn, 2.0)
+        assert one and two == {d: 2.0 * v for d, v in one.items()}
+
+    def scripted(q):
+        return searcher.score_scripted_similarity(
+            q, "tf * ln(1.0 + N / (df + 1.0))")
+    assert scores(scripted, 2.0) == scores(scripted, 1.0)
+
+
 def test_dfi_zeroes_at_or_below_expectation(searcher):
     """DFI: a matching doc whose every term sits at or below its
     independence expectation scores exactly 0 (still matches); others
