@@ -21,6 +21,7 @@ node-level service.
 from __future__ import annotations
 
 import threading
+from contextlib import contextmanager
 
 
 class CircuitBreakingException(RuntimeError):
@@ -80,6 +81,22 @@ class CircuitBreaker:
         if self.parent is not None and freed > 0:
             self.parent.release(freed)
 
+    @contextmanager
+    def admit(self, n_bytes: int, label: str = "<unknown>"):
+        """Context manager yielding True while ``n_bytes`` are held, or
+        False — charging nothing — when a limit refuses them: for callers
+        that route a refused request to a plan that needs no driver
+        memory, instead of failing it."""
+        try:
+            self.add_estimate(n_bytes, label)
+        except CircuitBreakingException:
+            yield False
+            return
+        try:
+            yield True
+        finally:
+            self.release(n_bytes)
+
     def reserve(self, n_bytes: int, label: str = "<unknown>"):
         """Context manager: charge on enter, release on exit — for
         transient materializations."""
@@ -103,11 +120,12 @@ class CircuitBreaker:
 PARENT_LIMIT = 700 * (1 << 20)
 
 parent_breaker = CircuitBreaker("parent", PARENT_LIMIT)
-#: multi-term expansions / percolator candidate sets (reference `request`)
+#: multi-term expansions, percolator candidate sets and the postings or
+#: positions a driver-scored request holds (reference `request`)
 request_breaker = CircuitBreaker(
     "request", 400 * (1 << 20), parent=parent_breaker)
-#: long-lived per-reader driver state: tombstone liveDocs arrays
-#: (reference `fielddata` — the long-lived-per-reader analog)
+#: long-lived per-reader driver state: tombstone liveDocs arrays and doc
+#: values (reference `fielddata` — the long-lived-per-reader analog)
 fielddata_breaker = CircuitBreaker(
     "fielddata", 300 * (1 << 20), parent=parent_breaker)
 

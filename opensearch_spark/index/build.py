@@ -584,6 +584,15 @@ def _atomic_write_json(path: str, obj) -> None:
     os.replace(tmp, path)
 
 
+@dataclass(frozen=True)
+class DocValues:
+    """Per-doc columns held in the driver (``InvertedIndex.doc_values``)."""
+
+    doc_id: np.ndarray          # sorted int64, deleted docs included
+    dl: np.ndarray              # doc length, aligned with doc_id
+    keywords: dict[str, pd.Categorical]   # string keyword columns
+
+
 class InvertedIndex:
     """Query-side handle over a built index directory."""
 
@@ -592,9 +601,10 @@ class InvertedIndex:
         with open(os.path.join(path, "meta.json")) as f:
             self.meta = json.load(f)
         self._cached: dict[str, DataFrame] = {}
-        # one liveDocs generation per reader: concurrent searches on a
-        # shared reader load (and charge) it once, never twice
-        self._tomb_lock = threading.RLock()
+        # one liveDocs generation and one doc-values load per reader:
+        # concurrent searches on a shared reader load (and charge) each
+        # once, never twice
+        self._lock = threading.RLock()
 
     def cache(self, spark: SparkSession) -> "InvertedIndex":
         """Pin the index tables in executor memory (`df.persist()`), the
@@ -657,9 +667,9 @@ class InvertedIndex:
         (soft-deleted docs stay in postings and STATS until a merge
         expunges them; only result sets exclude them). Memory bound:
         8 bytes per tombstone until expunge-by-rebuild. Concurrent
-        callers on one reader load it once, under ``_tomb_lock``."""
+        callers on one reader load it once, under ``_lock``."""
         if not getattr(self, "_tomb_loaded", False):
-            with self._tomb_lock:
+            with self._lock:
                 if not getattr(self, "_tomb_loaded", False):
                     self._load_tombstones(spark)
         return self._tomb
@@ -703,6 +713,46 @@ class InvertedIndex:
             fielddata_breaker.release(charged)
             self._tomb_charged = 0
 
+    def doc_values(self, spark: SparkSession) -> "DocValues | None":
+        """The raw docs table's sorted ``doc_id``, its ``dl`` and its string
+        keyword columns, held in the driver — the analog of Lucene's
+        per-segment doc values, read by the requests scored in the driver.
+        Deleted docs are included: liveDocs stays in ``tombstones()``, so
+        the arrays never change with a refresh. Loaded once per reader
+        under ``_lock`` and charged once to ``fielddata_breaker`` until the
+        reader is freed. None when the breaker refuses: the caller then
+        runs its Spark plan, and a later call tries again."""
+        if getattr(self, "_doc_values", None) is None:
+            with self._lock:
+                if getattr(self, "_doc_values", None) is None:
+                    self._doc_values = self._load_doc_values(spark)
+        return self._doc_values
+
+    def _load_doc_values(self, spark: SparkSession) -> "DocValues | None":
+        import weakref
+
+        import numpy as np
+
+        from opensearch_spark.common.breaker import (
+            CircuitBreakingException, fielddata_breaker)
+
+        docs = self._table(spark, "docs")
+        kw = set(self.meta.get("keyword_cols", ()))
+        kw = [f.name for f in docs.schema.fields
+              if f.name in kw and isinstance(f.dataType, T.StringType)]
+        # 8 bytes each for doc_id and dl, ≈ 4 per keyword code; charged
+        # before the collect, from the build's doc count
+        need = self.doc_count * (16 + 4 * len(kw))
+        try:
+            fielddata_breaker.add_estimate(need, f"doc_values[{self.path}]")
+        except CircuitBreakingException:
+            return None
+        weakref.finalize(self, fielddata_breaker.release, need)
+        pdf = docs.select("doc_id", "dl", *kw).toPandas()
+        pdf = pdf.take(np.argsort(pdf["doc_id"].to_numpy(), kind="stable"))
+        return DocValues(pdf["doc_id"].to_numpy(), pdf["dl"].to_numpy(),
+                         {c: pd.Categorical(pdf[c]) for c in kw})
+
     def tombstones_bcast(self, spark: SparkSession):
         """Spark Broadcast handle of the sorted tombstone array, or None
         when the index has no deletes. This — not the raw array — is what
@@ -710,7 +760,7 @@ class InvertedIndex:
         per executor (torrent blocks), while a closure-captured numpy
         array re-serializes into EVERY task. The UDFs resolve ``.value``
         executor-side."""
-        with self._tomb_lock:
+        with self._lock:
             tomb = self.tombstones(spark)
             if tomb is None:
                 return None
@@ -722,7 +772,7 @@ class InvertedIndex:
         """Invalidate the cached delete set (call after delete_docs) —
         releases the reader's breaker charge so accounting follows the
         memory actually held."""
-        with self._tomb_lock:
+        with self._lock:
             self._tomb_loaded = False
             self._release_tomb_charge()
             self._tomb_df = None  # the anti-join frame follows the same generation

@@ -13,27 +13,43 @@ Scoring modes:
   term, cross_fields, explain and msearch, the LM / DFR / IB / DFI /
   scripted similarities, ``sparse_topk`` and ``dfs.sharded_search(dfs=
   True)`` all score through it; it is the oracle-comparable mode and the
-  scoring oracle for WAND. Two rules hold for every scorer because they
-  are written once:
+  scoring oracle for WAND. Three rules hold for every scorer because
+  they are written once:
   - analyzer: ``_resolve`` is the one term-resolution step of a
     Match-family query — it analyzes with ``q.analyzer`` when set, looks
     up (df, cf) once through ``term_stats`` and keeps the ordered unique
     live terms;
+  - match: ``_match_terms`` applies ``operator`` and
+    ``minimum_should_match`` (how many query terms a doc must hold; an
+    ``and`` naming an absent term matches nothing) for BM25, WAND,
+    explain, msearch and every similarity;
   - boost: each built-in similarity (BM25, LM, DFR, IB, DFI) multiplies
     by ``q.boost`` exactly once (Lucene's SimilarityBase posture); a
     scripted similarity is evaluated as written, boost is the script's.
 - wand: ``wand.py``'s one block-max kernel; identical results (strict-
-  bound skips). A top-level Match takes it under ``mode="auto"``, on one
-  of two paths chosen by memory, never by a flag:
-  - driver: when ``common/breaker.request_breaker`` admits an estimate of
-    the decoded postings (Σ df of the live terms × a per-posting byte
-    cost), the term-pruned blocks are collected through Arrow in one
-    JVM-only action and scored in the driver; the top ``k + margin``
-    comes back as a JVM-local relation. No shuffle, no Python worker.
-    The charge is held while the blocks are decoded, then released.
-  - distributed: when the breaker refuses, one shuffle co-locates each
-    bucket's blocks and the kernel runs per Spark task in mapInPandas.
-  Either way ``search()`` rounds, re-ranks and cuts in Spark.
+  bound skips). A top-level Match takes it under ``mode="auto"``, and so
+  does the match of a Bool whose other clauses are keyword ``term`` /
+  ``terms`` filters (``_bool_wand``: the docs they exclude join the
+  tombstones).
+
+Three request shapes run in the driver — a top-level match, that bool,
+and a sloppy ``match_phrase`` (``spans.span_counts`` then the phrase
+BM25 in numpy) — each on one of two paths chosen by memory, never by a
+flag:
+- driver: when ``common/breaker.request_breaker`` admits an estimate of
+  what the request holds (decoded postings: Σ df of the live terms × a
+  per-posting byte cost; positions: per row and per position), the
+  term-pruned rows are collected through Arrow in one JVM-only action and
+  scored in the driver; the result comes back as a JVM-local relation.
+  No shuffle, no Python worker. The charge is held while the rows are
+  scored, then released. The bool and the phrase also read the reader's
+  doc values (``InvertedIndex.doc_values``: doc lengths and keyword
+  columns), charged once per reader to ``fielddata_breaker``.
+- Spark: when either breaker refuses, the request runs its Spark plan —
+  for a match, one shuffle co-locates each bucket's blocks and the WAND
+  kernel runs per Spark task in mapInPandas; the bool and the phrase run
+  ``_bool`` and the doc-partitioned span plan.
+Either way ``search()`` rounds, re-ranks and cuts in Spark.
 
 Every small per-request frame (term weights, stats, empty results) is
 built by ``common/sparkconf.local_frame`` as a JVM-local relation, so no
@@ -156,6 +172,19 @@ def _fuzziness(q: Q.Fuzzy) -> int:
 def _wildcard_regex(value: str) -> str:
     """Anchored regex of a Lucene wildcard (``*`` any run, ``?`` one char)."""
     return "^" + re.escape(value).replace("\\*", ".*").replace("\\?", ".") + "$"
+
+
+def _keyword_values(q) -> list[str] | None:
+    """The values of a plain ``term``/``terms`` query when every one is a
+    string — the filter clauses a driver-scored bool reads from doc
+    values — else None."""
+    if type(q) is Q.Term and not q.case_insensitive:
+        values = [q.value]
+    elif type(q) is Q.Terms:
+        values = list(q.values)
+    else:
+        return None
+    return values if all(isinstance(v, str) for v in values) else None
 
 
 def _damerau_udf(value: str, limit: int):
@@ -327,18 +356,37 @@ class Searcher:
         return self.score(_m(side, op, msm))
 
     def _match_exhaustive(self, q: Q.Match) -> DataFrame:
-        terms, live, stats = self._resolve(q)
-        n_required = self._n_required(q, live, terms)
-        if not live or (q.operator == "and" and len(live) < len(set(terms))):
+        live, stats, n_required = self._match_terms(q)
+        if not live:
             return self._empty_scores()
-        agg = self._bm25_scores(live, stats, q.boost).groupBy("doc_id").agg(
-            F.sum("tscore").alias("score"), F.count("*").alias("_nt")
-        )
+        return self._doc_sums(self._bm25_scores(live, stats, q.boost),
+                              n_required)
+
+    def _match_terms(self, q: Q.Match) -> tuple[
+            list[str], dict[str, tuple[int, int]], int]:
+        """The one match rule of every Match scorer (BM25 exhaustive and
+        WAND, explain, msearch and every similarity): ``_resolve``'s live
+        terms and stats, plus how many distinct query terms a doc must
+        hold (``operator`` / ``minimum_should_match``). ``live`` comes back
+        empty when nothing can match: no term is live, or ``operator:
+        and`` names a term absent from the index. Returns (live, stats,
+        n_required)."""
+        terms, live, stats = self._resolve(q)
+        if q.operator == "and" and len(live) < len(set(terms)):
+            live = []
+        return live, stats, self._n_required(q, terms)
+
+    @staticmethod
+    def _doc_sums(scored: DataFrame, n_required: int) -> DataFrame:
+        """(doc_id, score): Σ ``tscore`` per doc over ``_term_scores``
+        rows, keeping the docs that hold ``n_required`` of the terms."""
+        agg = scored.groupBy("doc_id").agg(
+            F.sum("tscore").alias("score"), F.count("*").alias("_nt"))
         if n_required > 1:
             agg = agg.where(F.col("_nt") >= n_required)
         return agg.select("doc_id", "score")
 
-    def _n_required(self, q: Q.Match, live: list[str], terms: list[str]) -> int:
+    def _n_required(self, q: Q.Match, terms: list[str]) -> int:
         if q.operator == "and":
             return len(set(terms))
         msm = q.minimum_should_match
@@ -354,14 +402,22 @@ class Searcher:
         return max(msm, 1) if msm else 1
 
     def _match_wand(self, q: Q.Match, k: int) -> DataFrame:
-        from opensearch_spark.common.breaker import (
-            CircuitBreakingException, request_breaker)
+        plan = self._wand_plan(q, k)
+        if isinstance(plan, DataFrame):
+            return plan
+        live, kernel, n_postings = plan
+        page = self._wand_in_driver(live, kernel, n_postings)
+        return page if page is not None else self._match_wand_spark(live, kernel)
+
+    def _wand_plan(self, q: Q.Match, k: int):
+        """(live terms, kernel, Σ df) of a match's WAND run, or the frame
+        the match reduces to without one: empty when nothing can match,
+        and the exhaustive twin when no weight is positive."""
         from opensearch_spark.search.wand import wand_partition_fn
 
-        terms, live, stats = self._resolve(q)
-        if not live or (q.operator == "and" and len(live) < len(set(terms))):
+        live, stats, n_required = self._match_terms(q)
+        if not live:
             return self._empty_scores()
-        n_required = self._n_required(q, live, terms)
         dfs = [stats[t][0] for t in live]
         weights = _bm25_weight(self.N, np.array(dfs), self.k1, q.boost)
         if not (weights > 0).any():
@@ -373,33 +429,86 @@ class Searcher:
             return self._match_exhaustive(q)
         kernel = partial(wand_partition_fn, list(weights), k, self.k1,
                          self.b, self.avgdl, n_required)
-        # the driver path holds every posting of the live terms decoded:
-        # ≈ 96 bytes each over decode_blocks' int64 arrays and the
-        # kernel's float64 score and sort arrays. A refused charge is the
-        # routing signal, never an error: the request runs distributed.
-        need = 96 * sum(dfs)
-        try:
-            request_breaker.add_estimate(need, f"wand[{self.index.path}]")
-        except CircuitBreakingException:
-            return self._match_wand_spark(live, kernel)
-        try:
-            return self._match_wand_driver(live, kernel)
-        finally:
-            request_breaker.release(need)
+        return live, kernel, sum(dfs)
 
-    def _match_wand_driver(self, live: list[str], kernel) -> DataFrame:
+    def _wand_in_driver(self, live: list[str], kernel, n_postings: int,
+                        dropped: np.ndarray | None = None) -> DataFrame | None:
         """The term-pruned blocks collected through Arrow (one JVM-only
         action), scored in the driver by the same kernel, returned as a
-        JVM-local top-k — no shuffle and no Python worker."""
-        blocks = self._blocks_for_terms(live).select(
-            "term", *_WAND_BLOCK_COLS).toPandas()
-        blocks["term_idx"] = blocks["term"].map(
-            {t: i for i, t in enumerate(live)})
-        order = np.lexsort((blocks["term_idx"].to_numpy(),
-                            blocks["bucket"].to_numpy()))
-        run = kernel(tombstones=self.index.tombstones(self.spark))
-        page = next(run(iter([blocks.take(order)])))
-        return local_frame(self.spark, page, "doc_id long, score double")
+        JVM-local top-k — no shuffle and no Python worker. ``dropped``
+        (sorted doc ids a bool's filters exclude) joins the liveDocs
+        tombstones: dropping docs only lowers realized scores, so every
+        skip bound stays strict. None when ``request_breaker`` refuses the
+        decoded postings (≈ 96 bytes each over decode_blocks' int64 arrays
+        and the kernel's float64 score and sort arrays): a refusal is the
+        routing signal, never an error, and the caller runs its Spark
+        plan."""
+        from opensearch_spark.common.breaker import request_breaker
+
+        with request_breaker.admit(96 * n_postings,
+                                   f"wand[{self.index.path}]") as admitted:
+            if not admitted:
+                return None
+            blocks = self._blocks_for_terms(live).select(
+                "term", *_WAND_BLOCK_COLS).toPandas()
+            blocks["term_idx"] = blocks["term"].map(
+                {t: i for i, t in enumerate(live)})
+            order = np.lexsort((blocks["term_idx"].to_numpy(),
+                                blocks["bucket"].to_numpy()))
+            tomb = self.index.tombstones(self.spark)
+            if dropped is not None and dropped.size:
+                tomb = dropped if tomb is None else np.union1d(tomb, dropped)
+            page = next(kernel(tombstones=tomb)(iter([blocks.take(order)])))
+            return local_frame(self.spark, page, "doc_id long, score double")
+
+    def _bool_wand(self, q: Q.Bool, k: int) -> DataFrame:
+        """A bool whose only scoring clause is one ``must`` match on this
+        field, filtered by ``term``/``terms`` clauses on string keyword
+        columns (``filter`` or ``must_not``), with no ``should`` and no
+        msm: the match's WAND in the driver, with the docs the filters
+        exclude (read from the reader's doc values) added to its
+        tombstones, then ``Bool.boost`` as ``_bool`` applies it. Any other
+        bool, and a refused doc-values or postings charge, runs ``_bool``'s
+        Spark plan."""
+        dropped = self._bool_dropped(q)
+        if dropped is None:
+            return self._bool(q)
+        plan = self._wand_plan(q.must[0], k)
+        if isinstance(plan, DataFrame):
+            return plan  # empty: a served match's weights are positive
+        page = self._wand_in_driver(*plan, dropped)
+        if page is None:
+            return self._bool(q)
+        return page if q.boost == 1.0 else \
+            page.withColumn("score", F.col("score") * F.lit(q.boost))
+
+    def _bool_dropped(self, q: Q.Bool) -> np.ndarray | None:
+        """Sorted ids of the docs a ``_bool_wand`` bool's filters exclude,
+        or None when the bool is not of that shape or the doc values are
+        refused. Both boosts must be positive: a zero or negative one
+        would turn the kernel's top-k into the wrong end of the order."""
+        must = q.must[0] if len(q.must) == 1 else None
+        clauses = [*q.filter, *q.must_not]
+        if not (type(must) is Q.Match and must.field == self.field
+                and must.boost > 0 and q.boost > 0 and not q.should
+                and q.minimum_should_match is None
+                and all(_keyword_values(c) is not None for c in clauses)):
+            return None
+        dv = self.index.doc_values(self.spark)
+        if dv is None or any(c.field not in dv.keywords for c in clauses):
+            return None
+
+        def hits(c) -> np.ndarray:
+            col = dv.keywords[c.field]
+            return np.isin(col.codes, np.flatnonzero(
+                col.categories.isin(_keyword_values(c))))
+
+        keep = np.ones(dv.doc_id.size, dtype=bool)
+        for c in q.filter:
+            keep &= hits(c)
+        for c in q.must_not:
+            keep &= ~hits(c)
+        return dv.doc_id[~keep]
 
     def _match_wand_spark(self, live: list[str], kernel) -> DataFrame:
         """The distributed twin: ONE shuffle co-locates each bucket's
@@ -1267,16 +1376,31 @@ class Searcher:
         over ptf with idf summed over terms, like the exact-phrase path
         (slop=0 chains all have matchLength 0, so the exact path is the
         ptf-integer special case)."""
-        from opensearch_spark.search.spans import span_match_counts
+        from opensearch_spark.search.spans import SPAN_SCHEMA_W, span_counts
 
         self._require_positions("match_phrase(slop)")
         dfs = self.term_dfs(terms)
         if len(dfs) < len(set(terms)):
             return self._empty_scores()
-        m = span_match_counts(self, terms, q.slop, True, sloppy_freq=True) \
-            .withColumnRenamed("n_matches", "ptf")
         idf_sum = sum(bm25_idf(self.N, [dfs[t] for t in terms]).tolist())
-        return self._phrase_scores(m, idf_sum, q.boost)
+        counts = span_counts(self, terms, q.slop, True, sloppy_freq=True)
+        dv = None
+        if isinstance(counts, pd.DataFrame):
+            dv = self.index.doc_values(self.spark)
+            if dv is None:
+                counts = local_frame(self.spark, counts, SPAN_SCHEMA_W)
+        if dv is None:
+            return self._phrase_scores(
+                counts.withColumnRenamed("n_matches", "ptf"), idf_sum, q.boost)
+        # the driver leg: _phrase_scores' formula in its operation order
+        docs = counts["doc_id"].to_numpy()
+        ptf = counts["n_matches"].to_numpy()
+        dl = dv.dl[np.searchsorted(dv.doc_id, docs)]
+        k1, b = self.k1, self.b
+        score = q.boost * idf_sum * (k1 + 1.0) * ptf \
+            / (ptf + k1 * (1.0 - b + b * dl / self.avgdl))
+        return local_frame(self.spark, {"doc_id": docs, "score": score},
+                           "doc_id long, score double")
 
     # ---------- alternative similarities ----------
     def _similarity(self, q: Q.Match, expr: str) -> DataFrame:
@@ -1312,13 +1436,13 @@ class Searcher:
         field.docCount/sumTotalTermFreq). The expression is evaluated as
         written: ``q.boost`` is not applied, boosting is the script's job
         (the reference leaves it to the script too)."""
-        _, live, stats = self._resolve(q)
+        live, stats, n_required = self._match_terms(q)
         sub = re.sub(r"\bavgdl\b", f"CAST({self.avgdl!r} AS DOUBLE)", expr)
         sub = re.sub(r"\bN\b", f"CAST({self.N} AS DOUBLE)", sub)
         scored = self._term_scores(
             live, [(t, *stats[t]) for t in live],
             "term string, df long, cf long", f"CAST(({sub}) AS DOUBLE)")
-        return scored.groupBy("doc_id").agg(F.sum("tscore").alias("score"))
+        return self._doc_sums(scored, n_required)
 
     def score_dfr(self, q: Q.Match, c: float = 1.0) -> DataFrame:
         """DFR similarity, model I(n) / after-effect L / normalization H2
@@ -1427,11 +1551,7 @@ class Searcher:
 
         wrows, live_union = [], set()
         for qid, q in queries.items():
-            terms, live, stats = self._resolve(q)
-            if not live or (q.operator == "and"
-                            and len(live) < len(set(terms))):
-                continue  # this query matches nothing — same as old path
-            req = self._n_required(q, live, terms)
+            live, stats, req = self._match_terms(q)
             for t in live:
                 wrows.append((qid, t, stats[t][0], float(q.boost), req))
                 live_union.add(t)
@@ -1534,11 +1654,20 @@ class Searcher:
     def search(self, q, k: int = 10, mode: str = "auto",
                round_scores: int | None = None, margin: int = 50) -> DataFrame:
         """Top-k (doc_id, score), ties broken by ascending doc_id (Lucene
-        behavior). ``mode`` is ``auto`` (WAND for a top-level Match),
-        ``wand`` or ``exhaustive``. ``round_scores`` rounds for oracle
-        comparison; candidates are over-fetched by ``margin`` then re-ranked
-        on the rounded score so rounding cannot flip the cut (see
-        bench/oracle notes)."""
+        behavior). ``mode`` is ``auto`` (WAND for a top-level Match or
+        Bool), ``wand`` or ``exhaustive``. ``round_scores`` rounds for
+        oracle comparison; candidates are over-fetched by ``margin`` then
+        re-ranked on the rounded score so rounding cannot flip the cut (see
+        bench/oracle notes).
+
+        Three request shapes are scored in the driver, with no shuffle and
+        no Python worker: a top-level match (``_match_wand``), a bool of
+        one must match and keyword ``term``/``terms`` filters
+        (``_bool_wand``), and a sloppy ``match_phrase`` (``_phrase_sloppy``
+        over ``spans.span_counts``). One rule routes all three: when
+        ``request_breaker`` refuses the postings or positions the request
+        would hold, or ``fielddata_breaker`` the doc values it reads, the
+        request runs its Spark plan instead."""
         if mode not in ("auto", "wand", "exhaustive"):
             raise ValueError(
                 f"unknown search mode {mode!r}; "
@@ -1564,10 +1693,12 @@ class Searcher:
             use_wand = False  # WAND is postings-only; term path scores it
         else:
             use_wand = (mode == "wand"
-                        or (mode == "auto" and isinstance(q, Q.Match)))
+                        or (mode == "auto" and isinstance(q, (Q.Match, Q.Bool))))
         kk = k + margin if round_scores is not None else k
         if use_wand and isinstance(q, Q.Match):
             scores = self._match_wand(q, kk)
+        elif use_wand and isinstance(q, Q.Bool):
+            scores = self._bool_wand(q, kk)
         else:
             scores = self.score(q)
         top = scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(kk)
@@ -1622,9 +1753,15 @@ class Searcher:
     def explain(self, q: Q.Match) -> DataFrame:
         """Per-hit score breakdown (TransportExplainAction analog): one row
         per (doc, term) with idf / tf-part / norm components. ``tscore``
-        carries the query boost, so a doc's Σ tscore is its score."""
-        _, live, stats = self._resolve(q)
-        return self._bm25_scores(live, stats, q.boost).select(
+        carries the query boost, so a doc's Σ tscore is its score. Only
+        the docs the match keeps (``_match_terms``) have rows."""
+        live, stats, n_required = self._match_terms(q)
+        scored = self._bm25_scores(live, stats, q.boost)
+        if n_required > 1:
+            scored = scored.withColumn(
+                "_nt", F.count("*").over(W.partitionBy("doc_id"))) \
+                .where(F.col("_nt") >= n_required)
+        return scored.select(
             "doc_id", "term",
             F.expr(f"ln(1.0 + ({self.N} - df + 0.5) / (df + 0.5))").alias("idf"),
             "tf", "dl", "tscore")

@@ -32,9 +32,11 @@ module (highlight/suggest/rescore/collapse each have their own gated
 API) — explicit, never silently ignored. Everything composes into ONE
 plan: the query's bounded page broadcast-joins the docs table once for
 one projection (fetchphase.fetch_columns), so a full-body request costs
-the same as its bare query at any corpus size. One order list (the sort
-spec or ``score desc``, then ``doc_id``) cuts the page and re-orders it
-after the join, so the hits come back in rank order.
+the same as its bare query at any corpus size; a field sort's key join
+carries the projected columns, so it reads the docs table once too. One
+order list (the sort spec or ``score desc``, then ``doc_id``) cuts the
+page and re-orders it after the join, so the hits come back in rank
+order.
 """
 
 from __future__ import annotations
@@ -258,8 +260,15 @@ def execute_search_request(s, body: dict, *,
             else s.matching_docs(ast)
         return _compile_aggs(matching, docs, aggs)
 
+    # fetch sub-phases: one projection, resolved once for either order
+    from opensearch_spark.search import fetchphase
+
+    cols = fetchphase.fetch_columns(
+        stored.columns,
+        fetchphase.field_mapping(docs, (s.field, *s.extra_fields)), body)
     sort = body.get("sort")
     spec = _sort_spec(sort) if sort else [("_score", False)]
+    page_cols = None
     if spec != [("_score", False)]:
         # generic sort path: any field order, _score at any position or
         # direction (SortBuilder list semantics)
@@ -268,7 +277,11 @@ def execute_search_request(s, body: dict, *,
         else:
             base = s.matching_docs(ast)
         keys = [f for f, _ in spec if f != "_score"]
-        hits = base.join(docs.select("doc_id", *keys), "doc_id")
+        page_cols = base.columns + [k for k in keys if k not in base.columns]
+        # the sort-key join carries every docs column the fetch projects,
+        # so the docs table is read once (column pruning keeps the scan
+        # to what the keys and the projection use)
+        hits = base.join(fetchphase.with_derived(docs), "doc_id")
         order = [F.asc(f) if asc else F.desc(f) for f, asc in spec]
         order.append(F.asc("doc_id"))  # stable tiebreak (shard doc order)
         if "search_after" in body:
@@ -314,14 +327,11 @@ def execute_search_request(s, body: dict, *,
     hits = hits.orderBy(*order)
     out = hits.offset(offset).limit(size) if offset else hits.limit(size)
 
-    # fetch sub-phases: one projection over one broadcast join of the
-    # bounded page, re-ordered by rank (a TakeOrderedAndProject)
-    from opensearch_spark.search import fetchphase
-
-    cols = fetchphase.fetch_columns(
-        stored.columns,
-        fetchphase.field_mapping(docs, (s.field, *s.extra_fields)), body)
-    if cols:
+    if page_cols is not None:
+        out = fetchphase.select_fetched(out, page_cols, cols)
+    elif cols:
+        # one broadcast join of the bounded page, re-ordered by rank (a
+        # TakeOrderedAndProject)
         out = fetchphase.select_fetched(
             fetchphase.join_page(docs, out).orderBy(*order).limit(size),
             out.columns, cols)

@@ -11,7 +11,7 @@ doc with p occurrences of each of n terms materialized p^n rows (hot term
 × long doc = blow-up). Here the positions rows for the query clauses are
 grouped **per doc** (group size = #clauses rows, each holding one position
 array), and a vectorized numpy merge enumerates matches in
-O(Σ|positions|·log n) per doc inside ``applyInPandas``:
+O(Σ|positions|·log n) per doc (``_span_stream_fn``):
 
 - ordered (``in_order=True``): for every start position of clause 0 the
   *greedy minimal chain* (each next clause's smallest position strictly
@@ -24,8 +24,10 @@ O(Σ|positions|·log n) per doc inside ``applyInPandas``:
   (position, clause) stream — a window matches when it covers every
   clause (with multiplicity, on distinct positions) within the slop.
 
-The only shuffle is the ``groupBy(doc_id)``; per-group work is bounded by
-the doc's length, so hot terms cost Σ doc lengths, never a product.
+``span_counts`` runs that merge in the driver over one Arrow collect when
+``request_breaker`` admits the positions, else in a mapInPandas whose only
+shuffle is the ``doc_id`` repartition. Per-doc work is bounded by the
+doc's length, so hot terms cost Σ doc lengths, never a product.
 """
 
 from __future__ import annotations
@@ -151,8 +153,10 @@ def _doc_match_count(arrs: list, slop: int, in_order: bool,
 
 
 def _span_stream_fn(n_clauses: int, doc_fn, out_dtype=np.int64):
-    """mapInPandas over doc-partitioned, doc-sorted (doc_id, clause,
-    positions) rows: doc groups are numpy slices inside each Arrow batch
+    """The per-doc merge over doc-sorted (doc_id, clause, positions) pandas
+    batches — the distributed leg's mapInPandas function, and the driver
+    leg's over its one collected frame: doc groups are numpy slices inside
+    each batch
     (batch-spanning docs stitched via carry) — no per-group pandas
     overhead, same trick as the index build's block encoder.
     ``doc_fn(arrs) -> int`` scores one doc from its per-clause arrays."""
@@ -220,6 +224,22 @@ def _containing_count(arrs: list, slop: int) -> int:
     return int(np.count_nonzero(has_c & (pc <= hi) & has_b & (pb <= hi)))
 
 
+def _tagged_positions(src, mapping: list[tuple[str, int]]) -> DataFrame:
+    """(doc_id, clause, positions) rows for the (term, clause) pairs of
+    ``mapping`` from ``src``'s positions table. Each term row fans out to
+    its clauses through a literal map — a projection, where a join would
+    broadcast the pairs (one more Spark job per request)."""
+    clauses_of: dict[str, list[int]] = {}
+    for t, i in mapping:
+        clauses_of.setdefault(t, []).append(i)
+    tag = F.create_map(*[x for t, cl in clauses_of.items()
+                         for x in (F.lit(t), F.array(*map(F.lit, cl)))])
+    return (src.index.positions(src.spark)
+            .where(F.col("term").isin(list(clauses_of)))
+            .select("doc_id", F.explode(tag[F.col("term")]).alias("clause"),
+                    "positions"))
+
+
 def span_containing_docs(searcher, big: tuple[str, str], slop: int,
                          little: str) -> DataFrame:
     """Docs where an ordered 2-clause span_near match of ``big`` (within
@@ -230,15 +250,8 @@ def span_containing_docs(searcher, big: tuple[str, str], slop: int,
     the smallest valid end pb >= pc are checked — minimal witnesses are
     optimal, so existence is exact, not greedy-approximate."""
     searcher._require_positions("span_containing/span_within")
-    spark = searcher.spark
-    mapping = [(big[0], 0), (big[1], 1), (little, 2)]
-    terms = sorted({t for t, _ in mapping})
-    map_df = local_frame(spark, mapping, "term string, clause int")
-    pos = (searcher.index.positions(spark)
-           .where(F.col("term").isin(terms))
-           .join(F.broadcast(map_df), "term")
-           .select("doc_id", "clause", "positions"))
-    n_shuffle = shuffle_partitions(spark)
+    pos = _tagged_positions(searcher, [(big[0], 0), (big[1], 1), (little, 2)])
+    n_shuffle = shuffle_partitions(searcher.spark)
     return (pos.repartition(n_shuffle, "doc_id")
             .sortWithinPartitions("doc_id", "clause")
             .mapInPandas(_span_stream_fn(
@@ -247,6 +260,17 @@ def span_containing_docs(searcher, big: tuple[str, str], slop: int,
 
 def span_match_counts(searcher, clauses: list, slop: int,
                       in_order: bool, sloppy_freq: bool = False) -> DataFrame:
+    """(doc_id, n_matches) for a span_near over ``clauses`` — ``span_counts``
+    as a DataFrame (a JVM-local one from the driver leg)."""
+    counts = span_counts(searcher, clauses, slop, in_order, sloppy_freq)
+    if isinstance(counts, pd.DataFrame):
+        return local_frame(searcher.spark, counts,
+                           SPAN_SCHEMA_W if sloppy_freq else SPAN_SCHEMA)
+    return counts
+
+
+def span_counts(searcher, clauses: list, slop: int, in_order: bool,
+                sloppy_freq: bool = False) -> pd.DataFrame | DataFrame:
     """(doc_id, n_matches) for a span_near over ``clauses``; each clause is
     a term string, a list of alternative terms (an inlined span_or), or a
     SpanFieldMasking node (positions read from the sibling field's index
@@ -254,14 +278,24 @@ def span_match_counts(searcher, clauses: list, slop: int,
     construction, so the per-doc merge is field-agnostic).
 
     Plan: term-pruned positions scan per source field (ONE scan in the
-    common unmasked case) → broadcast (term → clause) tag join →
-    one doc-partitioned sorted mapInPandas. No position cartesian.
+    common unmasked case) → each row tagged with its clauses → the
+    per-doc merge (``_span_stream_fn``) over rows sorted by (doc_id,
+    clause), on one of two legs chosen by memory:
+
+    - driver: when ``request_breaker`` admits the positions the clause
+      terms hold (from their dictionary df and cf), the rows are
+      collected through Arrow in one JVM-only action, sorted and merged
+      in the driver; returns a pandas frame. No shuffle, no Python worker.
+    - distributed: a refused charge returns the DataFrame of one
+      doc-partitioned sorted mapInPandas. No position cartesian.
 
     ``sloppy_freq=True`` (ordered, no gaps/masking — the sloppy-phrase
     path) returns DOUBLE n_matches = Σ 1/(1+matchLength) over the same
     match set (Lucene PhraseScorer sloppy-freq weighting) instead of the
     plain match count.
     """
+    from opensearch_spark.common.breaker import request_breaker
+
     searcher._require_positions("span/interval queries")
     spark = searcher.spark
     # span_gap clauses (SpanGapQueryBuilder) fold into a required-offset
@@ -297,20 +331,19 @@ def span_match_counts(searcher, clauses: list, slop: int,
             for t in alts:
                 by_field.setdefault(None, []).append((t, i))
     frames = []
+    need = 0
     for fld, mapping in by_field.items():
         src = searcher if fld is None else searcher._searcher_for(fld)
         src._require_positions("field_masking_span")
-        terms = sorted({t for t, _ in mapping})
-        map_df = local_frame(spark, mapping, "term string, clause int")
-        frames.append(
-            src.index.positions(spark)
-            .where(F.col("term").isin(terms))
-            .join(F.broadcast(map_df), "term")
-            .select("doc_id", "clause", "positions"))
+        frames.append(_tagged_positions(src, mapping))
+        # per (doc, clause) row ≈ 128 bytes and 8 per position, twice:
+        # the collected rows and their sorted copy
+        stats = src.term_stats([t for t, _ in mapping])
+        need += sum(2 * (128 * stats[t][0] + 8 * stats[t][1])
+                    for t, _ in mapping if t in stats)
     pos = frames[0]
     for f in frames[1:]:
         pos = pos.unionByName(f)
-    n_shuffle = shuffle_partitions(spark)
     if sloppy_freq:
         if not in_order or has_gaps:
             raise ValueError("sloppy_freq requires in_order and no gaps")
@@ -321,6 +354,17 @@ def span_match_counts(searcher, clauses: list, slop: int,
         doc_fn, schema, dt = (
             lambda arrs: _doc_match_count(arrs, slop, in_order, gap_arg),
             SPAN_SCHEMA, np.int64)
-    return (pos.repartition(n_shuffle, "doc_id")
+    run = _span_stream_fn(len(clauses), doc_fn, dt)
+    with request_breaker.admit(need, "spans") as admitted:
+        if admitted:
+            rows = pos.toPandas()
+            order = np.lexsort((rows["clause"].to_numpy(),
+                                rows["doc_id"].to_numpy()))
+            out = list(run(iter([rows.take(order)])))
+            if out:
+                return pd.concat(out, ignore_index=True)
+            return pd.DataFrame({"doc_id": np.empty(0, np.int64),
+                                 "n_matches": np.empty(0, dt)})
+    return (pos.repartition(shuffle_partitions(spark), "doc_id")
             .sortWithinPartitions("doc_id", "clause")
-            .mapInPandas(_span_stream_fn(len(clauses), doc_fn, dt), schema))
+            .mapInPandas(run, schema))

@@ -225,6 +225,33 @@ def test_explain_boosted_sums_to_score(searcher):
         assert got[d] == pytest.approx(sc, rel=1e-12)
 
 
+_SIMILARITIES = {
+    "lm_dirichlet": lambda s, q: s.score_lm_dirichlet(q),
+    "lm_jelinek_mercer": lambda s, q: s.score_lm_jelinek_mercer(q),
+    "dfr": lambda s, q: s.score_dfr(q),
+    "ib": lambda s, q: s.score_ib(q),
+    "dfi": lambda s, q: s.score_dfi(q),
+    "scripted": lambda s, q: s.score_scripted_similarity(q, "tf * df"),
+    "explain": lambda s, q: s.explain(q),
+}
+
+
+@pytest.mark.parametrize("name", list(_SIMILARITIES))
+def test_similarities_apply_match_operator(searcher, name):
+    """Every similarity and explain keep the match rule of score():
+    ``operator: and`` with an absent term matches nothing, and
+    ``minimum_should_match: 2`` keeps only the docs holding both terms."""
+    run = _SIMILARITIES[name]
+    absent = Match(field="text", text="spark zzzabsentzzz", operator="and")
+    assert searcher.score(absent).count() == 0
+    assert run(searcher, absent).count() == 0
+    both = Match(field="text", text="spark table", minimum_should_match=2)
+    want = {r["doc_id"] for r in searcher.score(both).collect()}
+    assert len(want) == 319
+    got = {r["doc_id"] for r in run(searcher, both).select("doc_id").collect()}
+    assert got == want
+
+
 def test_search_rejects_unknown_mode(searcher):
     with pytest.raises(ValueError, match="exhaustve"):
         searcher.search(Match(field="text", text="spark"), mode="exhaustve")

@@ -402,3 +402,26 @@ def test_routed_restriction_is_broadcastable(spark, sf_dir):
     df = QUERIES["search_routed"](spark, sf_dir)
     plan = explain_str(df)
     assert "TakeOrderedAndProject" in plan
+
+
+def test_sorted_fetch_reads_docs_once(spark, sf_dir):
+    """A field-sorted body with a fetch key reads the docs table once: the
+    sort-key join carries the fetched column instead of a second fetch
+    join. The rows are the sorted page with that column looked up."""
+    from opensearch_spark.entry_queries import get_searcher
+    from opensearch_spark.search.request import execute_search_request
+
+    s = get_searcher(spark, sf_dir)
+    body = {"query": {"match": {"text": "spark merge"}}, "size": 10,
+            "sort": [{"n_chars": "desc"}]}
+    df = execute_search_request(s, {**body, "_source": ["lang"]})
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    docs_scans = [line for line in plan.splitlines()
+                  if "InMemoryRelation" in line and "content_sha256" in line]
+    assert len(docs_scans) == 1, plan
+    lang = {r.doc_id: r.lang for r in
+            s.index.docs(spark).select("doc_id", "lang").collect()}
+    page = execute_search_request(s, body).collect()
+    assert len(page) == 10
+    assert [tuple(r) for r in df.collect()] == \
+        [(r.doc_id, r.n_chars, lang[r.doc_id]) for r in page]

@@ -595,28 +595,38 @@ def _run_counted(spark, fn):
 def _python_or_shuffle(plans) -> list[str]:
     """Plan lines that start a Python worker or a shuffle."""
     return [line for plan in plans for line in plan.splitlines()
-            if any(w in line for w in ("MapInPandas", "PythonRDD",
-                                       "ExistingRDD"))
+            if any(w in line for w in ("MapInPandas", "FlatMapGroupsInPandas",
+                                       "PythonRDD", "ExistingRDD"))
             or line.lstrip(" :+-").startswith("Exchange ")]
 
 
+_SERVED = [
+    {"match": {"text": "spark merge"}},
+    {"bool": {"must": [{"match": {"text": "spark merge"}}],
+              "filter": [{"term": {"lang": "en"}}]}},
+    {"match_phrase": {"text": {"query": "spark table", "slop": 2}}},
+]
+
+
 def test_served_match_runs_no_python_worker(s, distributed_wand):
-    """A top-level match is scored in the driver: no Python-worker stage
-    and no shuffle in any executed plan, at most 3 Spark jobs, and an
-    empty score frame costs no job at all. Forcing the distributed leg
+    """A top-level match, a bool of one must match and a keyword filter,
+    and a sloppy match_phrase are scored in the driver: no Python-worker
+    stage and no shuffle in any executed plan, at most 3 Spark jobs, and
+    an empty score frame costs no job at all. Forcing the Spark leg
     brings the mapInPandas plan back, so the check sees the routing."""
-    body = {"query": {"match": {"text": "spark merge"}}, "size": 5,
-            "_source": ["lang"]}
-    execute_search_request(s, body).collect()  # warm: caches, tombstones
-    rows, jobs, plans = _run_counted(
-        s.spark, lambda: execute_search_request(s, body).collect())
-    assert len(rows) == 5 and plans
-    assert _python_or_shuffle(plans) == []
-    assert jobs <= 3
+    for query in _SERVED:
+        body = {"query": query, "size": 5, "_source": ["lang"]}
+        execute_search_request(s, body).collect()  # warm: caches, doc values
+        rows, jobs, plans = _run_counted(
+            s.spark, lambda: execute_search_request(s, body).collect())
+        assert len(rows) == 5 and plans, query
+        assert _python_or_shuffle(plans) == [], query
+        assert jobs <= 3, query
+        with distributed_wand():
+            dist, _, plans = _run_counted(
+                s.spark, lambda: execute_search_request(s, body).collect())
+        assert dist == rows, query
+        assert any("MapInPandas" in line
+                   for line in _python_or_shuffle(plans)), query
     _, jobs, _ = _run_counted(s.spark, lambda: s._empty_scores().collect())
     assert jobs == 0
-    with distributed_wand():
-        dist, _, plans = _run_counted(
-            s.spark, lambda: execute_search_request(s, body).collect())
-    assert dist == rows
-    assert any("MapInPandas" in line for line in _python_or_shuffle(plans))

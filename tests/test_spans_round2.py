@@ -86,18 +86,23 @@ def searcher(spark, sf_dir):
     return get_searcher(spark, sf_dir)
 
 
-def test_span_near_no_position_cartesian(searcher):
-    """Hot term × long doc must not blow up: the plan is one doc_id
-    repartition feeding a batched MapInPandas (doc groups stitched inside
-    batches) — no join of two exploded position streams (the round-1
-    cartesian shape), no per-group pandas overhead."""
-    df = searcher.score(Q.SpanNear(field="text",
-                                   clauses=["spark", "table", "merge"],
-                                   slop=5, in_order=True))
+def test_span_near_no_position_cartesian(searcher, distributed_wand):
+    """Hot term × long doc must not blow up: the distributed plan is one
+    doc_id repartition feeding a batched MapInPandas (doc groups stitched
+    inside batches) — no join of two exploded position streams (the
+    round-1 cartesian shape), no per-group pandas overhead. The driver
+    leg runs the same merge and returns a JVM-local relation."""
+    q = Q.SpanNear(field="text", clauses=["spark", "table", "merge"],
+                   slop=5, in_order=True)
+    with distributed_wand():
+        df = searcher.score(q)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan and "BroadcastNestedLoop" not in plan
+    driver = searcher.score(q)._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in driver and "MapInPandas" not in driver
+    assert sorted(searcher.score(q).collect()) == sorted(df.collect())
 
 
 def test_span_near_matches_python_reference(searcher, spark, sf_dir):
