@@ -19,6 +19,7 @@ from pyspark.sql import Window as W
 
 from opensearch_spark import oracle as O
 from opensearch_spark.index.build import IndexConfig, InvertedIndex, build_index
+from opensearch_spark.scoring.bm25 import bm25_sql_expr, sql_double
 from opensearch_spark.search import (
     Bool, Boosting, ConstantScore, DisMax, Fuzzy, Ids, Match, MatchAll,
     MatchBoolPrefix, MatchPhrase, MatchPhrasePrefix, MoreLikeThis, MultiMatch,
@@ -312,11 +313,9 @@ def search_phrase_shingle(spark, sf_dir):
         return s._empty_scores()
     df = stats[bigram][0]
     flat = s._flat_postings([bigram])
-    scored = flat.withColumn(
-        "score",
-        F.expr(f"ln(1.0 + ({s.N} - {df} + 0.5) / ({df} + 0.5)) "
-               f"* ({s.k1} + 1.0) * tf "
-               f"/ (tf + {s.k1} * (1.0 - {s.b} + {s.b} * dl / {s.avgdl}))"))
+    scored = flat.withColumn("score", F.expr(bm25_sql_expr(
+        "tf", "dl", f"{df}", sql_double(s.N), sql_double(s.avgdl),
+        s.k1, s.b)))
     return (scored.select("doc_id", F.round("score", 4).alias("score"))
             .orderBy(F.desc("score"), F.asc("doc_id")).limit(10))
 

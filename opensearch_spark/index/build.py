@@ -28,6 +28,7 @@ import json
 import os
 import threading
 import uuid
+import weakref
 from dataclasses import asdict, dataclass, field as dc_field
 
 import pandas as pd
@@ -692,26 +693,28 @@ class InvertedIndex:
             # COLLECT — counting first costs one tiny aggregate, and a
             # 500M-row delete set must trip here, not OOM the driver
             # materializing Row objects (round-4 review). The charge is
-            # tracked per reader and RELEASED on refresh (the next load
-            # re-charges the new, larger set) — otherwise every
-            # delete→refresh cycle leaks accounting until the breaker
+            # RELEASED on refresh (the next load re-charges the new,
+            # larger set) or when the reader is freed, whichever comes
+            # first — otherwise every delete→refresh cycle, and every
+            # per-request PIT reader, leaks accounting until the breaker
             # trips permanently with no real memory held.
             n = dels.count()
             if n:
                 fielddata_breaker.add_estimate(
                     8 * n, f"tombstones[{self.path}]")
-                self._tomb_charged = 8 * n
+                # a finalizer runs at most once, whether called or
+                # collected; it holds the amount, not the reader
+                self._tomb_release = weakref.finalize(
+                    self, fielddata_breaker.release, 8 * n)
                 arr = dels.toPandas()["doc_id"].to_numpy(dtype="int64")
                 self._tomb = _np.sort(arr)
         self._tomb_loaded = True
 
     def _release_tomb_charge(self) -> None:
-        from opensearch_spark.common.breaker import fielddata_breaker
-
-        charged = getattr(self, "_tomb_charged", 0)
-        if charged:
-            fielddata_breaker.release(charged)
-            self._tomb_charged = 0
+        release = getattr(self, "_tomb_release", None)
+        if release is not None:
+            release()
+            self._tomb_release = None
 
     def doc_values(self, spark: SparkSession) -> "DocValues | None":
         """The raw docs table's sorted ``doc_id``, its ``dl`` and its string
@@ -729,8 +732,6 @@ class InvertedIndex:
         return self._doc_values
 
     def _load_doc_values(self, spark: SparkSession) -> "DocValues | None":
-        import weakref
-
         import numpy as np
 
         from opensearch_spark.common.breaker import (
@@ -756,7 +757,7 @@ class InvertedIndex:
     def tombstones_bcast(self, spark: SparkSession):
         """Spark Broadcast handle of the sorted tombstone array, or None
         when the index has no deletes. This — not the raw array — is what
-        posting-decode/WAND closures must capture: a broadcast ships ONCE
+        a posting-decode closure must capture: a broadcast ships ONCE
         per executor (torrent blocks), while a closure-captured numpy
         array re-serializes into EVERY task. The UDFs resolve ``.value``
         executor-side."""

@@ -104,13 +104,28 @@ def bm25_score(
     )
 
 
+def sql_double(x: float) -> str:
+    """``x`` as a SQL DOUBLE that Spark and DuckDB both parse to the same
+    float64. A bare ``1.2`` is a DECIMAL in both engines, and it turns the
+    arithmetic around it into decimal arithmetic, which Spark rounds to a
+    few decimal places when the literal has many digits. The number is
+    cast from its repr string: both engines parse a string to the nearest
+    float64, while DuckDB's cast of a decimal literal misses it for about
+    one repr in ten."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
 def bm25_sql_expr(
     tf: str, dl: str, df: str, N: str, avgdl: str, k1: float = K1_DEFAULT, b: float = B_DEFAULT
 ) -> str:
     """The exact-mode formula as a SQL string — used both by the Spark plan
     (Catalyst expression, stays in codegen) and the DuckDB oracle, so the two
-    compute bit-identical float64 scores."""
+    compute bit-identical float64 scores. ``N`` and ``avgdl`` are SQL
+    expressions (columns, or numbers written by ``sql_double``); every
+    constant is a DOUBLE, so each operation runs in float64 whatever the
+    column types."""
+    half, k1, b = sql_double(0.5), sql_double(k1), sql_double(b)
     return (
-        f"ln(1.0 + ({N} - {df} + 0.5) / ({df} + 0.5)) * ({k1} + 1.0) * {tf} "
+        f"ln(1.0 + ({N} - {df} + {half}) / ({df} + {half})) * ({k1} + 1.0) * {tf} "
         f"/ ({tf} + {k1} * (1.0 - {b} + {b} * {dl} / {avgdl}))"
     )

@@ -2,7 +2,7 @@
 reference's search lifecycle (SURVEY.md §3.1):
 
 DSL → AST → (analyze query text, resolve term stats) → term-pruned posting
-scan → per-partition top-k (block-max WAND, ``wand.py``) or exhaustive
+scan → top-k in the driver (block-max WAND, ``wand.py``) or an exhaustive
 DataFrame plan → global ``ORDER BY score LIMIT k`` (TakeOrderedAndProject =
 ``SearchPhaseController`` merge) → fetch join for hit content.
 
@@ -26,30 +26,28 @@ Scoring modes:
   - boost: each built-in similarity (BM25, LM, DFR, IB, DFI) multiplies
     by ``q.boost`` exactly once (Lucene's SimilarityBase posture); a
     scripted similarity is evaluated as written, boost is the script's.
-- wand: ``wand.py``'s one block-max kernel; identical results (strict-
-  bound skips). A top-level Match takes it under ``mode="auto"``, and so
-  does the match of a Bool whose other clauses are keyword ``term`` /
-  ``terms`` filters (``_bool_wand``: the docs they exclude join the
-  tombstones).
+- wand: ``wand.py``'s one block-max kernel, run in the driver;
+  identical results (strict-bound skips). A top-level Match takes it
+  under ``mode="auto"``, and so does the match of a Bool whose other
+  clauses are keyword ``term`` / ``terms`` filters (``_bool_in_driver``:
+  the docs they exclude join the tombstones).
 
 Three request shapes run in the driver — a top-level match, that bool,
 and a sloppy ``match_phrase`` (``spans.span_counts`` then the phrase
-BM25 in numpy) — each on one of two paths chosen by memory, never by a
-flag:
-- driver: when ``common/breaker.request_breaker`` admits an estimate of
-  what the request holds (decoded postings: Σ df of the live terms × a
-  per-posting byte cost; positions: per row and per position), the
-  term-pruned rows are collected through Arrow in one JVM-only action and
-  scored in the driver; the result comes back as a JVM-local relation.
-  No shuffle, no Python worker. The charge is held while the rows are
-  scored, then released. The bool and the phrase also read the reader's
-  doc values (``InvertedIndex.doc_values``: doc lengths and keyword
-  columns), charged once per reader to ``fielddata_breaker``.
-- Spark: when either breaker refuses, the request runs its Spark plan —
-  for a match, one shuffle co-locates each bucket's blocks and the WAND
-  kernel runs per Spark task in mapInPandas; the bool and the phrase run
-  ``_bool`` and the doc-partitioned span plan.
-Either way ``search()`` rounds, re-ranks and cuts in Spark.
+BM25 in numpy) — when ``common/breaker.request_breaker`` admits an
+estimate of what the request holds (decoded postings: Σ df of the live
+terms × a per-posting byte cost; positions: per row and per position).
+The term-pruned rows are collected through Arrow in one JVM-only action
+and scored in the driver; the result comes back as a JVM-local relation.
+No shuffle, no Python worker. The charge is held while the rows are
+scored, then released. The bool and the phrase also read the reader's
+doc values (``InvertedIndex.doc_values``: doc lengths and keyword
+columns), charged once per reader to ``fielddata_breaker``. When either
+breaker refuses — memory decides, never a flag — the request runs
+``score()``'s Spark plan, the one every other request runs: the
+exhaustive plan for a match, ``_bool`` for the bool and the
+doc-partitioned span plan for the phrase. Either way ``search()``
+rounds, re-ranks and cuts in Spark.
 
 Every small per-request frame (term weights, stats, empty results) is
 built by ``common/sparkconf.local_frame`` as a JVM-local relation, so no
@@ -63,7 +61,7 @@ so rank identity is well-defined.
 from __future__ import annotations
 
 import re
-from functools import partial, reduce
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -73,7 +71,8 @@ from pyspark.sql import Window as W
 from opensearch_spark.analysis import tokenize
 from opensearch_spark.common.sparkconf import local_frame
 from opensearch_spark.index.build import InvertedIndex
-from opensearch_spark.scoring.bm25 import bm25_idf
+from opensearch_spark.scoring.bm25 import (bm25_idf, bm25_sql_expr,
+                                           sql_double)
 from opensearch_spark.search import queries as Q
 from opensearch_spark.search.fetchphase import source_filter
 
@@ -401,18 +400,24 @@ class Searcher:
             return max(n, 1)
         return max(msm, 1) if msm else 1
 
-    def _match_wand(self, q: Q.Match, k: int) -> DataFrame:
-        plan = self._wand_plan(q, k)
-        if isinstance(plan, DataFrame):
-            return plan
-        live, kernel, n_postings = plan
-        page = self._wand_in_driver(live, kernel, n_postings)
-        return page if page is not None else self._match_wand_spark(live, kernel)
+    def _wand_in_driver(self, q: Q.Match, k: int,
+                        dropped: np.ndarray | None = None) -> DataFrame | None:
+        """The match's top-k from WAND in the driver: its term-pruned
+        blocks collected through Arrow (one JVM-only action), scored by
+        ``wand.py``'s kernel and returned as a JVM-local frame — no
+        shuffle and no Python worker. An empty frame when nothing can
+        match. ``dropped`` (sorted doc ids a bool's filters exclude) joins
+        the liveDocs tombstones: dropping docs only lowers realized
+        scores, so every skip bound stays strict.
 
-    def _wand_plan(self, q: Q.Match, k: int):
-        """(live terms, kernel, Σ df) of a match's WAND run, or the frame
-        the match reduces to without one: empty when nothing can match,
-        and the exhaustive twin when no weight is positive."""
+        None — and ``search()`` runs ``score()``'s plan — when no weight
+        is positive (a boost ≤ 0 zeroes every upper bound, which the
+        kernel's presence test cannot tell from an absent term), or when
+        ``request_breaker`` refuses the decoded postings (≈ 96 bytes each
+        over decode_blocks' int64 arrays and the kernel's float64 score
+        and sort arrays): a refusal is the routing signal, never an
+        error."""
+        from opensearch_spark.common.breaker import request_breaker
         from opensearch_spark.search.wand import wand_partition_fn
 
         live, stats, n_required = self._match_terms(q)
@@ -421,31 +426,8 @@ class Searcher:
         dfs = [stats[t][0] for t in live]
         weights = _bm25_weight(self.N, np.array(dfs), self.k1, q.boost)
         if not (weights > 0).any():
-            # boost=0 zeroes every upper bound, which WAND's presence
-            # test (term_ub > 0) cannot distinguish from an absent term
-            # — it would return empty while exhaustive returns matching
-            # docs with score 0. Zero-signal bounds mean zero pruning
-            # anyway: route to the exhaustive twin (identical results).
-            return self._match_exhaustive(q)
-        kernel = partial(wand_partition_fn, list(weights), k, self.k1,
-                         self.b, self.avgdl, n_required)
-        return live, kernel, sum(dfs)
-
-    def _wand_in_driver(self, live: list[str], kernel, n_postings: int,
-                        dropped: np.ndarray | None = None) -> DataFrame | None:
-        """The term-pruned blocks collected through Arrow (one JVM-only
-        action), scored in the driver by the same kernel, returned as a
-        JVM-local top-k — no shuffle and no Python worker. ``dropped``
-        (sorted doc ids a bool's filters exclude) joins the liveDocs
-        tombstones: dropping docs only lowers realized scores, so every
-        skip bound stays strict. None when ``request_breaker`` refuses the
-        decoded postings (≈ 96 bytes each over decode_blocks' int64 arrays
-        and the kernel's float64 score and sort arrays): a refusal is the
-        routing signal, never an error, and the caller runs its Spark
-        plan."""
-        from opensearch_spark.common.breaker import request_breaker
-
-        with request_breaker.admit(96 * n_postings,
+            return None
+        with request_breaker.admit(96 * sum(dfs),
                                    f"wand[{self.index.path}]") as admitted:
             if not admitted:
                 return None
@@ -458,35 +440,32 @@ class Searcher:
             tomb = self.index.tombstones(self.spark)
             if dropped is not None and dropped.size:
                 tomb = dropped if tomb is None else np.union1d(tomb, dropped)
-            page = next(kernel(tombstones=tomb)(iter([blocks.take(order)])))
+            run = wand_partition_fn(list(weights), k, self.k1, self.b,
+                                    self.avgdl, n_required, tomb)
+            page = next(run(iter([blocks.take(order)])))
             return local_frame(self.spark, page, "doc_id long, score double")
 
-    def _bool_wand(self, q: Q.Bool, k: int) -> DataFrame:
+    def _bool_in_driver(self, q: Q.Bool, k: int) -> DataFrame | None:
         """A bool whose only scoring clause is one ``must`` match on this
         field, filtered by ``term``/``terms`` clauses on string keyword
         columns (``filter`` or ``must_not``), with no ``should`` and no
-        msm: the match's WAND in the driver, with the docs the filters
+        msm: the match's ``_wand_in_driver`` with the docs the filters
         exclude (read from the reader's doc values) added to its
-        tombstones, then ``Bool.boost`` as ``_bool`` applies it. Any other
-        bool, and a refused doc-values or postings charge, runs ``_bool``'s
-        Spark plan."""
+        tombstones, then ``Bool.boost`` as ``_bool`` applies it. None for
+        any other bool and for a refused doc-values or postings charge."""
         dropped = self._bool_dropped(q)
-        if dropped is None:
-            return self._bool(q)
-        plan = self._wand_plan(q.must[0], k)
-        if isinstance(plan, DataFrame):
-            return plan  # empty: a served match's weights are positive
-        page = self._wand_in_driver(*plan, dropped)
-        if page is None:
-            return self._bool(q)
-        return page if q.boost == 1.0 else \
-            page.withColumn("score", F.col("score") * F.lit(q.boost))
+        page = None if dropped is None else \
+            self._wand_in_driver(q.must[0], k, dropped)
+        if page is None or q.boost == 1.0:
+            return page
+        return page.withColumn("score", F.col("score") * F.lit(q.boost))
 
     def _bool_dropped(self, q: Q.Bool) -> np.ndarray | None:
-        """Sorted ids of the docs a ``_bool_wand`` bool's filters exclude,
-        or None when the bool is not of that shape or the doc values are
-        refused. Both boosts must be positive: a zero or negative one
-        would turn the kernel's top-k into the wrong end of the order."""
+        """Sorted ids of the docs a ``_bool_in_driver`` bool's filters
+        exclude, or None when the bool is not of that shape or the doc
+        values are refused. Both boosts must be positive: a zero or
+        negative one would turn the kernel's top-k into the wrong end of
+        the order."""
         must = q.must[0] if len(q.must) == 1 else None
         clauses = [*q.filter, *q.must_not]
         if not (type(must) is Q.Match and must.field == self.field
@@ -510,33 +489,14 @@ class Searcher:
             keep &= ~hits(c)
         return dv.doc_id[~keep]
 
-    def _match_wand_spark(self, live: list[str], kernel) -> DataFrame:
-        """The distributed twin: ONE shuffle co-locates each bucket's
-        blocks (all terms) in a task, which sorts them by (bucket,
-        term_idx) and runs the kernel in mapInPandas; per-partition
-        ordering prunes identically to a global order since partitions
-        run independently."""
-        term_idx = local_frame(self.spark, [(t, i) for i, t in enumerate(live)],
-                               "term string, term_idx int")
-        blocks = self._blocks_for_terms(live).join(F.broadcast(term_idx), "term")
-        ordered = (
-            blocks.repartition(self.index.n_parts,
-                               F.pmod(F.col("bucket"), F.lit(self.index.n_parts)))
-            .sortWithinPartitions("bucket", "term_idx")
-        )
-        run = kernel(tombstones=self.index.tombstones_bcast(self.spark))
-        return ordered.select("term_idx", *_WAND_BLOCK_COLS).mapInPandas(
-            run, "doc_id long, score double")
-
-    def _bm25_sql(self, boost="1.0") -> str:
+    def _bm25_sql(self, boost: str) -> str:
         """The exact BM25 formula over the (tf, dl, df) posting columns,
         shared with the DuckDB oracle via scoring.bm25.bm25_sql_expr —
         ONE authoring site so engine and oracle can never diverge.
         ``boost`` is a SQL prefix: a literal or a column name."""
-        from opensearch_spark.scoring.bm25 import bm25_sql_expr
-
         return f"{boost} * " + bm25_sql_expr(
-            "tf", "dl", "df", f"{self.N}", f"{self.avgdl}", self.k1, self.b)
+            "tf", "dl", "df", sql_double(self.N), sql_double(self.avgdl),
+            self.k1, self.b)
 
     def _empty_scores(self) -> DataFrame:
         return local_frame(self.spark, [], "doc_id long, score double")
@@ -1047,7 +1007,7 @@ class Searcher:
         cross_fields, explain and ``dfs.sharded_search(dfs=True)``."""
         return self._term_scores(
             live, [(t, stats[t][0]) for t in live], "term string, df long",
-            self._bm25_sql(f"{boost}"))
+            self._bm25_sql(sql_double(boost)))
 
     def _constant_docs(self, terms: list[str], boost: float) -> DataFrame:
         """Constant ``boost`` over the union of the ``terms``' postings —
@@ -1198,10 +1158,11 @@ class Searcher:
         the one phrase-BM25 formula of the exact, prefix and sloppy
         phrase paths."""
         dl = self.index.docs(self.spark).select("doc_id", "dl")
+        k1, b = sql_double(self.k1), sql_double(self.b)
         return ptf.join(dl, "doc_id").select("doc_id", F.expr(
-            f"{boost} * CAST({idf_sum!r} AS DOUBLE) * ({self.k1} + 1.0) * ptf "
-            f"/ (ptf + {self.k1} * (1.0 - {self.b} + {self.b} * dl / {self.avgdl}))"
-        ).alias("score"))
+            f"{sql_double(boost)} * {sql_double(idf_sum)} * ({k1} + 1.0) "
+            f"* ptf / (ptf + {k1} * (1.0 - {b} + {b} * dl "
+            f"/ {sql_double(self.avgdl)}))").alias("score"))
 
     # ---------- phrase-prefix / bool-prefix / span ----------
     def _phrase_prefix(self, q: Q.MatchPhrasePrefix) -> DataFrame:
@@ -1654,27 +1615,30 @@ class Searcher:
     def search(self, q, k: int = 10, mode: str = "auto",
                round_scores: int | None = None, margin: int = 50) -> DataFrame:
         """Top-k (doc_id, score), ties broken by ascending doc_id (Lucene
-        behavior). ``mode`` is ``auto`` (WAND for a top-level Match or
-        Bool), ``wand`` or ``exhaustive``. ``round_scores`` rounds for
-        oracle comparison; candidates are over-fetched by ``margin`` then
+        behavior). ``mode`` is ``auto`` or ``wand`` (the same: WAND in the
+        driver for the shapes it serves) or ``exhaustive`` (always
+        ``score()``'s plan). ``round_scores`` rounds for oracle
+        comparison; candidates are over-fetched by ``margin`` then
         re-ranked on the rounded score so rounding cannot flip the cut (see
         bench/oracle notes).
 
         Three request shapes are scored in the driver, with no shuffle and
-        no Python worker: a top-level match (``_match_wand``), a bool of
-        one must match and keyword ``term``/``terms`` filters
-        (``_bool_wand``), and a sloppy ``match_phrase`` (``_phrase_sloppy``
-        over ``spans.span_counts``). One rule routes all three: when
-        ``request_breaker`` refuses the postings or positions the request
-        would hold, or ``fielddata_breaker`` the doc values it reads, the
-        request runs its Spark plan instead."""
+        no Python worker: a top-level match (``_wand_in_driver``), a bool
+        of one must match and keyword ``term``/``terms`` filters
+        (``_bool_in_driver``), and a sloppy ``match_phrase``
+        (``_phrase_sloppy`` over ``spans.span_counts``, inside
+        ``score()``). One rule routes all three: when ``request_breaker``
+        refuses the postings or positions the request would hold, or
+        ``fielddata_breaker`` the doc values it reads, the request runs
+        the same Spark plan as every other request — for a match or a
+        bool, ``score(q)``, the plan ``mode="exhaustive"`` runs."""
         if mode not in ("auto", "wand", "exhaustive"):
             raise ValueError(
                 f"unknown search mode {mode!r}; "
                 "expected 'auto', 'wand' or 'exhaustive'")
         # route whole-query extra-field searches (multi-field mapping) to
         # that field's index — score() dispatches per leaf (its Match and
-        # Term branches), but the WAND fast path below would otherwise read
+        # Term branches), but the driver leg below would otherwise read
         # this index's postings for a foreign field's terms
         qf = getattr(q, "field", None)
         if qf is not None and qf != self.field and qf in self.extra_fields:
@@ -1682,24 +1646,21 @@ class Searcher:
                 q, k=k, mode=mode, round_scores=round_scores, margin=margin)
         if isinstance(q, Q.Match) and q.field != self.field:
             # keyword-column match degenerates to a term query in score();
-            # unknown fields fail fast here instead of silently scoring
-            # this index's postings (wand) or raising a raw Catalyst
-            # unresolved-column error (exhaustive)
+            # unknown fields fail fast here instead of raising a raw
+            # Catalyst unresolved-column error
             known = {self.field, *self.extra_fields,
                      *self.index.meta.get("keyword_cols", [])}
             if q.field not in known:
                 raise KeyError(
                     f"no index or keyword column for field {q.field!r}")
-            use_wand = False  # WAND is postings-only; term path scores it
-        else:
-            use_wand = (mode == "wand"
-                        or (mode == "auto" and isinstance(q, (Q.Match, Q.Bool))))
         kk = k + margin if round_scores is not None else k
-        if use_wand and isinstance(q, Q.Match):
-            scores = self._match_wand(q, kk)
-        elif use_wand and isinstance(q, Q.Bool):
-            scores = self._bool_wand(q, kk)
-        else:
+        scores = None
+        if mode != "exhaustive":
+            if isinstance(q, Q.Match) and q.field == self.field:
+                scores = self._wand_in_driver(q, kk)
+            elif isinstance(q, Q.Bool):
+                scores = self._bool_in_driver(q, kk)
+        if scores is None:
             scores = self.score(q)
         top = scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(kk)
         if round_scores is not None:

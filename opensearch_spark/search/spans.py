@@ -153,13 +153,13 @@ def _doc_match_count(arrs: list, slop: int, in_order: bool,
 
 
 def _span_stream_fn(n_clauses: int, doc_fn, out_dtype=np.int64):
-    """The per-doc merge over doc-sorted (doc_id, clause, positions) pandas
-    batches — the distributed leg's mapInPandas function, and the driver
-    leg's over its one collected frame: doc groups are numpy slices inside
-    each batch
-    (batch-spanning docs stitched via carry) — no per-group pandas
-    overhead, same trick as the index build's block encoder.
-    ``doc_fn(arrs) -> int`` scores one doc from its per-clause arrays."""
+    """The per-doc merge over (doc_id, clause, positions) pandas batches
+    sorted by doc_id — the Spark leg's mapInPandas function, and the
+    driver leg's over its one collected frame. ``doc_fn(arrs) -> int``
+    scores one doc from its per-clause position arrays. Doc groups are
+    numpy slices inside a batch, and a doc cut across two batches is
+    carried into the next one, so there is no per-group pandas overhead
+    (the index build's block encoder uses the same trick)."""
 
     def process(pdf: pd.DataFrame) -> pd.DataFrame | None:
         docs = pdf["doc_id"].to_numpy()

@@ -9,24 +9,16 @@ SIMD-friendly, see the ICDE'25 columnar-inverted-index paper in PAPERS.md):
 
 - postings are chunked into doc-id-range **buckets** (build-time), so every
   doc's postings for all query terms live in the same bucket;
-- in the driver or per Spark task, one loop: Arrow batches are buffered
-  into **frames** of at most ``MAX_BUFFER_ROWS`` block rows (whole
-  buckets; a bucket split across the cut is carried into the next
-  frame). ``_score_frame`` computes
-  every bound of a frame once, then scores its buckets in descending
-  upper-bound order against the running top-k threshold θ, which carries
-  across frames:
+- the driver collects a request's term-pruned blocks and scores them as
+  one frame. ``_score_frame`` computes every bound of the frame once, then
+  scores its buckets in descending upper-bound order against the running
+  top-k threshold θ:
   - **bucket skip**: Σ_t max-impact-UB(t, bucket) < θ → skip the bucket and
-    every later one in the frame (and for AND/msm: skip buckets missing
-    required terms);
+    every later one (and for AND/msm: skip buckets missing required terms);
   - **block skip**: UB(block) + Σ_{t'≠t} UB(t', bucket) < θ → skip block;
   - surviving blocks: one batched decode (``codec.decode_blocks``) →
     per-posting scores → sort-by-doc + reduceat aggregation → merge into
     running top-k, raise θ.
-- global: the driver's top-k, or the per-task top-k frames →
-  ``ORDER BY score DESC, doc_id LIMIT k`` (Spark's TakeOrderedAndProject
-  = the reference's ``TopDocs.merge`` coordinator step,
-  ``SearchPhaseController.java:175-241``).
 
 Exactness: all skips use strict upper bounds (< θ), so results are identical
 to exhaustive scoring — verified by the oracle-comparison tests.
@@ -51,11 +43,6 @@ from opensearch_spark.index.codec import decode_blocks
 #: pruning-power cost. Bounds stay strict-in-the-math, conservative in
 #: floats — exactness (WAND ≡ exhaustive) is preserved, not weakened.
 UB_SLACK = 1.0 + 1e-12
-
-#: block rows buffered per task before a frame is scored — bounds per-task
-#: memory on hot terms over a huge corpus; each row carries ≤ block_size
-#: postings of varbyte
-MAX_BUFFER_ROWS = 250_000
 
 
 class _TopK:
@@ -99,9 +86,7 @@ def _score_frame(frame: pd.DataFrame, w: np.ndarray, k1: float, b: float,
                  tombstones: np.ndarray | None) -> None:
     """Score every bucket of ``frame`` into ``topk``.
 
-    ``frame`` holds whole buckets, sorted by (bucket, term_idx) —
-    executor.py sorts the driver's block set, or pins
-    ``sortWithinPartitions`` before the mapInPandas — so
+    ``frame`` holds whole buckets, sorted by (bucket, term_idx) — so
     each (bucket, term) maximum is one ``maximum.reduceat`` and each bucket
     bound one ``add.reduceat`` over those maxima."""
     bucket = frame["bucket"].to_numpy()
@@ -162,49 +147,21 @@ def wand_partition_fn(
     n_required: int,
     tombstones=None,
 ):
-    """Build the kernel function: block rows (sorted by bucket, then
-    term_idx, within the partition) → this partition's top-k. The driver
-    calls it on its one block set; the distributed plan runs it in
-    mapInPandas.
-
-    ``tombstones`` is a sorted int64 ndarray, a Spark Broadcast wrapping
-    one (resolved executor-side, so the task closure carries only the
-    handle), or None.
-
-    One loop: Arrow batches are buffered; whenever the buffer passes
-    ``MAX_BUFFER_ROWS`` rows, its complete buckets go to ``_score_frame``
-    as one frame and the last, possibly partial, bucket is carried into the
-    next. A partition under the cap is one frame; over it, each frame is
-    scored in its own descending-bound order with θ carried across frames.
-    Results are identical either way (the skip bounds are strict); only
-    the pruning power depends on the frame size."""
+    """Build the kernel function: block rows sorted by (bucket, term_idx),
+    as an iterator of pandas batches → one frame of their top-k
+    (doc_id, score). The batches are concatenated and scored as one frame.
+    ``tombstones`` is a sorted int64 ndarray of deleted doc ids, or None."""
     w = np.asarray(weights, dtype=np.float64)
-    cap = MAX_BUFFER_ROWS
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Broadcast → resolve ONCE per task, executor-side
-        tomb = tombstones.value if hasattr(tombstones, "value") \
-            else tombstones
         topk = _TopK(k)
-        buf: list[pd.DataFrame] = []
-        total = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            buf.append(pdf)
-            total += len(pdf)
-            if total <= cap:
-                continue
-            frame = pd.concat(buf, ignore_index=True)
-            bucket = frame["bucket"].to_numpy()
-            cut = int(np.searchsorted(bucket, bucket[-1]))
-            if cut:
-                _score_frame(frame.iloc[:cut], w, k1, b, avgdl, n_required,
-                             topk, tomb)
-            buf, total = [frame.iloc[cut:]], len(frame) - cut
-        if buf:
-            frame = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            _score_frame(frame, w, k1, b, avgdl, n_required, topk, tomb)
+        frames = [pdf for pdf in batches if len(pdf)]
+        if frames:
+            # the driver sends one batch: score it without a copy
+            frame = frames[0] if len(frames) == 1 else \
+                pd.concat(frames, ignore_index=True)
+            _score_frame(frame, w, k1, b, avgdl, n_required, topk,
+                         tombstones)
         yield pd.DataFrame({"doc_id": topk.docs, "score": topk.scores})
 
     return run

@@ -157,7 +157,10 @@ def main(argv=None) -> int:
     q.add_argument("--index", required=True)
     q.add_argument("--dsl", required=True, help="JSON query DSL body")
     q.add_argument("--k", type=int, default=10)
-    q.add_argument("--mode", default="auto", choices=["auto", "wand", "exhaustive"])
+    q.add_argument("--mode", default="auto", choices=["auto", "wand", "exhaustive"],
+                   help="auto and wand are the same: WAND in the driver for "
+                        "the shapes it serves, else the exhaustive plan; "
+                        "exhaustive always runs the exhaustive plan")
     q.add_argument("--preload", action="store_true",
                    help="driver-side dictionary preload (small-vocab fast path)")
 

@@ -22,11 +22,12 @@ def sf_dir():
 
 
 @pytest.fixture(scope="session")
-def distributed_wand():
-    """``with distributed_wand(): ...`` runs its block on WAND's
-    distributed leg: the request breaker refuses every charge, which
-    routes a top-level match from the driver kernel to the Spark plan.
-    Session-scoped so property tests can use it too."""
+def spark_leg():
+    """``with spark_leg(): ...`` runs its block with every driver leg
+    refused: the request breaker refuses every charge, which routes a
+    top-level match or a served bool to ``score()``'s plan and a sloppy
+    phrase to its span Spark plan. Session-scoped so property tests can
+    use it too."""
     from contextlib import contextmanager
 
     from opensearch_spark.common.breaker import request_breaker

@@ -107,3 +107,43 @@ def test_sql_expr_matches_numpy():
     expr = bm25_sql_expr("2.0", "3.0", "3.0", "5.0", "2.8")
     got = duckdb.sql(f"select {expr} as s").fetchone()[0]
     assert got == pytest.approx(hand_score(2, 3, 3), abs=1e-12)
+
+
+def test_spark_plans_score_in_float64(spark, sf_dir):
+    """Every constant of the BM25 SQL (the shared ``bm25_sql_expr`` and the
+    phrase formula) is a DOUBLE. Spark types a bare ``57.83459999999999``
+    as DECIMAL, which would run ``b * dl / avgdl`` in decimal arithmetic
+    and round it; with DOUBLE constants the scores agree with the float64
+    formula to 1e-9 on an avgdl whose repr has many digits."""
+    from pyspark.sql import functions as F
+
+    from opensearch_spark.entry_queries import get_searcher
+    from opensearch_spark.scoring.bm25 import bm25_sql_expr, sql_double
+    from opensearch_spark.search import Searcher
+
+    avgdl = 57.83459999999999
+    tf, dl, df = (np.array(c) for c in zip(*[
+        (t, d, f) for t in (1, 3, 7) for d in (5, 37, 400)
+        for f in (1, 50, 9000)]))
+    rows = spark.createDataFrame(
+        list(zip(tf.tolist(), dl.tolist(), df.tolist())),
+        "tf long, dl long, df long")
+    want = bm25_score(tf, dl, df, 10_000, avgdl)
+    for avg in (repr(avgdl), sql_double(avgdl)):
+        expr = bm25_sql_expr("tf", "dl", "df", "10000", avg, 1.2, 0.75)
+        got = [r[0] for r in rows.select(F.expr(expr)).collect()]
+        np.testing.assert_allclose(got, want, rtol=0, atol=1e-9)
+
+    # the phrase formula, on a searcher whose avgdl has a long repr
+    s = Searcher(spark, get_searcher(spark, sf_dir).index)
+    s.avgdl = avgdl
+    ptf = spark.createDataFrame([(0, 1.0), (1, 2.5), (2, 0.2)],
+                                "doc_id long, ptf double")
+    got = sorted(tuple(r) for r in s._phrase_scores(ptf, 3.7, 1.5).collect())
+    dls = {r.doc_id: r.dl for r in s.index.docs(spark)
+           .where("doc_id < 3").select("doc_id", "dl").collect()}
+    want = [(d, 1.5 * 3.7 * 2.2 * p / (p + 1.2 * (0.25 + 0.75 * dls[d] / avgdl)))
+            for d, p in ((0, 1.0), (1, 2.5), (2, 0.2))]
+    assert [d for d, _ in got] == [d for d, _ in want]
+    np.testing.assert_allclose([v for _, v in got], [v for _, v in want],
+                               rtol=0, atol=1e-9)

@@ -1,7 +1,7 @@
 """Driver legs ≡ Spark legs. A bool of one must match and keyword
 ``term``/``terms`` clauses, a sloppy ``match_phrase`` and a ``span_near``
 are scored in the driver when the breakers admit them; with
-``request_breaker.limit = 0`` (the ``distributed_wand`` fixture) or
+``request_breaker.limit = 0`` (the ``spark_leg`` fixture) or
 ``fielddata_breaker.limit = 0`` they run their Spark plans. Both legs
 must return the same doc ids in the same order with the same rounded
 scores."""
@@ -33,15 +33,15 @@ def _uses_python(df) -> bool:
     return "MapInPandas" in df._jdf.queryExecution().executedPlan().toString()
 
 
-def _both_legs(s, q, k, distributed_wand):
+def _both_legs(s, q, k, spark_leg):
     """(driver rows, Spark rows) of ``s.search(q)``; asserts each leg ran
     where it should."""
     driver = s.search(q, k=k, round_scores=4)
     assert not _uses_python(driver)
-    with distributed_wand():
-        spark_leg = s.search(q, k=k, round_scores=4)
-        assert _uses_python(spark_leg)
-        spark_rows = _ranked(spark_leg)
+    with spark_leg():
+        refused = s.search(q, k=k, round_scores=4)
+        assert _uses_python(refused)
+        spark_rows = _ranked(refused)
     return _ranked(driver), spark_rows
 
 
@@ -68,20 +68,20 @@ _BOOLS = {
 
 
 @pytest.mark.parametrize("name", list(_BOOLS))
-def test_bool_driver_equals_spark(s, distributed_wand, name):
-    driver, spark_rows = _both_legs(s, _BOOLS[name], 10, distributed_wand)
+def test_bool_driver_equals_spark(s, spark_leg, name):
+    driver, spark_rows = _both_legs(s, _BOOLS[name], 10, spark_leg)
     assert driver == spark_rows and driver
 
 
-def test_bool_filter_keeping_no_docs(s, distributed_wand):
+def test_bool_filter_keeping_no_docs(s, spark_leg):
     q = Q.Bool(must=[_match()], filter=[Q.Term(field="lang", value="xx")])
-    driver, spark_rows = _both_legs(s, q, 10, distributed_wand)
+    driver, spark_rows = _both_legs(s, q, 10, spark_leg)
     assert driver == spark_rows == []
 
 
-def test_bool_k_above_match_count(s, distributed_wand):
+def test_bool_k_above_match_count(s, spark_leg):
     q = _BOOLS["term_filter"]
-    driver, spark_rows = _both_legs(s, q, 10_000, distributed_wand)
+    driver, spark_rows = _both_legs(s, q, 10_000, spark_leg)
     assert driver == spark_rows
     assert 0 < len(driver) < 10_000
     langs = {r.doc_id: r.lang for r in
@@ -105,24 +105,24 @@ def test_other_bool_shapes_keep_spark_plan(s):
     ("spark spark table", 2),       # a repeated term
     ("spark zzzabsentzzz", 2),      # an absent term
 ])
-def test_sloppy_phrase_driver_equals_spark(s, distributed_wand, text, slop):
+def test_sloppy_phrase_driver_equals_spark(s, spark_leg, text, slop):
     q = Q.MatchPhrase(field="text", text=text, slop=slop)
     if "zzz" in text:  # no leg runs: the phrase cannot match
         assert _ranked(s.search(q, k=10, round_scores=4)) == []
         return
-    driver, spark_rows = _both_legs(s, q, 10, distributed_wand)
+    driver, spark_rows = _both_legs(s, q, 10, spark_leg)
     assert driver == spark_rows and driver
 
 
-def test_span_near_driver_equals_spark(s, distributed_wand):
+def test_span_near_driver_equals_spark(s, spark_leg):
     clauses = ["spark", ["table", "merge"]]
     driver = span_match_counts(s, clauses, 2, False)
     assert not _uses_python(driver)
     got = sorted(driver.collect())
-    with distributed_wand():
-        spark_leg = span_match_counts(s, clauses, 2, False)
-        assert _uses_python(spark_leg)
-        want = sorted(spark_leg.collect())
+    with spark_leg():
+        refused = span_match_counts(s, clauses, 2, False)
+        assert _uses_python(refused)
+        want = sorted(refused.collect())
     assert got == want and got
 
 
@@ -168,14 +168,14 @@ def deleted(spark, sf_dir, tmp_path_factory):
     return path, victims
 
 
-def test_driver_legs_with_tombstones(spark, deleted, distributed_wand):
+def test_driver_legs_with_tombstones(spark, deleted, spark_leg):
     path, victims = deleted
     s = Searcher(spark, InvertedIndex(path))
     assert s.index.tombstones(spark) is not None
     for q in (_BOOLS["term_filter"], _BOOLS["keyword_must_not"],
               Q.MatchPhrase(field="text", text="spark table", slop=2)):
         driver = _ranked(s.search(q, k=10, round_scores=4))
-        with distributed_wand():
+        with spark_leg():
             spark_rows = _ranked(s.search(q, k=10, round_scores=4))
         assert driver == spark_rows and driver
         assert not victims & {d for d, _ in driver}

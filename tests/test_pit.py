@@ -103,3 +103,31 @@ def test_pit_invalidated_by_in_place_rebuild(spark, tmp_path):
     from opensearch_spark.index.pit import PointInTime
     with pytest.raises(RuntimeError, match="PIT invalidated"):
         PitIndex(PointInTime.from_json(pit.to_json()))
+
+
+def test_pit_requests_release_tombstone_charge(spark, sf_dir, tmp_path):
+    """Each ``pit`` body opens its own reader, which charges its liveDocs
+    to ``fielddata_breaker``. The charge goes when the reader is freed,
+    so a run of PIT requests leaves the breaker where it started."""
+    import gc
+
+    from opensearch_spark.common.breaker import fielddata_breaker
+    from opensearch_spark.search.request import execute_search_request
+
+    corpus = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(100)
+    path = str(tmp_path / "idx")
+    build_index(spark, corpus, path,
+                IndexConfig(field="text", analyzer="standard", n_parts=2,
+                            bucket_span=1 << 12))
+    delete_docs(spark, path, [1, 2, 3])
+    live = Searcher(spark, InvertedIndex(path))
+    body = {"query": {"match": {"text": "the"}}, "size": 5,
+            "pit": {"id": open_pit(path).to_json()}}
+    gc.collect()
+    base = fielddata_breaker.used
+    for _ in range(6):
+        hits = execute_search_request(live, body).collect()
+        assert hits and not {1, 2, 3} & {r.doc_id for r in hits}
+    del hits
+    gc.collect()
+    assert fielddata_breaker.used == base

@@ -425,3 +425,32 @@ def test_sorted_fetch_reads_docs_once(spark, sf_dir):
     assert len(page) == 10
     assert [tuple(r) for r in df.collect()] == \
         [(r.doc_id, r.n_chars, lang[r.doc_id]) for r in page]
+
+
+def test_refused_driver_leg_runs_exhaustive_plan(spark, sf_dir, spark_leg):
+    """A top-level match and a served bool + ``term`` whose driver leg is
+    refused run ``score()``'s plan: no repartition on ``bucket``, and the
+    optimized plan equals ``mode="exhaustive"``'s once expression ids are
+    normalised. The rows match too."""
+    import re
+
+    from opensearch_spark.entry_queries import get_searcher
+    from opensearch_spark.search import queries as Q
+
+    def plan(df) -> str:
+        return re.sub(r"#\d+", "#",
+                      df._jdf.queryExecution().optimizedPlan().toString())
+
+    s = get_searcher(spark, sf_dir)
+    match = Q.Match(field="text", text="spark merge")
+    for q in (match, Q.Bool(must=[match],
+                            filter=[Q.Term(field="lang", value="en")])):
+        with spark_leg():
+            refused = s.search(q, k=10)
+            got = plan(refused)
+        assert not [line for line in got.splitlines()
+                    if "RepartitionByExpression" in line
+                    and "bucket" in line], got
+        exhaustive = s.search(q, k=10, mode="exhaustive")
+        assert got == plan(exhaustive)
+        assert refused.collect() == exhaustive.collect()

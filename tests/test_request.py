@@ -608,11 +608,11 @@ _SERVED = [
 ]
 
 
-def test_served_match_runs_no_python_worker(s, distributed_wand):
+def test_served_match_runs_no_python_worker(s, spark_leg):
     """A top-level match, a bool of one must match and a keyword filter,
     and a sloppy match_phrase are scored in the driver: no Python-worker
     stage and no shuffle in any executed plan, at most 3 Spark jobs, and
-    an empty score frame costs no job at all. Forcing the Spark leg
+    an empty score frame costs no job at all. Refusing the driver leg
     brings the mapInPandas plan back, so the check sees the routing."""
     for query in _SERVED:
         body = {"query": query, "size": 5, "_source": ["lang"]}
@@ -622,10 +622,10 @@ def test_served_match_runs_no_python_worker(s, distributed_wand):
         assert len(rows) == 5 and plans, query
         assert _python_or_shuffle(plans) == [], query
         assert jobs <= 3, query
-        with distributed_wand():
-            dist, _, plans = _run_counted(
+        with spark_leg():
+            refused, _, plans = _run_counted(
                 s.spark, lambda: execute_search_request(s, body).collect())
-        assert dist == rows, query
+        assert refused == rows, query
         assert any("MapInPandas" in line
                    for line in _python_or_shuffle(plans)), query
     _, jobs, _ = _run_counted(s.spark, lambda: s._empty_scores().collect())

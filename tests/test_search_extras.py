@@ -117,13 +117,13 @@ def _ranked(df):
     return [(r["doc_id"], r["score"]) for r in df.collect()]
 
 
-def test_wand_equals_exhaustive_on_qs_match(searcher, distributed_wand):
+def test_wand_equals_exhaustive_on_qs_match(searcher, spark_leg):
     q = Q.Match(field="text", text="spark table merge")
     wand = _ranked(searcher.search(q, k=10, mode="wand", round_scores=4))
-    with distributed_wand():
-        dist = _ranked(searcher.search(q, k=10, mode="wand", round_scores=4))
+    with spark_leg():
+        refused = _ranked(searcher.search(q, k=10, mode="wand", round_scores=4))
     exh = _ranked(searcher.search(q, k=10, mode="exhaustive", round_scores=4))
-    assert wand == dist == exh
+    assert wand == refused == exh
 
 
 def test_span_near_subset_of_phrase(searcher, spark, sf_dir):
@@ -383,17 +383,17 @@ def test_msearch_extra_field_routes_correctly(searcher):
            [(r["doc_id"], r["score"]) for r in solo]
 
 
-def test_wand_extra_field_routes_correctly(searcher, distributed_wand):
+def test_wand_extra_field_routes_correctly(searcher, spark_leg):
     """Regression: search() with mode='wand' on an extra analyzed field
     must dispatch to that field's index — the WAND fast path used to read
     the MAIN index's postings for title terms (only score()/exhaustive
     dispatched), silently returning text-field scores."""
     q = Q.Match(field="title", text="merge window")
     wd = searcher.search(q, k=10, mode="wand", round_scores=4).collect()
-    with distributed_wand():
-        dist = _ranked(searcher.search(q, k=10, mode="wand", round_scores=4))
+    with spark_leg():
+        refused = _ranked(searcher.search(q, k=10, mode="wand", round_scores=4))
     ex = searcher.search(q, k=10, mode="exhaustive", round_scores=4).collect()
-    assert [(r["doc_id"], r["score"]) for r in wd] == dist == \
+    assert [(r["doc_id"], r["score"]) for r in wd] == refused == \
            [(r["doc_id"], r["score"]) for r in ex]
     tx = searcher.search(Q.Match(field="text", text="merge window"),
                          k=10, mode="wand", round_scores=4).collect()

@@ -27,7 +27,7 @@ def _searcher(spark, path):
     return Searcher(spark, InvertedIndex(path))
 
 
-def test_soft_deletes_exclude_everywhere(spark, del_index, distributed_wand):
+def test_soft_deletes_exclude_everywhere(spark, del_index, spark_leg):
     s = _searcher(spark, del_index)
     base = s.search(Q.Match(field="text", text="the"), k=5,
                     mode="exhaustive").collect()
@@ -44,14 +44,14 @@ def test_soft_deletes_exclude_everywhere(spark, del_index, distributed_wand):
                    mode="exhaustive")
     assert victim not in {r["doc_id"] for r in ex.collect()}
     assert ex.count() == n_before - 1
-    # WAND, driver and distributed: excluded AND still rank-identical to
-    # exhaustive
+    # WAND in the driver and the refused leg: excluded AND still
+    # rank-identical to exhaustive
     def ranked(df):
         return [(r["doc_id"], round(r["score"], 4)) for r in df.collect()]
 
     q = Q.Match(field="text", text="the")
     w = ranked(s2.search(q, k=10, mode="wand"))
-    with distributed_wand():
+    with spark_leg():
         d = ranked(s2.search(q, k=10, mode="wand"))
     e = ranked(s2.search(q, k=10, mode="exhaustive"))
     assert w == d == e

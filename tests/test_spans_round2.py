@@ -86,7 +86,7 @@ def searcher(spark, sf_dir):
     return get_searcher(spark, sf_dir)
 
 
-def test_span_near_no_position_cartesian(searcher, distributed_wand):
+def test_span_near_no_position_cartesian(searcher, spark_leg):
     """Hot term × long doc must not blow up: the distributed plan is one
     doc_id repartition feeding a batched MapInPandas (doc groups stitched
     inside batches) — no join of two exploded position streams (the
@@ -94,7 +94,7 @@ def test_span_near_no_position_cartesian(searcher, distributed_wand):
     leg runs the same merge and returns a JVM-local relation."""
     q = Q.SpanNear(field="text", clauses=["spark", "table", "merge"],
                    slop=5, in_order=True)
-    with distributed_wand():
+    with spark_leg():
         df = searcher.score(q)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
@@ -381,27 +381,6 @@ def test_kmeanspp_deterministic(spark, sf_dir):
     b = kmeanspp_centroids(emb, n_centroids=4, n_iters=1)
     assert a == b
     assert len(a) == 4 and len({tuple(c) for c in a}) == 4
-
-
-# ---------------- WAND over the buffer cap ----------------
-def test_wand_streaming_fallback_identical(searcher, monkeypatch,
-                                          distributed_wand):
-    """With the buffer cap forced tiny, the driver's block set and every
-    distributed partition are scored as many frames (each its complete
-    buckets, θ carried across frames) — results must still equal the
-    exhaustive oracle in rank order (strict bounds prune identically)."""
-    from opensearch_spark.search import wand as wand_mod
-
-    q = Q.Match(field="text", text="spark table merge")
-    exh = searcher.search(q, k=10, mode="exhaustive", round_scores=4).collect()
-    monkeypatch.setattr(wand_mod, "MAX_BUFFER_ROWS", 2)
-    got = searcher.search(q, k=10, mode="wand", round_scores=4).collect()
-    with distributed_wand():
-        dist = searcher.search(q, k=10, mode="wand",
-                               round_scores=4).collect()
-    assert [(r["doc_id"], r["score"]) for r in got] == \
-           [(r["doc_id"], r["score"]) for r in dist] == \
-           [(r["doc_id"], r["score"]) for r in exh]
 
 
 # ---------------- segment-merge build path ----------------

@@ -63,21 +63,20 @@ def _brute_topk(score, count, k, n_required, tombstones):
     return docs[order], score[docs][order], ok
 
 
-@pytest.mark.parametrize("cap", [2, 9, wand_mod.MAX_BUFFER_ROWS])
+@pytest.mark.parametrize("batch_rows", [2, 9, 250_000])
 @pytest.mark.parametrize("seed", range(12))
-def test_wand_equals_bruteforce_topk(seed, cap, monkeypatch):
-    monkeypatch.setattr(wand_mod, "MAX_BUFFER_ROWS", cap)
+def test_wand_equals_bruteforce_topk(seed, batch_rows):
+    """The kernel concatenates its batches, so its top-k must not depend
+    on where they are cut: the frame is fed in batches of ``batch_rows``
+    rows (2 and 9 cut buckets apart; 250,000 is one batch)."""
     rng, frame, weights, avgdl, score, count = _case(seed)
     n_docs, n_terms = score.size, weights.size
     for k in (0, 1, 10):
         for n_required in range(1, n_terms + 1):
             for tombstones in (None, np.sort(rng.choice(
                     n_docs, n_docs // 4, replace=False)).astype(np.int64)):
-                cuts = np.sort(rng.choice(np.arange(1, len(frame)),
-                                          min(4, len(frame) - 1),
-                                          replace=False))
-                batches = [frame.iloc[a:z] for a, z in
-                           zip(np.append(0, cuts), np.append(cuts, len(frame)))]
+                batches = [frame.iloc[a:a + batch_rows]
+                           for a in range(0, len(frame), batch_rows)]
                 fn = wand_mod.wand_partition_fn(
                     list(weights), k, K1, B, avgdl, n_required, tombstones)
                 got = next(fn(iter(batches)))
